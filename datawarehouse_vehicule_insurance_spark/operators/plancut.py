@@ -68,7 +68,7 @@ def checkpoint_cut(df: DataFrame) -> DataFrame:
     sessions). The checkpoint claims are not the carrier either —
     every cut's LogicalRDD records UnknownPartitioning, so consumers
     never trust a cut's layout. r9 closed the remaining causal
-    question with tools/zip_upstream_probe.py: the minimal firing
+    question (NOTES "r9 zip-defect cause bounding"): the minimal firing
     composition STILL fires 3/3 when every cut is swapped for
     ``persist()``(+count) — a pure SQL-plan + cache-manager execution
     with no RDD checkpoint at all — so ``localCheckpoint`` is NOT a
@@ -148,23 +148,13 @@ def release_cuts(frames: list) -> None:
             pass
 
 
-def ensure_parallelism(df: DataFrame, keys: list | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` up to the cluster's default
     parallelism when its physical plan has fewer partitions — the
     guard per-row (shuffle-free) operators need in front of their hot
     projection: a small parquet scan can arrive as ONE partition,
     which would serialize an Arrow UDF or a heavy per-row HOF onto a
     single worker while 31 cores idle.
-
-    ``keys`` (r14): optional repartition columns. A keyed (hash)
-    repartition skips keyless round-robin's local sort-before-
-    repartition (SPARK-23207) AND — when the keys are a downstream
-    aggregation's grouping keys — satisfies that aggregate's clustering
-    requirement, so the guard's exchange REPLACES the aggregation's
-    ENSURE_REQUIREMENTS exchange instead of adding one. Pass the
-    grouping keys whenever the first heavy operator after the guard is
-    a groupBy; callers whose downstream work is per-row keep the
-    round-robin default (even spread regardless of key skew).
 
     The guard is PLAN-AWARE: it only probes partition counts when the
     physical plan is exchange-free (a scan / narrow pipeline). When
@@ -215,12 +205,6 @@ def ensure_parallelism(df: DataFrame, keys: list | None = None) -> DataFrame:
     try:
         sc = df.sparkSession.sparkContext
         if df.rdd.getNumPartitions() < sc.defaultParallelism:
-            if keys:
-                from pyspark.sql import functions as F
-
-                return df.repartition(
-                    sc.defaultParallelism, *[F.col(k) for k in keys]
-                )
             return df.repartition(sc.defaultParallelism)
     except Exception:  # noqa: BLE001 — never fail the caller's pipeline
         return df

@@ -12,10 +12,8 @@ operators:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from .plancut import checkpoint_cut, ensure_parallelism
 
 #: aggregates that can be split into (partial per salt) → (final combine)
 _COMBINERS: dict[str, tuple] = {
@@ -100,137 +98,6 @@ def write_bucketed(
     if path:
         writer = writer.option("path", path)
     writer.saveAsTable(table_name)
-
-
-def weighted_exact_percentile(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    percentiles: dict[str, float],
-    count_col: str | None = None,
-) -> DataFrame:
-    """Distributed EXACT interpolated percentiles (same definition as
-    Spark ``percentile`` / SQL ``percentile_cont``) without buffering a
-    group's raw values on one reducer.
-
-    ``F.percentile`` is an ObjectHashAggregate that holds every value of
-    a group in reducer memory — with few, huge groups (the 100-TB shape)
-    that is a single-reducer straggler or an OOM. This operator instead:
-
-    1. compresses to (group, value, weight) with a map-side-combinable
-       ``groupBy().count()`` — for quantized domains (money in cents,
-       ratings, ages) this collapses billions of rows to at most
-       |distinct values| rows per group;
-    2. cumulative-sums the weights per group ordered by value with a
-       TWO-PHASE parallel prefix sum (r15): the compression is
-       range-partitioned on (group, value) so every task cumsums a
-       contiguous value slice, and a tiny per-(partition, group)
-       offset-prefix frame lifts local sums to global ranks — no task
-       ever holds more than its slice, even for a single giant group
-       (a ``Window.partitionBy(group)`` cumsum serializes each group
-       onto ONE task: the few-huge-groups straggler at 100 TB);
-    3. picks/interpolates each percentile at rank ``p * (n - 1)`` with
-       two conditional MINs — plain partial+final aggregation.
-
-    Exact whenever the value domain is quantized (so the compression is
-    lossless); identical to ``percentile_cont``'s linear interpolation.
-    ``percentiles`` maps output column name → fraction in [0, 1].
-    ``count_col`` optionally adds the per-group non-null value count —
-    free (it is the total weight already computed), saving callers a
-    second scan of the fact table.
-
-    Plan note: the range-partitioned compression is pinned with a lazy
-    ``checkpoint_cut`` — partition ids must be frozen in the data
-    because two consumers (the offset frame and the cumsum) read them
-    and a re-executed range exchange may re-sample different bounds.
-    Like every AQE-era cut, creating it executes the upstream stages at
-    CONSTRUCTION time, and the visible plan truncates at the cut's
-    ``Scan ExistingRDD`` (the range exchange lives in the cut's own
-    subtree — tests probe it with the cut monkeypatched out).
-    """
-    # Keyed parallelism guard (r14): a single-row-group scan (or a
-    # 1-partition checkpointed frame) would run this whole compression
-    # aggregate's map side on one task. Repartitioning ON THE GROUPING
-    # KEYS replaces the aggregation's own exchange rather than adding
-    # one — zero extra shuffles, and a no-op whenever the input plan
-    # already contains an exchange (see ensure_parallelism).
-    src = ensure_parallelism(
-        df.filter(F.col(value_col).isNotNull()).select(
-            F.col(group_col), F.col(value_col).alias("__v")
-        ),
-        keys=[group_col, "__v"],
-    )
-    w = src.groupBy(F.col(group_col), F.col("__v")).agg(
-        F.count(F.lit(1)).alias("__w")
-    )
-
-    # Phase 1 — range-partition on (group, value): ascending partition
-    # ids hold ascending contiguous (group, value) ranges (AQE may
-    # coalesce ADJACENT ranges, which preserves both properties), and
-    # (group, value) is unique after the compression so no key ever
-    # straddles a boundary. The partition id is materialized INTO the
-    # rows and the frame is cut so both downstream reads see one
-    # consistent id assignment.
-    wr = checkpoint_cut(
-        w.repartitionByRange(F.col(group_col), F.col("__v")).withColumn(
-            "__pid", F.spark_partition_id()
-        )
-    )
-
-    # Phase 2a — tiny offset-prefix frame: one row per (partition,
-    # group) slice; a group spans at most |partitions| rows here, so
-    # the only remaining per-group-serial window runs on a frame whose
-    # size is bounded by the partition count, not the data.
-    offw = (
-        Window.partitionBy(group_col)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = (
-        wr.groupBy("__pid", group_col)
-        .agg(F.sum("__w").alias("__ps"))
-        .select(
-            F.col("__pid").alias("__pid2"),
-            F.col(group_col).alias("__g2"),
-            F.coalesce(
-                F.sum("__ps").over(offw), F.lit(0).cast("long")
-            ).alias("__off"),
-            F.sum("__ps").over(Window.partitionBy(group_col)).alias("__n"),
-        )
-    )
-
-    # Phase 2b — per-slice local cumsum lifted by the slice's offset.
-    # The join keys (pid, group) are exactly the local window's
-    # partition spec, so the join's exchange doubles as the window's
-    # (null-safe on the group so a NULL group keeps its rows, as the
-    # single-window form did).
-    lw = Window.partitionBy("__pid", group_col).orderBy("__v")
-    w = (
-        wr.join(
-            offs,
-            (F.col("__pid") == F.col("__pid2"))
-            & F.col(group_col).eqNullSafe(F.col("__g2")),
-        )
-        .drop("__pid2", "__g2")
-        .withColumn("__cumw", F.col("__off") + F.sum("__w").over(lw))
-    )
-
-    aggs = []
-    for name, p in percentiles.items():
-        # 0-indexed fractional rank; value at index k is the first __v
-        # whose cumulative weight exceeds k. __n is constant per group:
-        # usable row-wise inside the MINs, aggregate-wrapped outside.
-        lo_idx = F.floor(F.lit(p) * (F.col("__n") - 1))
-        lo = F.min(F.when(F.col("__cumw") > lo_idx, F.col("__v")))
-        hi = F.min(F.when(F.col("__cumw") > lo_idx + 1, F.col("__v")))
-        pos_g = F.lit(p) * (F.first("__n") - 1)
-        frac = pos_g - F.floor(pos_g)
-        aggs.append(
-            (lo + frac * (F.coalesce(hi, lo) - lo)).alias(name)
-        )
-    if count_col is not None:
-        aggs.append(F.max("__n").alias(count_col))
-    return w.groupBy(group_col).agg(*aggs)
 
 
 def explain_shuffles(df: DataFrame) -> dict[str, int]:

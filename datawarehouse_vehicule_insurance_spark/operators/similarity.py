@@ -513,8 +513,8 @@ def ivf_clustered_corpus_table(
     ``partitionBy("cell")`` — without it every writer task emits a
     file into every cell directory (tasks × cells tiny files), and
     the probe-side pruning win drowns in per-file footer/scheduling
-    overhead. Measured (tools/ivf_clustered_probe.py, 1.2M vectors,
-    64 cells, local[32]): naive layout probed at 0.78× the
+    overhead. Measured (NOTES r13 "Clustered probe measurement",
+    1.2M vectors, 64 cells, local[32]): naive layout probed at 0.78× the
     assignments path; repartitioned layout at 3.3× — matching the
     0.29 probed-byte fraction."""
     fp = ivf_fingerprint(n_cells, kmeans_iters, kmeans_sample, seed)
@@ -688,7 +688,8 @@ def ivf_topk(
     scale), so attaching vectors is a corpus-scale shuffle join per
     probe — comparisons are bounded, bytes moved are not. When probe
     I/O dominates, store the corpus clustered instead (below):
-    measured 3.3× at 1.2M vectors (tools/ivf_clustered_probe.py).
+    measured 3.3× at 1.2M vectors (NOTES r13 "Clustered probe
+    measurement").
 
     ``clustered`` (optional, requires ``centroids``, excludes
     ``assignments``): a persisted :func:`ivf_clustered_corpus_table`,
@@ -1567,7 +1568,7 @@ def ivfpq_encode_table(
     parquet page is read. The repartition matters: partitionBy from
     an unclustered frame emits tasks × cells tiny files whose
     overhead can eat the pruning win (measured on the clustered-IVF
-    twin, tools/ivf_clustered_probe.py)."""
+    twin, NOTES r13 "Clustered probe measurement")."""
     fp = ivfpq_fingerprint(
         n_cells, m, ks, train_sample, kmeans_iters, kmeans_sample, seed
     )

@@ -871,30 +871,17 @@ def _word_histogram(train: DataFrame, text_col: str, max_words: int) -> list:
     ``max_words`` most frequent words (ties: token ascending) via
     TakeOrdered — the ONLY driver collect in BPE training, bounded by
     construction, which is what makes training corpus-size-independent.
-
-    Collected with AQE scoped OFF (r15): under AQE the aggregation's
-    exchange and the TakeOrdered run as SEPARATE driver jobs, so this
-    one logical collect paid 2+ job-scheduling round trips — pure
-    fixed latency for the typical small training corpus. Non-adaptive
-    execution runs the identical plan (same exchange, same
-    TakeOrderedAndProject, same rows) as ONE job; AQE buys nothing
-    here because the collect is terminal and its single shuffle has
-    nothing to replan. The previous conf value is always restored."""
-    spark = train.sparkSession
-    q = (
+    Writes no session conf, so it is safe alongside concurrent work in
+    the same session."""
+    rows = (
         train.select(F.explode(tokens(F.col(text_col))).alias("__w"))
         .filter(F.col("__w") != "")
         .groupBy("__w")
         .agg(F.count(F.lit(1)).alias("__f"))
         .orderBy(F.col("__f").desc(), F.col("__w").asc())
         .limit(max_words)
+        .collect()
     )
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        rows = q.collect()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
     return [(r[0], r[1]) for r in rows]
 
 

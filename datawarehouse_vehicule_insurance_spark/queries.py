@@ -56,15 +56,9 @@ _PAR_KEYS: dict[str, tuple[str, ...]] = {
 #: a stale layout (an in-place rewrite of one file INSIDE a directory
 #: does not bump the directory's own mtime — accepted residual staleness
 #: for a cache whose only consumer is a repartition heuristic).
-#: ``exhausted`` False means enumeration stopped early (threshold or
-#: file cap reached), so (groups, rows) are lower bounds.
+#: ``exhausted`` False means enumeration stopped early (threshold
+#: reached), so (groups, rows) are lower bounds.
 _SCAN_LAYOUT: dict[tuple, tuple[int, int, bool]] = {}
-
-#: footer reads per directory probe are bounded: a 100 TB layout can
-#: hold millions of files, and walking every footer driver-side just to
-#: learn "plenty of row groups" would stall the driver in front of the
-#: first scan (guide §5 "the driver should do almost no data work").
-_SCAN_LAYOUT_MAX_FILES = 64
 
 
 def _scan_layout(path: str, enough_groups: int = 1 << 30) -> tuple[int, int]:
@@ -72,12 +66,10 @@ def _scan_layout(path: str, enough_groups: int = 1 << 30) -> tuple[int, int]:
     EARLY once ``enough_groups`` row groups have been seen — the only
     question the caller asks is "are there at least `cores` row
     groups?", so on a many-file production layout the walk reads a
-    handful of footers instead of all of them. Directory enumeration is
-    additionally capped at ``_SCAN_LAYOUT_MAX_FILES`` footers; a layout
-    with more parquet files than the cap is reported as splittable
-    (groups clamped to ``enough_groups``) — every parquet file carries
-    at least one row group, so a >64-file layout cannot be the
-    single-task shape this probe exists to detect."""
+    handful of footers instead of all of them: a 100 TB layout can hold
+    millions of files, and the walk stops after at most
+    ``enough_groups`` non-empty footers (guide §5 "the driver should do
+    almost no data work")."""
     import os
 
     try:
@@ -96,7 +88,6 @@ def _scan_layout(path: str, enough_groups: int = 1 << 30) -> tuple[int, int]:
         import pyarrow.parquet as pq
 
         if os.path.isdir(path):
-            n_files = 0
             for root, _, files in os.walk(path):
                 for f in sorted(files):
                     if not f.endswith(".parquet"):
@@ -104,14 +95,9 @@ def _scan_layout(path: str, enough_groups: int = 1 << 30) -> tuple[int, int]:
                     if groups >= enough_groups:
                         exhausted = False
                         break
-                    if n_files >= _SCAN_LAYOUT_MAX_FILES:
-                        groups = max(groups, enough_groups)
-                        exhausted = False
-                        break
                     md = pq.ParquetFile(os.path.join(root, f)).metadata
                     groups += md.num_row_groups
                     rows += md.num_rows
-                    n_files += 1
                 if not exhausted:
                     break
         else:
@@ -1274,31 +1260,27 @@ GROUP BY 1
 
 
 def q_percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles (median / p90) per group, computed
-    with the DISTRIBUTED exact-percentile operator
-    (``operators.scale.weighted_exact_percentile``: (group, value,
-    weight) compression, no per-group raw-value buffering) — the naive
-    ``F.percentile`` is an ObjectHashAggregate that holds every raw
-    value of a group on one reducer, the single-reducer-OOM shape with
-    few huge groups at 100 TB. Same interpolation definition as DuckDB
-    ``quantile_cont`` (equivalence to ``F.percentile`` is also asserted
-    in tests/test_scale.py)."""
-    from datawarehouse_vehicule_insurance_spark.operators.scale import (
-        weighted_exact_percentile,
-    )
+    """Exact interpolated percentiles (median / p90) per group with
+    Spark's native ``percentile`` — the same linear interpolation as
+    DuckDB ``quantile_cont``. One call takes both fractions, so each
+    group builds ONE value map, not one per fraction.
 
-    lineitem = _t(spark, sf_dir, "lineitem")
-    pct = weighted_exact_percentile(
-        lineitem,
-        "l_returnflag",
-        "l_extendedprice",
-        {"median_price": 0.5, "p90_price": 0.9},
-        count_col="n_values",
+    Memory bound: ``percentile`` is a partial+final ObjectHashAggregate
+    (``partial_percentile`` runs below the exchange) whose buffer maps
+    each distinct value to its count — one map entry per distinct value
+    per group, never one entry per raw row."""
+    pct = (
+        _t(spark, sf_dir, "lineitem")
+        .groupBy("l_returnflag")
+        .agg(
+            F.percentile("l_extendedprice", [0.5, 0.9]).alias("__p"),
+            F.count("l_extendedprice").alias("n_values"),
+        )
     )
     return pct.select(
         "l_returnflag",
-        F.round("median_price", 4).alias("median_price"),
-        F.round("p90_price", 4).alias("p90_price"),
+        F.round(F.col("__p")[0], 4).alias("median_price"),
+        F.round(F.col("__p")[1], 4).alias("p90_price"),
         "n_values",
     )
 
@@ -1926,19 +1908,17 @@ def q_sketch_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine associatively across partitions (and, for HLL, across groups
     via ``hll_union_agg``), which is how distinct-counting and
     quantiles scale to 100 TB without a global shuffle of raw keys. The
-    exact columns (countDistinct, ``weighted_exact_percentile``) exist
-    only so the oracle can check the sketches; the production path is
-    the sketch."""
-    from datawarehouse_vehicule_insurance_spark.operators.scale import (
-        weighted_exact_percentile,
-    )
-
+    exact columns (countDistinct, native ``percentile``) exist only so
+    the oracle can check the sketches; the production path is the
+    sketch. The exact ``percentile`` is itself a partial+final
+    aggregate whose buffer holds one map entry per distinct value per
+    group, not the raw values."""
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
     # localCheckpoint pins the joined projection once; the sketch
-    # aggregate and the exact-verification branches (per-segment +
-    # global percentile) all read the materialized 3-column frame
-    # instead of each re-planning the scan + broadcast join.
+    # aggregate and the quantile aggregates (per segment + global) all
+    # read the materialized 3-column frame instead of each re-planning
+    # the scan + broadcast join.
     joined = (
         orders.join(
             F.broadcast(customer.select("c_custkey", "c_mktsegment")),
@@ -1964,26 +1944,23 @@ def q_sketch_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    # The quantile sketch aggregates SEPARATELY from countDistinct: the
+    # The quantiles aggregate SEPARATELY from countDistinct: the
     # distinct rewrite (Expand) combined with an object-state aggregate
     # like percentile_approx forces a sort-based fallback (~9x slower
     # measured at sf0.1); two hash aggregates over the pinned frame +
     # a 5-row broadcast join is the fast shape.
-    p50_seg = joined.groupBy("segment").agg(
-        F.percentile_approx("o_totalprice", 0.5, 10000).alias("__p50_est")
+    p50s = (
+        F.percentile_approx("o_totalprice", 0.5, 10000).alias("__p50_est"),
+        F.percentile("o_totalprice", 0.5).alias("__p50_exact"),
     )
+    p50_seg = joined.groupBy("segment").agg(*p50s)
 
     def _within(est: F.Column, exact: F.Column, tol: float) -> F.Column:
         return (
             F.abs(est.cast("double") / exact.cast("double") - 1.0) < tol
         )
 
-    exact_seg = weighted_exact_percentile(
-        joined, "segment", "o_totalprice", {"__p50_exact": 0.5}
-    )
-    seg_rows = per_segment.join(F.broadcast(p50_seg), "segment").join(
-        F.broadcast(exact_seg), "segment"
-    ).select(
+    seg_rows = per_segment.join(F.broadcast(p50_seg), "segment").select(
         "segment",
         "exact_customers",
         _within(
@@ -1997,23 +1974,15 @@ def q_sketch_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # Global verification row: 1-row frames throughout (bounded
-    # crossJoins). The global median is NOT derivable from per-segment
-    # medians, so the exact branch makes one more pass over the pinned
-    # frame under a constant group key — verification-only cost.
+    # crossJoin). The global median is NOT derivable from per-segment
+    # medians, so it takes one more pass over the pinned frame —
+    # verification-only cost.
     all_hll = per_segment.agg(
         F.hll_sketch_estimate(F.hll_union_agg("cust_sketch")).alias("__est"),
         F.sum("exact_customers").alias("exact_customers"),
     )
-    all_p50_est = joined.agg(
-        F.percentile_approx("o_totalprice", 0.5, 10000).alias("__p50_est")
-    )
-    all_p50_exact = weighted_exact_percentile(
-        joined.withColumn("__g", F.lit("__ALL__")),
-        "__g",
-        "o_totalprice",
-        {"__p50_exact": 0.5},
-    ).drop("__g")
-    all_row = all_hll.crossJoin(all_p50_est).crossJoin(all_p50_exact).select(
+    all_p50 = joined.agg(*p50s)
+    all_row = all_hll.crossJoin(all_p50).select(
         F.lit("__ALL__").alias("segment"),
         "exact_customers",
         _within(F.col("__est"), F.col("exact_customers"), 0.05).alias(

@@ -97,11 +97,13 @@ def test_train_and_encode_matches_replay_reference(spark):
     assert got[1] == got[3]  # case/whitespace normalization
 
 
-def test_word_histogram_single_driver_job(spark):
-    """The histogram collect must cost ONE driver job (r15: AQE split
-    its exchange + TakeOrdered into separate jobs — pure scheduling
-    latency for a small training corpus), and the scoped AQE toggle
-    must restore the session conf."""
+def test_word_histogram_single_driver_job(spark, monkeypatch):
+    """The histogram collect writes NO session conf: even a scoped
+    toggle races any concurrent work in the same session. A spy on
+    ``RuntimeConfig.set`` records every write while the histogram is
+    built."""
+    from pyspark.sql.conf import RuntimeConfig
+
     from datawarehouse_vehicule_insurance_spark.operators.text_analysis import (
         _word_histogram,
     )
@@ -109,14 +111,16 @@ def test_word_histogram_single_driver_job(spark):
     df = spark.createDataFrame(
         [(1, "a b a c"), (2, "b a d")], "id long, text string"
     )
-    sc = spark.sparkContext
-    before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    sc.setJobGroup("histo_probe", "histogram job-count probe")
+    writes = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        writes.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
     hist = _word_histogram(df, "text", 10)
-    sc.setJobGroup(None, None)
-    jobs = sc.statusTracker().getJobIdsForGroup("histo_probe")
-    assert len(jobs) == 1
-    assert spark.conf.get("spark.sql.adaptive.enabled", "true") == before
+    assert writes == []
     assert hist[0] == ("a", 3)
     assert dict(hist) == {"a": 3, "b": 2, "c": 1, "d": 1}
 

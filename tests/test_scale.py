@@ -198,106 +198,23 @@ def test_whole_stage_codegen_covers_cleaning(spark, sf_dir):
     assert "Exchange" not in plan  # single narrow stage
 
 
-def test_weighted_exact_percentile_matches_native(spark, sf_dir):
-    """Distributed (group,value,weight) percentile ≡ the single-reducer
-    ``F.percentile`` — same linear interpolation, bounded reducer state."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    got = {
-        r["l_returnflag"]: (r["p50"], r["p90"])
-        for r in SC.weighted_exact_percentile(
-            li, "l_returnflag", "l_extendedprice", {"p50": 0.5, "p90": 0.9}
-        ).collect()
-    }
-    want = {
-        r["l_returnflag"]: (r["p50"], r["p90"])
-        for r in li.groupBy("l_returnflag").agg(
-            F.percentile("l_extendedprice", 0.5).alias("p50"),
-            F.percentile("l_extendedprice", 0.9).alias("p90"),
-        ).collect()
-    }
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k][0] == pytest.approx(want[k][0], abs=1e-6)
-        assert got[k][1] == pytest.approx(want[k][1], abs=1e-6)
-
-
-def test_weighted_exact_percentile_interpolates(spark):
-    """Even-count group: p50 must interpolate between the two middle
-    values (rank 0.5*(4-1)=1.5 → halfway between sorted[1] and [2])."""
-    df = spark.createDataFrame(
-        [("g", 1.0), ("g", 2.0), ("g", 4.0), ("g", 8.0)], ["k", "v"]
+def test_percentile_prices_build_launches_no_extra_jobs(spark, sf_dir):
+    """Building ``percentile_prices`` is plan construction only: it may
+    launch no more jobs than the parquet schema read of ``lineitem``
+    itself. Aggregation work belongs to the sink's action."""
+    from datawarehouse_vehicule_insurance_spark.queries import (
+        q_percentile_prices,
     )
-    out = SC.weighted_exact_percentile(df, "k", "v", {"p50": 0.5}).collect()
-    assert out[0]["p50"] == pytest.approx(3.0)
 
-
-def test_weighted_exact_percentile_two_phase_many_slices(spark):
-    """The r15 two-phase cumulative sum must be exact when a single
-    group genuinely spans many range partitions — the few-huge-groups
-    shape the rewrite exists for. One group, 5000 distinct values,
-    shuffle partitions pinned high enough that the range exchange
-    splits the group across slices; p-values chosen to land on
-    interpolated and exact ranks."""
-    df = (
-        spark.range(20_000)
-        .selectExpr("'g' AS k", "CAST(id % 5000 AS double) AS v")
+    _, read_jobs = _jobs_during(
+        spark,
+        "pct_read_probe",
+        lambda: spark.read.parquet(f"{sf_dir}/lineitem.parquet"),
     )
-    got = SC.weighted_exact_percentile(
-        df, "k", "v", {"p25": 0.25, "p50": 0.5, "p999": 0.999},
-        count_col="n",
-    ).collect()[0]
-    want = df.groupBy("k").agg(
-        F.percentile("v", 0.25).alias("p25"),
-        F.percentile("v", 0.5).alias("p50"),
-        F.percentile("v", 0.999).alias("p999"),
-    ).collect()[0]
-    assert got["n"] == 20_000
-    for c in ("p25", "p50", "p999"):
-        assert got[c] == pytest.approx(want[c], abs=1e-9)
-
-
-def test_weighted_exact_percentile_null_group_kept(spark):
-    """A NULL group key is a group like any other (the pre-r15
-    single-window form kept it; the two-phase join is null-safe on the
-    group, so it must too)."""
-    df = spark.createDataFrame(
-        [(None, 1.0), (None, 3.0), ("a", 5.0)], ["k", "v"]
+    _, build_jobs = _jobs_during(
+        spark, "pct_build_probe", lambda: q_percentile_prices(spark, sf_dir)
     )
-    rows = {
-        r["k"]: r["p50"]
-        for r in SC.weighted_exact_percentile(
-            df, "k", "v", {"p50": 0.5}
-        ).collect()
-    }
-    assert rows[None] == pytest.approx(2.0)
-    assert rows["a"] == pytest.approx(5.0)
-
-
-def test_weighted_exact_percentile_plan_range_partitioned(
-    spark, sf_dir, monkeypatch
-):
-    """Plan probes for the two-phase cumulative sum:
-
-    - the REAL plan's windows run partitioned by (slice id, group) —
-      never by the group alone, which would serialize each group onto
-      one task (the offset-prefix window over the tiny per-slice frame
-      is the sanctioned exception: its input is one row per slice);
-    - the pre-cut subtree (cut monkeypatched out, same pattern as the
-      ngram_jaccard probe) shows the range exchange on (group, value).
-    """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    out = SC.weighted_exact_percentile(
-        li, "l_returnflag", "l_extendedprice", {"p50": 0.5}
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "__pid" in plan  # local cumsum windows keyed by slice id
-
-    monkeypatch.setattr(SC, "checkpoint_cut", lambda df: df)
-    nocut = SC.weighted_exact_percentile(
-        li, "l_returnflag", "l_extendedprice", {"p50": 0.5}
-    )
-    nocut_plan = nocut._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning(l_returnflag" in nocut_plan
+    assert build_jobs <= read_jobs, (build_jobs, read_jobs)
 
 
 def test_stratified_sample_deterministic_and_proportional(spark, sf_dir):
@@ -542,9 +459,9 @@ def test_zorder_write_clusters_both_dimensions(spark, sf_dir, tmp_path):
 def test_deweaked_queries_plan_shapes(spark, sf_dir):
     """Plan-probe guards for the two round-1 scale-killers:
 
-    - percentile_prices must NOT buffer raw group values in an
-      ObjectHashAggregate (it routes through the (group,value,weight)
-      compression);
+    - percentile_prices must NOT buffer raw group values on one
+      reducer: ONE ``partial_percentile`` (a value→count map per group,
+      both fractions in one call) runs map-side, below the exchange;
     - embedding_neardup must be the distributed block-pair
       applyInPandas shape — no broadcast of the full embedding matrix,
       no driver-side materialization in the plan.
@@ -553,7 +470,10 @@ def test_deweaked_queries_plan_shapes(spark, sf_dir):
 
     pct = Q.QUERIES["percentile_prices"](spark, sf_dir)
     pct_plan = pct._jdf.queryExecution().executedPlan().toString()
-    assert "ObjectHashAggregate" not in pct_plan
+    assert pct_plan.count("partial_percentile(") == 1
+    assert pct_plan.index("partial_percentile(") > pct_plan.index(
+        "Exchange hashpartitioning"
+    )
 
     emb = Q.QUERIES["embedding_neardup"](spark, sf_dir)
     emb_plan = emb._jdf.queryExecution().executedPlan().toString()
@@ -1408,26 +1328,17 @@ def test_scan_layout_early_exit_bounds_footer_reads(tmp_path, monkeypatch):
     assert 0 < _CountingParquetFile.calls <= 31
 
 
-def test_scan_layout_file_cap_reports_splittable(tmp_path, monkeypatch):
-    """Past the file cap the layout is reported splittable without
-    reading every footer — >cap parquet files can never be the
-    single-task shape the probe exists to detect."""
-    import pyarrow.parquet as pq
-
+def test_scan_layout_counts_every_file_below_threshold(tmp_path):
+    """Every footer counts until the threshold: 74 one-row-group files
+    against a threshold of 128 are 74 row groups — fewer than a
+    128-core session's cores, so the layout must NOT be reported as
+    splittable."""
     from datawarehouse_vehicule_insurance_spark import queries as Q
 
-    cap = Q._SCAN_LAYOUT_MAX_FILES
-    d = tmp_path / "past_cap"
-    _write_tiny_parquet_files(d, cap + 10)
-
-    counter = _CountingParquetFile(pq.ParquetFile)
-    monkeypatch.setattr("pyarrow.parquet.ParquetFile", counter)
-    _CountingParquetFile.calls = 0
-
-    big = 1 << 20
-    groups, _ = Q._scan_layout(str(d), enough_groups=big)
-    assert groups >= big  # clamped: "splittable enough"
-    assert _CountingParquetFile.calls <= cap + 1
+    d = tmp_path / "many_small"
+    _write_tiny_parquet_files(d, 74)
+    groups, rows = Q._scan_layout(str(d), enough_groups=128)
+    assert (groups, rows) == (74, 222)
 
 
 def test_scan_layout_cache_invalidates_on_dir_change(tmp_path):
