@@ -126,8 +126,6 @@ def _run_curate(args: argparse.Namespace) -> int:
     )
     with curation_run(
         docs,
-        materialize_output=args.materialize_output,
-        pre_arm_reuse_off=args.pre_arm_reuse_off,
         stage_frames=frames,
         reason_frames=reasons,
         benchmark=benchmark,
@@ -585,24 +583,6 @@ def main(argv: list[str] | None = None) -> int:
         "self-healed batch reports again -- last line per batch id "
         "wins; stage boundaries are checkpointed for the duration of "
         "the run or batch)",
-    )
-    p.add_argument(
-        "--materialize-output", action="store_true",
-        help="curate: checkpoint the curated frame inside the "
-        "self-heal's protected region so the sink scans materialized "
-        "blocks (closes the residual reused-exchange surface at the "
-        "cost of storing the full output until the run exits)",
-    )
-    p.add_argument(
-        "--pre-arm-reuse-off", action="store_true", default=None,
-        dest="pre_arm_reuse_off",
-        help="curate: build straight under "
-        "spark.sql.exchange.reuse=false from the FIRST run — skips "
-        "the self-heal's doomed first attempt (~20-25%% of wall at "
-        "the 10x composition) for compositions "
-        "tools/zip_defect_probe.py knows fire the Spark 4.1 "
-        "reused-exchange defect; outputs identical. Also settable "
-        "via SPARK_GRAFT_REUSE_OFF=1",
     )
     p.add_argument("--min-tokens", type=int, default=8)
     p.add_argument("--jaccard", type=float, default=0.8)

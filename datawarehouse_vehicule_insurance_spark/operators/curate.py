@@ -22,16 +22,10 @@ Cost ordering rationale (the 100-TB argument):
 
 from __future__ import annotations
 
-import os
-import re
-import threading
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..compat import context_key, persistent_rdd_ids
-from .plancut import checkpoint_cut, mark_stage
+from .plancut import checkpoint_cut, healed_cuts, mark_stage
 
 from .dedup import (
     cross_corpus_verbatim_pairs,
@@ -559,154 +553,9 @@ def stage_counts(stage_frames: dict) -> dict:
     return {name: frame.count() for name, frame in stage_frames.items()}
 
 
-def checkpoint_baseline(spark) -> set:
-    """Snapshot of the session's persistent-RDD ids, taken BEFORE a
-    composed run — :func:`release_checkpoints` frees everything created
-    since. (``localCheckpoint`` RDDs register in this map exactly like
-    caches do.) Under Spark Connect the JVM block-manager map is
-    unreachable — the snapshot degrades to empty and the paired
-    :func:`release_checkpoints` frees nothing: checkpoint blocks live
-    until the session ends, the pre-accounting behavior (see
-    ``compat.persistent_rdd_ids``)."""
-    ids = persistent_rdd_ids(spark)
-    return ids if ids is not None else set()
-
-
-def release_checkpoints(spark, baseline: set) -> int:
-    """Free the executor storage a composed run's
-    ``localCheckpoint(eager=False)`` plan cuts left behind, AFTER the
-    caller's sink action.
-
-    Why: the stage-boundary cuts :func:`curate_corpus` and operators
-    like ``minhash_dedup`` / ``duplicate_span_trim`` take to bound the
-    Catalyst tree materialize as RDD blocks on first use and stay in
-    the block manager until the driver happens to GC the wrapping
-    DataFrames — so BACK-TO-BACK composed runs in one session
-    accumulate blocks until OOM (NOTES "kitchen-sink" gotcha; the CLI's
-    fresh-session-per-corpus shape dodges it, the library path needs an
-    explicit release). Walking the final plan can't find them all —
-    each cut truncates lineage, hiding every EARLIER cut's node — so
-    the complete mechanism is the delta against a
-    :func:`checkpoint_baseline` snapshot.
-
-    Unpersists every persistent RDD not in ``baseline`` and returns how
-    many. The run's DataFrames MUST NOT be used afterward: checkpoint
-    lineage is truncated by construction, so a later action raises
-    instead of silently recomputing. Anything the caller persisted
-    BEFORE the baseline snapshot is untouched; frames the caller
-    cached DURING the run are released with it (scope the run
-    accordingly). Prefer :func:`curation_run`, whose release is scoped
-    to the run's OWN plan cuts and cannot touch concurrent work.
-
-    Connect degradation: with no reachable block-manager map this
-    frees nothing and returns 0 — blocks live until the session ends,
-    never an error (README "Spark Connect compatibility")."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        entries = jmap.entrySet().toArray()
-    except Exception:  # noqa: BLE001 — Connect: no block-manager access
-        return 0
-    n = 0
-    for entry in entries:
-        if int(entry.getKey()) not in baseline:
-            entry.getValue().unpersist(False)
-            n += 1
-    return n
-
-
-# The Spark 4.1 reused-exchange defect's signature (see curation_run's
-# docstring; reproduce it standalone with tools/zip_defect_probe.py).
-# Matched version-tolerantly — on the message's load-bearing tokens,
-# case-insensitive, wording-flexible — rather than on one exact English
-# string, so a Spark upgrade that rewords the message (or wraps it in
-# an error class) doesn't silently turn the self-heal off. The probe is
-# the complementary guard: it tells us when an upgrade FIXES the defect
-# and the heal can be retired.
-_ZIP_MISMATCH_PATTERNS = (
-    # Spark 4.1 verbatim: "Can't zip RDDs with unequal numbers of
-    # partitions: List(32, 64)" — tolerated rewordings: Can't/Cannot/
-    # can not, RDD/RDDs, unequal/different number(s) of partitions
-    re.compile(
-        r"(?is)can\W{0,3}(?:no)?t\s+zip\s+rdds?\b"
-        r".{0,120}?(?:unequal|different)\b.{0,60}?partitions"
-    ),
-    # a future error-class wrapping of the same condition
-    re.compile(r"CANNOT_ZIP_RDDS?", re.IGNORECASE),
-)
-
-
-def _is_zip_mismatch(exc: BaseException) -> bool:
-    """True when ``exc`` (or anything in its EXPLICIT cause chain) is
-    the reused-exchange zip-mismatch defect. String-based by necessity
-    — Py4J surfaces the JVM SparkException as text (the whole Java
-    stack lands in one message, which the multiline-tolerant patterns
-    search directly) — but anchored on the failure's invariant tokens,
-    not one exact sentence.
-
-    Only ``__cause__`` (``raise ... from``) is walked, never the
-    implicit ``__context__`` (r9 ADVICE): an unrelated exception
-    raised WHILE a zip mismatch is being handled (say, inside
-    release_cuts or user cleanup) carries the zip error as its
-    ``__context__``, and classifying IT as the defect would both retry
-    a run that failed for a different reason and — worse — let
-    ``_mark_defect_seen`` permanently pin the whole SparkContext to
-    the reuse-off path."""
-    seen: set[int] = set()
-    e: BaseException | None = exc
-    while e is not None and id(e) not in seen:
-        seen.add(id(e))
-        msg = str(e)
-        if any(p.search(msg) for p in _ZIP_MISMATCH_PATTERNS):
-            return True
-        e = e.__cause__
-    return False
-
-# guards _REUSE_HELD only — never held across user work, so a nested
-# heal on the same thread (a curation_run opened inside another healed
-# run's block) re-enters instead of deadlocking, and heals on
-# INDEPENDENT session clones (the two foreachBatch loops) proceed
-# concurrently. Entries keep a reference to their session wrapper so
-# id() keys cannot be recycled while an entry is live.
-_REUSE_LOCK = threading.Lock()
-_REUSE_HELD: dict[int, list] = {}  # id(sess) -> [depth, prev, sess]
-
-
-@contextmanager
-def _exchange_reuse_disabled(sess):
-    """Temporarily set ``spark.sql.exchange.reuse=false`` on ``sess``,
-    restoring (or unsetting) the previous value once the LAST nested
-    holder on that session exits. SESSION-WIDE while held — any
-    concurrent query on the same session plans without exchange reuse
-    for the duration (documented cost of the self-heal; the streaming
-    loop passes its per-batch session clone, which scopes the effect to
-    that batch). Refcounted per session: nested heals share one
-    save/restore (the saved "previous" value is the true pre-heal one,
-    not the inner heal's "false"), and the lock protects only the
-    bookkeeping, never the healed region itself."""
-    with _REUSE_LOCK:
-        ent = _REUSE_HELD.get(id(sess))
-        if ent is None:
-            prev = sess.conf.get("spark.sql.exchange.reuse", None)
-            sess.conf.set("spark.sql.exchange.reuse", "false")
-            ent = _REUSE_HELD[id(sess)] = [0, prev, sess]
-        ent[0] += 1
-    try:
-        yield
-    finally:
-        with _REUSE_LOCK:
-            ent[0] -= 1
-            if ent[0] == 0:
-                del _REUSE_HELD[id(sess)]
-                prev = ent[1]
-                if prev is not None:
-                    sess.conf.set("spark.sql.exchange.reuse", prev)
-                else:
-                    sess.conf.unset("spark.sql.exchange.reuse")
-
-
 def _materialize_cuts(cuts: list) -> None:
     """Materialize a run's (lazy) plan cuts — work the sink would have
-    paid anyway, moved inside :func:`curation_run`'s protected region.
+    paid anyway, moved inside :func:`curation_run`'s healed build.
     REVERSED registration order on purpose: counting the most-
     downstream cut first computes (and caches) every upstream cut in
     its lineage as ONE fused job graph — per-cut counts in dependency
@@ -722,49 +571,7 @@ def _materialize_cuts(cuts: list) -> None:
         c.count()
 
 
-# Pre-arm knob (r9 verdict #4): compositions the committed probe
-# (tools/zip_defect_probe.py) KNOWS fire the planner defect can skip
-# the doomed first attempt on a FRESH application too — the sticky
-# heal only helps from the second run on the same SparkContext, so a
-# fresh app still paid the ~20-25s abandoned attempt. Set the env var
-# (any of 1/true/yes, case-insensitive) or pass
-# ``pre_arm_reuse_off=True`` to build straight under the working
-# reuse-off configuration from the first run. The probe retirement
-# rule is unchanged — the probe itself never pre-arms.
-PRE_ARM_ENV = "SPARK_GRAFT_REUSE_OFF"
-
-
-def _pre_armed(explicit) -> bool:
-    if explicit is not None:
-        return bool(explicit)
-    return os.environ.get(PRE_ARM_ENV, "").strip().lower() in (
-        "1", "true", "yes",
-    )
-
-
-# Sticky defect memory: the SparkContext's applicationId (a unique
-# string per context — unlike id(), it can't be recycled and needs no
-# object pin, so a stopped context stays collectable). One JVM context
-# per process, shared by every session clone — foreachBatch clones a
-# NEW session per batch, so keying on the SESSION would forget the
-# defect every batch and re-pay the doomed first attempt each time.
-# ``compat.context_key`` keeps the keying working under Connect
-# (spark.app.id conf, then session id as last resort).
-_DEFECT_SEEN: set[str] = set()
-
-
-def _mark_defect_seen(sess) -> None:
-    _DEFECT_SEEN.add(context_key(sess))
-
-
-def _defect_seen(sess) -> bool:
-    return context_key(sess) in _DEFECT_SEEN
-
-
-@contextmanager
-def curation_run(docs: DataFrame, *, materialize_output: bool = False,
-                 heal_sticky: bool = True,
-                 pre_arm_reuse_off: bool | None = None, **kwargs):
+def curation_run(docs: DataFrame, **kwargs):
     """Context-managed :func:`curate_corpus`: yields the curated frame;
     on exit, frees every checkpoint block the run's plan cuts created,
     so repeated composed runs in ONE session hold no residual executor
@@ -774,116 +581,25 @@ def curation_run(docs: DataFrame, *, materialize_output: bool = False,
             curated.write.parquet(out_path)   # the sink action
         # blocks freed here; do not reuse `curated` past this point
 
-    The release is SCOPED to the run's own cuts (the ambient plan-cut
-    registry, :mod:`..operators.plancut`): a frame the caller caches or
-    checkpoints while the run is open is NOT touched — only the cuts
-    the curation plan itself took are freed.
+    The run is one :func:`.plancut.healed_cuts` scope: the release is
+    SCOPED to the run's own cuts (a frame the caller caches or
+    checkpoints while the run is open is NOT touched), and the Spark
+    4.1 reused-exchange zip defect self-heals there. The run's plan
+    cuts are MATERIALIZED before yielding (they all execute anyway —
+    this only moves the work before the sink), so the defect, which
+    every observed instance raises at cut materialization, surfaces
+    inside the healed build. r10: with the shuffle-free per-document
+    rewrites the DEFAULT composition no longer contains the
+    defect-triggering explode+window shape (probe: 3/3 clean with the
+    arrow default; immediate re-fire with gopher ``impl="codegen"``).
+    The final post-cut stage executing at the caller's sink is the one
+    unprotected surface; NOTES records no firing there. Direct
+    :func:`curate_corpus` callers at the firing composition/scale
+    should set ``spark.sql.exchange.reuse=false`` themselves."""
 
-    Known Spark 4.1 planner defect, handled here: at sufficient plan
-    complexity on larger data, adaptive execution can materialize a
-    reused exchange with a partition count that disagrees with a
-    sibling consumer, failing with ``Can't zip RDDs with unequal
-    numbers of partitions`` (the minimal reproduction — line dedup +
-    LM gate + Gopher over the base pipeline at 10x — lives in
-    ``tools/zip_defect_probe.py``; the full ablation matrix in NOTES;
-    AQE off or ``spark.sql.exchange.reuse=false`` both cure it). The
-    run's plan cuts are MATERIALIZED before yielding (they all
-    execute anyway — this only moves the work before the sink), so
-    the defect — every observed instance fires at cut creation/
-    materialization — surfaces inside the protected region; on that
-    specific failure the manager rebuilds ONCE under
-    :func:`_exchange_reuse_disabled`, keeping the conf off until exit
-    so the caller's sink action inside the block also runs under the
-    working configuration (session-wide while held — see the helper's
-    docstring). The rebuild must be WHOLE-chain: a surgical per-cut
-    replan cannot work — a fresh reuse-off (or AQE-off) recompile of
-    just the failing cut re-fired on every attempt, including with no
-    upstream cut in existence, so the mismatch arises inside one
-    plan's AQE stage execution itself (race-flavored: the firing site
-    moves between runs; evidence in ``plancut.checkpoint_cut``'s
-    docstring) and only the session-wide rebuild has proven reliable
-    (6/6 real heals measured r8). What IS avoidable is the
-    doomed first attempt on runs AFTER the first firing: once a heal
-    fires, the defect is remembered for the life of the SparkContext
-    (``heal_sticky=True``, the default), and subsequent runs on that
-    context go straight to the working reuse-off configuration — at
-    the 10x full composition that saves the ~24s abandoned attempt
-    per run (measured r8: fail+rebuild 111.7s vs straight reuse-off
-    87.7s, same-host back-to-back; the streaming loops would
-    otherwise pay the failed attempt on every at-scale batch that
-    fires). Because the firing is race-flavored (see the plancut
-    docstring), a later run might NOT have fired — sticky knowingly
-    trades that chance (reuse-off cost ~5-9% over the clean shape)
-    for never paying another abandoned attempt (~20-25%); pass
-    ``heal_sticky=False`` to re-probe the defect each run instead
-    (``tools/zip_defect_probe.py``'s retirement-check shape). A FRESH
-    application still pays the doomed first attempt once —
-    ``pre_arm_reuse_off=True`` (or the ``SPARK_GRAFT_REUSE_OFF`` env
-    var; CLI ``--pre-arm-reuse-off``) skips it up front for
-    compositions the committed probe knows fire, making first-run wall
-    time ≈ the sticky-rerun time with identical outputs. r10 update:
-    with the shuffle-free per-document rewrites the DEFAULT
-    composition no longer contains the defect-triggering
-    explode+window shape (probe: 3/3 clean on the same Spark with the
-    arrow default; immediate re-fire with gopher ``impl="codegen"``),
-    so default-composition callers should NOT pre-arm — exchange
-    reuse on measured ~20% faster at the 10x replica (67.6s vs ~84s)
-    and the retry heal stays armed as the safety net. Pre-arm remains
-    the right call only for compositions that force the codegen
-    fallback. The
-    final post-cut stage executing at
-    the caller's sink is the one residual unprotected surface by
-    default; ``materialize_output=True`` closes it by checkpointing
-    the curated frame itself inside the protected region, so the sink
-    only scans already-materialized blocks — at the cost of storing
-    the full output (memory-and-disk) until exit. Leave it off unless
-    the sink stage has actually exhibited the defect. Direct
-    :func:`curate_corpus` callers at that composition/scale should set
-    the conf themselves."""
-    from .plancut import checkpoint_cut, cut_registry, release_cuts
-
-    spark = docs.sparkSession
-    cuts: list = []
-
-    def _build() -> DataFrame:
-        with cut_registry(cuts):
-            out = curate_corpus(docs, **kwargs)
-            if materialize_output and kwargs.get("stage_frames") is None:
-                # the output joins the registry: materialized below
-                # with the other cuts (i.e. the WHOLE plan executes
-                # inside the protected region) and freed on exit. In
-                # funnel mode the output already IS the final boundary
-                # cut — a second cut would store a byte-identical copy
-                # of the full output for the run's lifetime
-                out = checkpoint_cut(out)
+    def _build(cuts: list) -> DataFrame:
+        out = curate_corpus(docs, **kwargs)
         _materialize_cuts(cuts)
         return out
 
-    try:
-        if _pre_armed(pre_arm_reuse_off) or (
-            heal_sticky and _defect_seen(spark)
-        ):
-            # pre-armed (caller/env knows this composition fires — r9
-            # verdict #4, saves the doomed first attempt on a FRESH
-            # application), or the defect already fired once on this
-            # SparkContext: build straight under the working
-            # configuration
-            with _exchange_reuse_disabled(spark):
-                out = _build()
-                yield out
-            return
-        try:
-            out = _build()
-        except Exception as e:
-            if not _is_zip_mismatch(e):
-                raise
-            _mark_defect_seen(spark)
-            release_cuts(cuts)
-            cuts.clear()
-            with _exchange_reuse_disabled(spark):
-                out = _build()
-                yield out
-            return
-        yield out
-    finally:
-        release_cuts(cuts)
+    return healed_cuts(docs.sparkSession, _build)

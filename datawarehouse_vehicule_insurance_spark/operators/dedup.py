@@ -624,11 +624,16 @@ def ngram_jaccard(
     whole corpus by id (AQE does convert the join to broadcast at
     runtime, but only after the corpus-side exchange already ran —
     plan-verified r15); forcing it at PLANNING time removes that
-    exchange outright. Rows-based cap because the id type varies;
-    4M 8-byte ids ≈ tens of MB framed, far under the broadcast
-    limits. Larger universes keep the shuffled join (the safe
-    default for a verify pass someone feeds a corpus-sized pair
-    list)."""
+    exchange outright. The cap counts ROWS, not bytes, because the id
+    type varies: 4M 8-byte ids ≈ tens of MB framed, far under the
+    broadcast limits, but callers with wide string ids should lower
+    ``broadcast_max_ids`` to keep the broadcast that small. Larger
+    universes keep the shuffled join (the safe default for a verify
+    pass someone feeds a corpus-sized pair list). Only the two
+    ``left_semi`` probes take the hint; the ``left_anti`` join that
+    finds ids missing from ``precomputed`` keeps the ids on its LEFT,
+    which Spark cannot build for an anti join, so a hint there would
+    be silently ignored."""
     cand_ids = checkpoint_cut(
         pairs.select(F.col("id_a").alias(id_col))
         .union(pairs.select(F.col("id_b").alias(id_col)))
@@ -636,8 +641,9 @@ def ngram_jaccard(
     )
     # the cut just materialized (bounded by the candidate universe), so
     # this count is a metadata-cheap job, not a recompute
+    probe_ids = cand_ids
     if cand_ids.count() <= broadcast_max_ids:
-        cand_ids = F.broadcast(cand_ids)
+        probe_ids = F.broadcast(cand_ids)
     if precomputed is not None:
         if SHINGLE_PARAMS_COL in precomputed.columns:
             row = precomputed.select(SHINGLE_PARAMS_COL).first()
@@ -649,7 +655,7 @@ def ngram_jaccard(
                 )
             precomputed = precomputed.drop(SHINGLE_PARAMS_COL)
         pre = precomputed.select(id_col, "sh").join(
-            cand_ids, id_col, "left_semi"
+            probe_ids, id_col, "left_semi"
         )
         missing = cand_ids.join(
             precomputed.select(id_col), id_col, "left_anti"
@@ -674,7 +680,7 @@ def ngram_jaccard(
         # candidate doc), so one materialization replaces two
         # corpus-sized shuffles.
         sh = checkpoint_cut(
-            docs.join(cand_ids, id_col, "left_semi").select(
+            docs.join(probe_ids, id_col, "left_semi").select(
                 F.col(id_col),
                 _hashed_shingles(F.col(text_col), n).alias("sh"),
             )

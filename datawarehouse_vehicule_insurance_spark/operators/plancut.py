@@ -3,17 +3,19 @@
 Operators bound their Catalyst trees with ``localCheckpoint(eager=False)``
 cuts (NOTES "composed-plan boundedness"). The blocks those cuts
 materialize normally live until the session ends — fine for one-shot
-jobs, not for a loop draining hundreds of batches. This module gives the
-loop a way to find and free EXACTLY the cuts its batch created, without
+jobs, not for a loop draining hundreds of batches. This module gives
+every run a way to find and free EXACTLY the cuts it created, without
 a session-wide persistent-RDD sweep that would also destroy blocks a
-CONCURRENT job in the same session persisted mid-batch:
+CONCURRENT job in the same session persisted mid-run:
 
 - operators route their internal cuts through :func:`checkpoint_cut`,
   which registers the frame with the ambient registry when one is
   active (and is a plain ``localCheckpoint`` otherwise);
-- the loop's per-batch wrapper installs a registry around the batch
-  body (:func:`cut_registry`) and frees the collected frames' blocks
-  afterwards (``streaming.curation._release_cut_blocks``).
+- :func:`healed_cuts` is the one scope that owns a run's cuts: it runs
+  the build under a fresh :func:`cut_registry`, self-heals the Spark 4.1
+  reused-exchange zip defect, and frees the collected frames' blocks on
+  exit (:func:`release_cuts`). ``curate.curation_run`` and both
+  streaming ingest loops use it.
 
 The registry is a ``contextvars.ContextVar`` — per-thread by
 construction, so two foreachBatch callbacks (document loop + embedding
@@ -24,9 +26,12 @@ from __future__ import annotations
 
 import contextvars
 import re
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
+
+from ..compat import context_key
 
 # Physical-plan exchange node names (see ensure_parallelism): a word
 # boundary before the optional Broadcast/Reused prefix keeps arbitrary
@@ -39,14 +44,17 @@ _CUT_REGISTRY: contextvars.ContextVar = contextvars.ContextVar(
 )
 
 
-def checkpoint_cut(df: DataFrame) -> DataFrame:
+def checkpoint_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     """``df.localCheckpoint(eager=False)`` that also registers the cut
     frame with the ambient :func:`cut_registry`, when one is active.
-    Always lazy — the frame is registered before anything executes, so
-    a later materialization failure still leaves the cut freeable
-    through the registry. Known interaction, pinned in NOTES r7: an
-    ``observe`` metric UPSTREAM of one of these cuts silently reports
-    0 (the cut's RDD materializes outside any tracked SQL execution);
+    The frame is registered before anything executes, so a failed
+    materialization still leaves the cut freeable through the registry;
+    ``eager=True`` then counts the registered cut (an eager
+    ``localCheckpoint`` would fail before the frame could be
+    registered, leaking its persistent RDD). Known interaction, pinned
+    in NOTES r7: an ``observe`` metric UPSTREAM of one of these cuts
+    silently reports 0 (the cut's RDD materializes outside any tracked
+    SQL execution);
     curate_corpus's funnel therefore counts boundary frames directly
     instead of using Observations.
 
@@ -78,12 +86,13 @@ def checkpoint_cut(df: DataFrame) -> DataFrame:
     same volume all complete clean, so the trigger needs the real
     operators' plan complexity. Only rebuilding the whole cut chain
     under SESSION-wide reuse-off has proven reliable (6/6 real heals
-    r8, plus r7's) — that lives in ``curation_run`` /
-    ``_run_batch_with_heal``."""
+    r8, plus r7's) — that lives in :func:`healed_cuts`."""
     df = df.localCheckpoint(eager=False)
     reg = _CUT_REGISTRY.get()
     if reg is not None:
         reg.append(df)
+    if eager:
+        df.count()
     return df
 
 
@@ -102,16 +111,6 @@ def mark_stage(
     frame = checkpoint_cut(frame)
     stage_frames[stage] = frame
     return frame
-
-
-def register_cut(df: DataFrame) -> DataFrame:
-    """Register an ALREADY-checkpointed frame (e.g. an eager
-    ``localCheckpoint``) with the ambient registry, when one is
-    active. Returns the frame unchanged."""
-    reg = _CUT_REGISTRY.get()
-    if reg is not None:
-        reg.append(df)
-    return df
 
 
 @contextmanager
@@ -146,6 +145,185 @@ def release_cuts(frames: list) -> None:
                     leaf.rdd().unpersist(False)
         except Exception:  # noqa: BLE001 — release must never fail a job
             pass
+
+
+# The Spark 4.1 reused-exchange defect's signature (see healed_cuts;
+# reproduce it standalone with tools/zip_defect_probe.py). Matched
+# version-tolerantly — on the message's load-bearing tokens,
+# case-insensitive, wording-flexible — rather than on one exact English
+# string, so a Spark upgrade that rewords the message (or wraps it in
+# an error class) doesn't silently turn the self-heal off. The probe is
+# the complementary guard: it tells us when an upgrade FIXES the defect
+# and the heal can be retired.
+_ZIP_MISMATCH_PATTERNS = (
+    # Spark 4.1 verbatim: "Can't zip RDDs with unequal numbers of
+    # partitions: List(32, 64)" — tolerated rewordings: Can't/Cannot/
+    # can not, RDD/RDDs, unequal/different number(s) of partitions
+    re.compile(
+        r"(?is)can\W{0,3}(?:no)?t\s+zip\s+rdds?\b"
+        r".{0,120}?(?:unequal|different)\b.{0,60}?partitions"
+    ),
+    # a future error-class wrapping of the same condition
+    re.compile(r"CANNOT_ZIP_RDDS?", re.IGNORECASE),
+)
+
+
+def _is_zip_mismatch(exc: BaseException) -> bool:
+    """True when ``exc`` (or anything in its EXPLICIT cause chain) is
+    the reused-exchange zip-mismatch defect. String-based by necessity
+    — Py4J surfaces the JVM SparkException as text (the whole Java
+    stack lands in one message, which the multiline-tolerant patterns
+    search directly) — but anchored on the failure's invariant tokens,
+    not one exact sentence.
+
+    Only ``__cause__`` (``raise ... from``) is walked, never the
+    implicit ``__context__`` (r9 ADVICE): an unrelated exception
+    raised WHILE a zip mismatch is being handled (say, inside
+    release_cuts or user cleanup) carries the zip error as its
+    ``__context__``, and classifying IT as the defect would both retry
+    a run that failed for a different reason and — worse — let
+    ``_mark_defect_seen`` permanently pin the whole SparkContext to
+    the reuse-off path."""
+    seen: set[int] = set()
+    e: BaseException | None = exc
+    while e is not None and id(e) not in seen:
+        seen.add(id(e))
+        msg = str(e)
+        if any(p.search(msg) for p in _ZIP_MISMATCH_PATTERNS):
+            return True
+        e = e.__cause__
+    return False
+
+
+# guards _REUSE_HELD only — never held across user work, so a nested
+# heal on the same thread (a healed run opened inside another healed
+# run's block) re-enters instead of deadlocking, and heals on
+# INDEPENDENT session clones (the two foreachBatch loops) proceed
+# concurrently. Entries keep a reference to their session wrapper so
+# id() keys cannot be recycled while an entry is live.
+_REUSE_LOCK = threading.Lock()
+_REUSE_HELD: dict[int, list] = {}  # id(sess) -> [depth, prev, sess]
+
+
+@contextmanager
+def _exchange_reuse_disabled(sess):
+    """Temporarily set ``spark.sql.exchange.reuse=false`` on ``sess``,
+    restoring (or unsetting) the previous value once the LAST nested
+    holder on that session exits. SESSION-WIDE while held — any
+    concurrent query on the same session plans without exchange reuse
+    for the duration (documented cost of the self-heal; the streaming
+    loops pass their per-batch session clone, which scopes the effect
+    to that batch). Refcounted per session: nested heals share one
+    save/restore (the saved "previous" value is the true pre-heal one,
+    not the inner heal's "false"), and the lock protects only the
+    bookkeeping, never the healed region itself."""
+    with _REUSE_LOCK:
+        ent = _REUSE_HELD.get(id(sess))
+        if ent is None:
+            prev = sess.conf.get("spark.sql.exchange.reuse", None)
+            sess.conf.set("spark.sql.exchange.reuse", "false")
+            ent = _REUSE_HELD[id(sess)] = [0, prev, sess]
+        ent[0] += 1
+    try:
+        yield
+    finally:
+        with _REUSE_LOCK:
+            ent[0] -= 1
+            if ent[0] == 0:
+                del _REUSE_HELD[id(sess)]
+                prev = ent[1]
+                if prev is not None:
+                    sess.conf.set("spark.sql.exchange.reuse", prev)
+                else:
+                    sess.conf.unset("spark.sql.exchange.reuse")
+
+
+# Sticky defect memory: the SparkContext's applicationId (a unique
+# string per context — unlike id(), it can't be recycled and needs no
+# object pin, so a stopped context stays collectable). One JVM context
+# per process, shared by every session clone — foreachBatch clones a
+# NEW session per batch, so keying on the SESSION would forget the
+# defect every batch and re-pay the doomed first attempt each time.
+# ``compat.context_key`` keeps the keying working under Connect
+# (spark.app.id conf, then session id as last resort).
+_DEFECT_SEEN: set[str] = set()
+
+
+def _mark_defect_seen(sess) -> None:
+    _DEFECT_SEEN.add(context_key(sess))
+
+
+def _defect_seen(sess) -> bool:
+    return context_key(sess) in _DEFECT_SEEN
+
+
+@contextmanager
+def healed_cuts(sess, build):
+    """The one plan-cut scope: run ``build(cuts)`` under a fresh
+    :func:`cut_registry` (``cuts`` is the registry list, which the build
+    may materialize), yield its result, and on exit free EXACTLY the
+    cuts it registered (:func:`release_cuts`) — never a session-wide
+    persistent-RDD delta, which would also unpersist blocks a
+    concurrent job created meanwhile. The yielded frames MUST NOT be
+    used past the block.
+
+    Self-heals the known Spark 4.1 planner defect: at sufficient plan
+    complexity on larger data, adaptive execution can materialize a
+    reused exchange with a partition count that disagrees with a
+    sibling consumer, failing with ``Can't zip RDDs with unequal
+    numbers of partitions`` (minimal reproduction in
+    ``tools/zip_defect_probe.py``; ablation matrix in NOTES; AQE off or
+    ``spark.sql.exchange.reuse=false`` both cure it). Every observed
+    instance fires while cuts materialize, so builds materialize their
+    cuts before returning. On exactly that failure the scope frees the
+    failed attempt's cuts, marks the defect on the SparkContext, and
+    re-runs the WHOLE build once under :func:`_exchange_reuse_disabled`,
+    keeping the conf off until exit so the caller's sink inside the
+    block runs under the working configuration too. A surgical per-cut
+    replan cannot work (evidence in :func:`checkpoint_cut`'s
+    docstring); the whole-chain rebuild healed 6/6 real firings (r8).
+    Any other error propagates unretried.
+
+    The memory is sticky: once marked, later scopes on the same context
+    (including per-batch session clones) build straight under reuse-off
+    and skip the doomed first attempt — ~24s per run at the 10x
+    composition (r8: fail+rebuild 111.7s vs straight reuse-off 87.7s).
+    The firing is race-flavored, so a later run might not have fired;
+    sticky trades that chance (reuse-off costs ~5-9% over the clean
+    shape) for never paying another abandoned attempt (~20-25%). A
+    fresh application still pays one abandoned attempt before the
+    memory engages.
+
+    A build with side effects must be rerun-safe: the retry re-reads
+    whatever the first attempt committed. The ingest loops satisfy
+    this with per-batch dynamic partition overwrites and read-back-
+    and-skip first-batch writes; plain appends would double on
+    retry."""
+    cuts: list = []
+
+    def attempt():
+        with cut_registry(cuts):
+            return build(cuts)
+
+    try:
+        if not _defect_seen(sess):
+            try:
+                out = attempt()
+            except Exception as e:
+                if not _is_zip_mismatch(e):
+                    raise
+                _mark_defect_seen(sess)
+                release_cuts(cuts)
+                cuts.clear()
+            else:
+                # the caller's block runs here, outside the retry: a
+                # failure in it propagates unretried
+                yield out
+                return
+        with _exchange_reuse_disabled(sess):
+            yield attempt()
+    finally:
+        release_cuts(cuts)
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:

@@ -33,13 +33,7 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.plancut import (
-    checkpoint_cut,
-    cut_registry,
-    mark_stage,
-    register_cut,
-    release_cuts,
-)
+from ..operators.plancut import checkpoint_cut, healed_cuts, mark_stage
 from ..operators.dedup import (
     band_table,
     band_table_remove,
@@ -123,63 +117,23 @@ def read_corpus(spark: SparkSession, corpus_path: str) -> DataFrame | None:
     return None if df is None else df.drop(BATCH_COL)
 
 
-# per-batch block release shared with the composed-run context manager
-_release_cut_blocks = release_cuts
-
-
-def _run_batch_with_heal(batch_df: DataFrame, batch_id: int, body) -> None:
-    """The per-batch execution contract shared by BOTH ingest loops:
-    run ``body(batch_df, batch_id)`` under a fresh plan-cut registry,
-    free exactly the cuts that batch took (scoped — never a
-    session-wide persistent-RDD delta, which would also unpersist
-    blocks a concurrent job created mid-batch), and self-heal the
-    known Spark 4.1 reused-exchange planner defect (see
-    ``operators.curate.curation_run``) by re-running the whole body
-    once under exchange-reuse-off — and STICKILY: the first heal marks
-    the defect on the shared SparkContext (the per-batch session
-    clones change identity every batch, the context doesn't), so every
-    LATER batch at the same at-risk scale runs straight under the
-    working configuration instead of paying a doomed first attempt
-    per batch (~24s each at the 10x composition, measured r8). The
-    rerun is safe after a partial first attempt
-    because the rerun re-reads whatever the first attempt committed
-    and takes the replay branches: the document loop's per-batch
-    appends are dynamic partition overwrites (the rerun rewrites its
-    own batch partition) and its artifact reads exclude the in-flight
-    batch id, while the embedding loop's first-batch centroid/codebook
-    writes are plain overwrites whose read-back branches skip
-    retraining when the tables already exist. Any NEW batch write must
-    satisfy the same rerun-safety contract (partition-overwrite OR
-    read-back-and-skip) — plain appends would double on retry. The
-    conf toggle scopes to foreachBatch's per-batch session clone."""
-    from ..operators.curate import (
-        _defect_seen,
-        _exchange_reuse_disabled,
-        _is_zip_mismatch,
-        _mark_defect_seen,
-    )
-
-    def _attempt() -> None:
-        cuts: list = []
-        try:
-            with cut_registry(cuts):
-                body(batch_df, batch_id)
-        finally:
-            _release_cut_blocks(cuts)
-
-    sess = batch_df.sparkSession
-    if _defect_seen(sess):
-        with _exchange_reuse_disabled(sess):
-            _attempt()
+def _run_batch(batch_df: DataFrame, batch_id: int, body) -> None:
+    """The per-batch contract shared by BOTH ingest loops: run
+    ``body(batch_df, batch_id)`` as one :func:`..operators.plancut.
+    healed_cuts` scope on the batch's session clone, so the batch frees
+    exactly its own cuts and self-heals the zip defect. Batch writes
+    meet the scope's rerun-safety contract: the document loop's appends
+    are dynamic partition overwrites and its artifact reads exclude the
+    in-flight batch id, while the embedding loop's first-batch
+    centroid/codebook writes are plain overwrites whose read-back
+    branches skip retraining when the tables already exist. Any NEW
+    batch write must do the same."""
+    if batch_df.isEmpty():
         return
-    try:
-        _attempt()
-    except Exception as e:
-        if not _is_zip_mismatch(e):
-            raise
-        _mark_defect_seen(sess)
-        with _exchange_reuse_disabled(sess):
-            _attempt()
+    with healed_cuts(
+        batch_df.sparkSession, lambda _cuts: body(batch_df, batch_id)
+    ):
+        pass
 
 
 def _read_artifact(
@@ -809,7 +763,7 @@ def run_incremental_curation(
         # One computation serving three writes: checkpoint the (small)
         # survivor set so corpus/index/hash appends don't re-run the
         # LSH + verify plan three times.
-        survivors = register_cut(survivors.localCheckpoint(eager=True))
+        survivors = checkpoint_cut(survivors, eager=True)
 
         def _append(df: DataFrame, path: str) -> None:
             (
@@ -898,13 +852,10 @@ def run_incremental_curation(
 
             on_batch_stats(int(batch_id), stage_counts(stage_frames))
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _run_batch_with_heal(batch_df, batch_id, _process_body)
-
     return (
-        stream.writeStream.foreachBatch(_process)
+        stream.writeStream.foreachBatch(
+            lambda df, bid: _run_batch(df, bid, _process_body)
+        )
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
@@ -1480,7 +1431,7 @@ def run_incremental_embedding_ingest(
                 centroids=cents, id_col=vec_id, vec_col=vec_col,
                 **ivf_kw,
             ), "semantic_dedup")
-        survivors = register_cut(survivors.localCheckpoint(eager=True))
+        survivors = checkpoint_cut(survivors, eager=True)
 
         def _append(df: DataFrame, path: str) -> None:
             (
@@ -1555,13 +1506,10 @@ def run_incremental_embedding_ingest(
 
             on_batch_stats(int(batch_id), stage_counts(stage_frames))
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _run_batch_with_heal(batch_df, batch_id, _process_body)
-
     return (
-        stream.writeStream.foreachBatch(_process)
+        stream.writeStream.foreachBatch(
+            lambda df, bid: _run_batch(df, bid, _process_body)
+        )
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()

@@ -20,11 +20,11 @@ def _reset_sticky_defect_memory():
     share one context, so a test that triggers a heal would silently
     switch every LATER test's composed runs to the reuse-off path.
     Reset the memory around each test to keep them order-independent."""
-    from datawarehouse_vehicule_insurance_spark.operators import curate
+    from datawarehouse_vehicule_insurance_spark.operators import plancut
 
-    curate._DEFECT_SEEN.clear()
+    plancut._DEFECT_SEEN.clear()
     yield
-    curate._DEFECT_SEEN.clear()
+    plancut._DEFECT_SEEN.clear()
 
 
 @pytest.fixture(scope="session")

@@ -121,19 +121,18 @@ def test_block_accounting_degrades(spark):
     assert isinstance(persistent_rdd_ids(spark), set)
     assert persistent_rdd_ids(_NoContextSession()) is None
 
-    from datawarehouse_vehicule_insurance_spark.operators.curate import (
-        checkpoint_baseline,
-        release_checkpoints,
+    from datawarehouse_vehicule_insurance_spark.operators.plancut import (
+        release_cuts,
     )
 
-    assert checkpoint_baseline(_NoContextSession()) == set()
-    assert release_checkpoints(_NoContextSession(), set()) == 0
     # classic path still live: a checkpoint created after the baseline
-    # is found and freed
-    base = checkpoint_baseline(spark)
+    # is found, and releasing its frame frees it
+    base = persistent_rdd_ids(spark)
     cut = spark.range(10).localCheckpoint()
     assert cut.count() == 10
-    assert release_checkpoints(spark, base) >= 1
+    assert persistent_rdd_ids(spark) - base
+    release_cuts([cut])
+    assert persistent_rdd_ids(spark) - base == set()
 
 
 def test_safe_set_log_level_degrades(spark):

@@ -2315,8 +2315,10 @@ def test_curation_run_releases_checkpoint_blocks(spark):
     curation_run context manager releases each run's blocks after the
     sink action, so the session's persistent-RDD set returns exactly
     to baseline — twice in a row."""
+    from datawarehouse_vehicule_insurance_spark.compat import (
+        persistent_rdd_ids,
+    )
     from datawarehouse_vehicule_insurance_spark.operators.curate import (
-        checkpoint_baseline,
         curation_run,
     )
 
@@ -2344,14 +2346,14 @@ def test_curation_run_releases_checkpoint_blocks(spark):
     # shrinking the baseline set — the invariant under test is "no NEW
     # blocks survive the context manager", not "the session's exact
     # RDD set is frozen"
-    base = checkpoint_baseline(spark)
+    base = persistent_rdd_ids(spark)
     for _ in range(2):
         with curation_run(docs, **kwargs) as out:
             got = {r["doc_id"]: r["text"] for r in out.collect()}  # sink
             # the run held checkpoint blocks while alive
-            assert checkpoint_baseline(spark) - base
+            assert persistent_rdd_ids(spark) - base
         # ...and released every one of them on exit
-        assert checkpoint_baseline(spark) - base == set()
+        assert persistent_rdd_ids(spark) - base == set()
     assert sorted(got) == [1, 2, 4, 5]
     assert passage in got[4] and passage not in got[5]
     assert all(boiler not in t for t in got.values())
@@ -2413,10 +2415,10 @@ def test_curation_run_sticky_heal(spark, monkeypatch):
     straight reuse-off 87.7s at the 10x composition; firing is
     race-flavored, so sticky trades a possible small reuse-off
     overhead on runs that might not have fired for never paying
-    another abandoned attempt). heal_sticky=False opts a run out
-    (the retirement-probe shape), and the memory is keyed on the
-    CONTEXT so a per-batch session clone still remembers."""
+    another abandoned attempt). The memory is keyed on the CONTEXT so
+    a per-batch session clone still remembers."""
     from datawarehouse_vehicule_insurance_spark.operators import curate as C
+    from datawarehouse_vehicule_insurance_spark.operators import plancut
 
     docs = _docs(spark, [(1, _fresh("a"))])
     kw = dict(min_tokens=1, min_alpha_ratio=0.0, max_dup_2gram_ratio=1.0)
@@ -2449,136 +2451,10 @@ def test_curation_run_sticky_heal(spark, monkeypatch):
 
     # a session CLONE (the foreachBatch shape) shares the memory
     clone = spark.newSession()
-    assert C._defect_seen(clone)
-
-    # heal_sticky=False re-probes: the build runs under the normal
-    # (reuse-on) configuration again
-    with C.curation_run(docs, heal_sticky=False, **kw) as out:
-        assert out.count() == 1
-    assert confs[3] == prev
+    assert plancut._defect_seen(clone)
 
     # conf restored after everything
     assert spark.conf.get("spark.sql.exchange.reuse", None) == prev
-
-
-def test_curation_run_pre_arm_reuse_off(spark, monkeypatch):
-    """pre_arm_reuse_off=True (or SPARK_GRAFT_REUSE_OFF=1) builds
-    straight under reuse-off from the FIRST run on a fresh application
-    (r9 verdict #4 — the sticky heal only helps from the second run, so
-    a fresh app paid the doomed ~20-25s first attempt at compositions
-    the zip probe knows fire): ONE build under the working config,
-    outputs identical, conf restored, and the pre-arm is NOT defect
-    memory (the probe retirement rule is untouched)."""
-    from datawarehouse_vehicule_insurance_spark.operators import curate as C
-
-    docs = _docs(spark, [(1, _fresh("a")), (2, _fresh("b"))])
-    kw = dict(min_tokens=1, min_alpha_ratio=0.0, max_dup_2gram_ratio=1.0)
-    with C.curation_run(docs, **kw) as out:
-        expect = sorted(r.doc_id for r in out.select("doc_id").collect())
-
-    confs, calls = [], []
-    real = C.curate_corpus
-
-    def tracking(d, **kws):
-        calls.append(1)
-        confs.append(
-            d.sparkSession.conf.get("spark.sql.exchange.reuse", None)
-        )
-        return real(d, **kws)
-
-    monkeypatch.setattr(C, "curate_corpus", tracking)
-    monkeypatch.delenv(C.PRE_ARM_ENV, raising=False)
-    prev = spark.conf.get("spark.sql.exchange.reuse", None)
-    with C.curation_run(docs, pre_arm_reuse_off=True, **kw) as out:
-        got = sorted(r.doc_id for r in out.select("doc_id").collect())
-        assert spark.conf.get("spark.sql.exchange.reuse") == "false"
-    assert got == expect
-    assert calls == [1] and confs == ["false"]
-    assert spark.conf.get("spark.sql.exchange.reuse", None) == prev
-    assert not C._defect_seen(spark)  # pre-arm is not defect memory
-
-    # env-var form (the streaming loops' knob — read inside
-    # curation_run, so foreachBatch session clones inherit it)
-    monkeypatch.setenv(C.PRE_ARM_ENV, "1")
-    with C.curation_run(docs, **kw):
-        assert spark.conf.get("spark.sql.exchange.reuse") == "false"
-    assert confs[-1] == "false"
-
-    # explicit False overrides the env var (tri-state)
-    with C.curation_run(docs, pre_arm_reuse_off=False, **kw):
-        pass
-    assert confs[-1] == prev
-    assert spark.conf.get("spark.sql.exchange.reuse", None) == prev
-
-
-def test_curation_run_materialize_output(spark, monkeypatch):
-    """materialize_output=True checkpoints the curated frame inside the
-    protected region: the yielded frame's analyzed plan is a bare
-    LogicalRDD scan (the whole curation plan already executed — the
-    sink can no longer trip the reused-exchange defect), results match
-    the default mode, the heal path still covers the output stage, and
-    the output's blocks are freed on exit like every other cut."""
-    from datawarehouse_vehicule_insurance_spark.operators import curate as C
-
-    rows = [(i, _fresh(f"m{i}")) for i in range(1, 6)] + [(9, _fresh("m1"))]
-    docs = _docs(spark, rows)
-    kw = dict(min_tokens=1, min_alpha_ratio=0.0, max_dup_2gram_ratio=1.0)
-    with C.curation_run(docs, **kw) as plain:
-        expect = sorted(r.doc_id for r in plain.select("doc_id").collect())
-
-    base = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-    with C.curation_run(docs, materialize_output=True, **kw) as curated:
-        leaves = (
-            curated._jdf.queryExecution().analyzed().collectLeaves()
-        )
-        names = [
-            leaves.apply(i).getClass().getSimpleName()
-            for i in range(leaves.length())
-        ]
-        assert names == ["LogicalRDD"], names
-        got = sorted(r.doc_id for r in curated.select("doc_id").collect())
-    assert got == expect
-    after = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-    assert after - base == set()  # output blocks freed with the cuts
-
-    # composed with the funnel, the output is NOT cut twice: the
-    # yielded frame is the funnel's own final boundary cut (a bare
-    # LogicalRDD scan), results unchanged, still zero residual blocks
-    frames = {}
-    with C.curation_run(docs, materialize_output=True,
-                        stage_frames=frames, **kw) as curated:
-        leaves = curated._jdf.queryExecution().analyzed().collectLeaves()
-        assert leaves.length() == 1
-        assert leaves.apply(0).getClass().getSimpleName() == "LogicalRDD"
-        assert curated is frames[next(reversed(frames))]  # no extra cut
-        assert sorted(
-            r.doc_id for r in curated.select("doc_id").collect()
-        ) == expect
-    after2 = {
-        i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    }
-    assert after2 - base == set()
-
-    # the heal path composes: first build fails with the zip defect,
-    # the rebuild (still materialize_output) yields the same rows
-    calls = []
-    real = C.curate_corpus
-
-    def flaky(d, **kws):
-        calls.append(1)
-        if len(calls) == 1:
-            raise RuntimeError(
-                "Can't zip RDDs with unequal numbers of partitions: "
-                "List(32, 64)"
-            )
-        return real(d, **kws)
-
-    monkeypatch.setattr(C, "curate_corpus", flaky)
-    with C.curation_run(docs, materialize_output=True, **kw) as curated:
-        assert sorted(
-            r.doc_id for r in curated.select("doc_id").collect()
-        ) == expect
-    assert len(calls) == 2
 
 
 def test_zip_defect_version_pin():
@@ -2592,10 +2468,11 @@ def test_zip_defect_version_pin():
 
     exit 3 (not reproduced) THREE RUNS IN A ROW (the firing is
     race-flavored — see the probe's docstring) -> Spark fixed it:
-    RETIRE the heal (the retry paths in operators/curate.py
-    curation_run and streaming/curation.py _run_batch_with_heal,
-    their tests, and this pin); exit 0 (still reproduced) -> keep the
-    heal and extend the version tuple below."""
+    RETIRE the heal (the one retry scope, operators/plancut.py
+    healed_cuts, reduced to its cut registry and release; the trigger,
+    reuse toggle and defect memory beside it; their tests; and this
+    pin); exit 0 (still reproduced) -> keep the heal and extend the
+    version tuple below."""
     import pyspark
 
     known_defective = ("4.1.",)
@@ -2615,7 +2492,7 @@ def test_zip_mismatch_trigger_is_version_tolerant():
     exact English sentence (VERDICT r7 #1): rewordings a Spark upgrade
     could plausibly ship still match, the cause/context chain is
     walked, and unrelated partition/zip errors do NOT match."""
-    from datawarehouse_vehicule_insurance_spark.operators.curate import (
+    from datawarehouse_vehicule_insurance_spark.operators.plancut import (
         _is_zip_mismatch,
     )
 
@@ -2720,6 +2597,90 @@ def test_materialize_cuts_side_branch_last(spark):
         release_cuts(cuts)
 
 
+def test_checkpoint_cut_eager_failure_stays_freeable(spark):
+    """An eager cut registers its lazy frame BEFORE counting it, so a
+    cut whose materialization raises is still in the ambient registry
+    and the run's release frees its persistent RDD (an eager
+    ``localCheckpoint`` raises before anything can register it, and
+    its RDD leaks until the session ends)."""
+    from datawarehouse_vehicule_insurance_spark.compat import (
+        persistent_rdd_ids,
+    )
+    from datawarehouse_vehicule_insurance_spark.operators.plancut import (
+        checkpoint_cut,
+        cut_registry,
+        release_cuts,
+    )
+
+    bad = spark.range(8).withColumn(
+        "boom",
+        F.when(F.col("id") == 5, F.raise_error(F.lit("planted failure")))
+        .otherwise(F.lit(1)),
+    )
+    base = persistent_rdd_ids(spark)
+    cuts: list = []
+    with cut_registry(cuts):
+        with pytest.raises(Exception, match="planted failure"):
+            checkpoint_cut(bad, eager=True)
+    assert len(cuts) == 1
+    assert persistent_rdd_ids(spark) - base  # the failed cut's RDD
+    release_cuts(cuts)
+    assert persistent_rdd_ids(spark) - base == set()
+
+
+@pytest.mark.parametrize("surface", ["curation_run", "document_loop"])
+def test_heal_retry_frees_both_attempts_cuts(
+    spark, tmp_path, monkeypatch, surface
+):
+    """The zip-defect retry frees the failed attempt's cuts as well as
+    the rebuild's: after the healed scope exits, no persistent RDD the
+    run created survives, on both surfaces that share the scope."""
+    from datawarehouse_vehicule_insurance_spark.compat import (
+        persistent_rdd_ids,
+    )
+    from datawarehouse_vehicule_insurance_spark.operators import curate as C
+
+    held = []
+
+    def failing_first(real):
+        def wrapped(*a, **kw):
+            out = real(*a, **kw)
+            if not held:
+                out.count()  # the doomed attempt's cuts hold blocks
+                held.append(persistent_rdd_ids(spark) - base)
+                raise RuntimeError(
+                    "Can't zip RDDs with unequal numbers of partitions: "
+                    "List(32, 64)"
+                )
+            return out
+        return wrapped
+
+    rows = [(1, _fresh("a")), (2, _fresh("b")), (3, _fresh("a"))]
+    base = persistent_rdd_ids(spark)
+    if surface == "curation_run":
+        monkeypatch.setattr(
+            C, "curate_corpus", failing_first(C.curate_corpus)
+        )
+        with C.curation_run(
+            _docs(spark, rows), min_tokens=1, min_alpha_ratio=0.0,
+            max_dup_2gram_ratio=1.0,
+        ) as out:
+            assert sorted(r.doc_id for r in out.collect()) == [1, 2]
+    else:
+        monkeypatch.setattr(
+            SC, "curate_batch_incremental",
+            failing_first(SC.curate_batch_incremental),
+        )
+        src, corpus_path, bands_path, hashes_path, ckpt = _paths(tmp_path)
+        _docs(spark, rows).coalesce(1).write.mode("append").parquet(src)
+        SC.run_incremental_curation(
+            spark, src, corpus_path, bands_path, hashes_path, ckpt,
+        ).awaitTermination()
+        assert _corpus_ids(spark, tmp_path) == [1, 2]
+    assert held and held[0]  # the failed attempt did take cuts
+    assert persistent_rdd_ids(spark) - base == set()
+
+
 def test_exchange_reuse_disabled_nested_and_concurrent(spark):
     """The self-heal's conf toggle is refcounted per session: a heal
     opened INSIDE another healed run's block (same thread, same
@@ -2727,7 +2688,7 @@ def test_exchange_reuse_disabled_nested_and_concurrent(spark):
     the conf off for the outer holder, and the outer exit restores the
     true pre-heal value — not the inner heal's "false". A second
     session clone toggles independently."""
-    from datawarehouse_vehicule_insurance_spark.operators.curate import (
+    from datawarehouse_vehicule_insurance_spark.operators.plancut import (
         _exchange_reuse_disabled,
     )
 

@@ -16,7 +16,7 @@ storage set must return to that directory's baseline — any leak
 prints in ``resid_blocks`` and the probe exits 1.
 
 Usage: python tools/pipeline_probe.py [--funnel] [--ablate-each]
-                                      [--ablate-fresh] [--pre-arm]
+                                      [--ablate-fresh]
                                       [--one CONFIG] [sf_dir ...]
        # default: /root/testdata/sf0.1
        # --funnel: run the SAME composition in diagnostic mode too
@@ -59,18 +59,13 @@ args = sys.argv[1:]
 funnel_mode = "--funnel" in args
 ablate_mode = "--ablate-each" in args
 ablate_fresh = "--ablate-fresh" in args
-# --pre-arm (r9 verdict #4): pass pre_arm_reuse_off=True to the FIRST
-# timed run — on a fresh application at a composition the zip probe
-# knows fires, first-run wall should then match the sticky-rerun time
-# (the doomed first attempt is skipped), with identical outputs.
-pre_arm = "--pre-arm" in args
 one_cfg = None
 if "--one" in args:
     i = args.index("--one")
     one_cfg = args[i + 1]
     del args[i:i + 2]
 args = [a for a in args if a not in ("--funnel", "--ablate-each",
-                                     "--ablate-fresh", "--pre-arm")]
+                                     "--ablate-fresh")]
 dirs = args or ["/root/testdata/sf0.1"]
 
 # stage name -> the run_kw keys that enable it (shared naming with
@@ -215,8 +210,7 @@ for sf_dir in dirs:
             run_kw.pop(k)
 
     t0 = time.time()
-    with curation_run(docs, pre_arm_reuse_off=pre_arm or None,
-                      **run_kw) as curated:
+    with curation_run(docs, **run_kw) as curated:
         n_out = curated.count()
     t_curate = time.time() - t0
 
@@ -284,7 +278,6 @@ for sf_dir in dirs:
         "docs_out": n_out,
         "models_sec": round(t_models, 1),
         "curate_sec": round(t_curate, 1),
-        "pre_arm": pre_arm,
         "resid_blocks": leaked,
         **ablate_extras,
         **funnel_extras,

@@ -13,8 +13,8 @@ cost, so we need to notice when a Spark upgrade FIXES the defect and
 the heal can be retired.
 
 This probe runs the known-firing composition through BARE
-``curate_corpus`` (cut registry + fused materialization, exactly
-``curation_run._build``) with the self-heal deliberately OUT of the
+``curate_corpus`` (cut registry + fused materialization, exactly what
+``curation_run`` builds) with the self-heal deliberately OUT of the
 loop, and reports whether the defect fires on the current Spark:
 
     python tools/make_scaled_replica.py /root/testdata/sf0.1 /tmp/sfx10 10
@@ -22,10 +22,12 @@ loop, and reports whether the defect fires on the current Spark:
 
 Prints one JSON line {"reproduced": bool, "spark": version, ...} and
 exits 0 when the defect reproduces (status quo: keep the heal), 3 when
-it does NOT (Spark fixed it — retire the heal: remove the retry paths
-in operators/curate.py + streaming/curation.py and their tests, and
-update the version pin in tests/test_incremental_curation.py::
-test_zip_defect_version_pin). Any OTHER failure exits 1.
+it does NOT (Spark fixed it — retire the heal: reduce
+``operators/plancut.py::healed_cuts`` to its cut registry and release,
+delete the zip-mismatch trigger, reuse toggle and defect memory beside
+it and their tests, and update the version pin in
+tests/test_incremental_curation.py::test_zip_defect_version_pin).
+Any OTHER failure exits 1.
 
 The default composition is the MINIMAL known-firing one, found by
 greedy single-stage ablation (r8): line dedup + LM-perplexity gate +
@@ -79,11 +81,11 @@ spark = (
 spark.sparkContext.setLogLevel("ERROR")
 
 from datawarehouse_vehicule_insurance_spark.operators.curate import (  # noqa: E402
-    _is_zip_mismatch,
     _materialize_cuts,
     curate_corpus,
 )
 from datawarehouse_vehicule_insurance_spark.operators.plancut import (  # noqa: E402
+    _is_zip_mismatch,
     cut_registry,
     release_cuts,
 )
