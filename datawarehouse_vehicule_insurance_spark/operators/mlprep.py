@@ -779,10 +779,8 @@ def tokenize_and_pack(
         docs, merges, num_merges=num_merges, max_words=max_words,
         text_col=text_col, out_col="bpe_token_count",
     ).filter(
-        # NULL text has no tokens to pack (legacy size() mode returns
-        # -1 instead of NULL — excluded either way)
+        # NULL text has no tokens to pack
         F.col("bpe_token_count").isNotNull()
-        & (F.col("bpe_token_count") >= 0)
     )
     return pack_sequences(
         counted.select(id_col, "bpe_token_count"),

@@ -916,28 +916,167 @@ def train_bpe(
     markup should strip it first or use :func:`train_bpe_bytes`, the
     collision-free byte-level variant."""
     hist = _word_histogram(train, text_col, max_words)
-    merges = _bpe_learn(hist, num_merges)
-    spark = train.sparkSession
-    fp = bpe_fingerprint(num_merges, max_words)
-    schema = "rank int, left string, right string"
-    rows = [(i, a, b) for i, (a, b) in enumerate(merges)]
-    if not rows:
-        return spark.createDataFrame([], schema).withColumn(
-            BPE_PARAMS_COL, F.lit(fp)
-        )
-    return spark.createDataFrame(rows, schema).withColumn(
-        BPE_PARAMS_COL, F.lit(fp)
+    return _merges_table(
+        train.sparkSession, _bpe_learn(hist, num_merges),
+        bpe_fingerprint(num_merges, max_words),
     )
 
 
-def _validate_bpe_stamp(merges: DataFrame, expected: str) -> None:
-    if BPE_PARAMS_COL not in merges.columns:
-        return
-    row = merges.select(BPE_PARAMS_COL).first()
-    if row is not None and row[0] != expected:
+def _merges_table(spark, merges: list, fp: str) -> DataFrame:
+    """The persistable (rank, left, right, __bpe_params) table both
+    trainers return."""
+    return spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(merges)],
+        "rank int, left string, right string",
+    ).withColumn(BPE_PARAMS_COL, F.lit(fp))
+
+
+def _collect_stamped(table: DataFrame, cols: list, expected: str) -> list:
+    """Collect ``cols`` of a stamped BPE table (merges or vocab) in ONE
+    job, with its ``__bpe_params`` stamp alongside, and check the stamp
+    on the collected rows: a table built with other parameters silently
+    produces a different segmentation, the failure the stamp exists to
+    catch. A table without the stamp column passes unchecked."""
+    stamped = BPE_PARAMS_COL in table.columns
+    rows = table.select(
+        *cols, *([BPE_PARAMS_COL] if stamped else [])
+    ).collect()
+    for r in rows if stamped else ():
+        if r[-1] != expected:
+            raise ValueError(
+                f"BPE table parameter mismatch: table was built with "
+                f"{r[-1]!r} but the encode uses {expected!r}"
+            )
+    return rows
+
+
+def _bpe_apply(
+    df: DataFrame,
+    merges: DataFrame,
+    fp: str,
+    *,
+    byte_level: bool,
+    emit: str,
+    text_col: str,
+    out_col: str,
+    vocab: DataFrame | None = None,
+    unk_id: int = -1,
+) -> DataFrame:
+    """The one BPE apply kernel behind every public encoder and counter.
+
+    Input is the word array of the same JVM :func:`tokens` expression
+    the trainers' histogram is built from, so encode-time word splitting
+    cannot drift from training; only that array crosses into Python.
+    The merge ranks (plus the vocab id map when ``emit="ids"``) are
+    collected once per table with their stamp checked, and broadcast
+    once. Each task keeps a word memo, so cost tracks the vocabulary of
+    the task, not its token count; each new word runs the greedy
+    lowest-rank-first pair merge (how GPT-2's encoder applies a merge
+    list, provably equal to replaying merges in training order).
+
+    Symbols are characters + ``</w>``, or with ``byte_level`` the
+    mapped bytes of the space-prefixed word. ``emit`` picks the output:
+    ``"tokens"`` appends ``array<string>``; ``"count"`` appends ``int``
+    and drops ``text_col`` (the count is what the text becomes, so the
+    text is not carried on); ``"ids"`` appends ``array<int>`` with
+    ``unk_id`` for tokens outside the vocabulary. NULL text gives NULL,
+    empty or whitespace-only text gives an empty array or 0."""
+    from typing import Iterator
+
+    import pandas as pd
+    from pyspark.sql.types import ArrayType, IntegerType, StringType
+
+    ranks = {
+        (r[1], r[2]): r[0]
+        for r in _collect_stamped(merges, ["rank", "left", "right"], fp)
+    }
+    ids = None
+    if emit == "ids":
+        ids = {
+            r[0]: r[1]
+            for r in _collect_stamped(vocab, ["token", "token_id"], fp)
+        }
+    b_model = safe_broadcast(df.sparkSession, (ranks, ids))
+    eow = BPE_EOW
+    # the bijection is tiny and deterministic: ship its items so the
+    # worker needs no package import
+    b2u_items = sorted(_bytes_to_unicode().items()) if byte_level else None
+    rtype = {
+        "tokens": ArrayType(StringType()),
+        "count": IntegerType(),
+        "ids": ArrayType(IntegerType()),
+    }[emit]
+
+    # nested and pickled BY VALUE: a module-level function would pickle
+    # by name and need this package importable on the worker
+    def bpe_apply(batches):
+        R, id_map = b_model.value
+        if b2u_items is None:
+            def symbols(w):
+                return list(w) + [eow]
+        else:
+            b2u = dict(b2u_items)
+
+            def symbols(w):
+                return [b2u[b] for b in (" " + w).encode("utf-8")]
+        if emit == "count":
+            finish = len
+        elif emit == "ids":
+            def finish(sym):
+                return [id_map.get(t, unk_id) for t in sym]
+        else:
+            def finish(sym):
+                return sym
+        memo: dict = {}
+
+        def encode(w):
+            got = memo.get(w)
+            if got is None:
+                sym = symbols(w)
+                while len(sym) > 1:
+                    best_rank, best_i = None, None
+                    for i in range(len(sym) - 1):
+                        r = R.get((sym[i], sym[i + 1]))
+                        if r is not None and (
+                            best_rank is None or r < best_rank
+                        ):
+                            best_rank, best_i = r, i
+                    if best_i is None:
+                        break
+                    sym[best_i:best_i + 2] = [sym[best_i] + sym[best_i + 1]]
+                got = memo[w] = finish(sym)
+            return got
+
+        for words in batches:
+            out = []
+            for ws in words:
+                if ws is None:
+                    out.append(None)
+                elif emit == "count":
+                    out.append(sum(encode(w) for w in ws if w))
+                else:
+                    toks: list = []
+                    for w in ws:
+                        if w:
+                            toks.extend(encode(w))
+                    out.append(toks)
+            yield pd.Series(out, dtype="Int32" if emit == "count" else None)
+
+    # real annotation objects: the module's `from __future__ import
+    # annotations` would stringify inline hints (see _gopher_rep_counts_udf)
+    bpe_apply.__annotations__ = {
+        "batches": Iterator[pd.Series], "return": Iterator[pd.Series],
+    }
+    udf = F.pandas_udf(rtype)(bpe_apply)
+    out = df.withColumn(out_col, udf(tokens(F.col(text_col))))
+    return out.drop(text_col) if emit == "count" else out
+
+
+def _check_out_col(df: DataFrame, out_col: str, fn: str) -> None:
+    if out_col in df.columns:
         raise ValueError(
-            f"BPE merges parameter mismatch: table was built with "
-            f"{row[0]!r} but the encode uses {expected!r}"
+            f"{fn}: out_col {out_col!r} already exists on the input "
+            "DataFrame — pick a different name"
         )
 
 
@@ -950,156 +1089,14 @@ def bpe_encode(
     out_col: str = "bpe_tokens",
 ) -> DataFrame:
     """Append ``out_col`` (``array<string>`` of BPE subword tokens) by
-    applying a trained merges table to every document. The merge list is
-    collected (bounded: ``num_merges`` rows) and broadcast; encoding
-    runs as an Arrow-batched ``mapInPandas`` with a per-batch word memo
-    — each DISTINCT word in a batch is encoded once, so the cost tracks
-    vocabulary, not token count. NULL text encodes to NULL.
-
-    The table's parameter stamp is validated against this call's
-    (mismatched merges silently produce a different segmentation — the
-    failure mode the stamp exists to catch)."""
-    import pandas as pd
-
-    if out_col in df.columns:
-        raise ValueError(
-            f"bpe_encode: out_col {out_col!r} already exists on the input "
-            "DataFrame — pick a different name (mirrors the "
-            "dsir_log_weights reserved-column guard)"
-        )
-    _validate_bpe_stamp(merges, bpe_fingerprint(num_merges, max_words))
-    rows = merges.select("rank", "left", "right").collect()
-    ranks = {(r[1], r[2]): r[0] for r in rows}
-    b_ranks = safe_broadcast(df.sparkSession, ranks)
-    import re as _re
-
-    out_fields = ", ".join(
-        f"`{c.name}` {c.dataType.simpleString()}" for c in df.schema.fields
+    applying a trained merges table to every document's :func:`tokens`
+    words (:func:`_bpe_apply`). NULL text encodes to NULL. The table's
+    parameter stamp is validated against this call's."""
+    _check_out_col(df, out_col, "bpe_encode")
+    return _bpe_apply(
+        df, merges, bpe_fingerprint(num_merges, max_words),
+        byte_level=False, emit="tokens", text_col=text_col, out_col=out_col,
     )
-    out_schema = f"{out_fields}, `{out_col}` array<string>"
-    eow = BPE_EOW
-
-    # greedy lowest-rank-first pair merging (how GPT-2's encoder applies
-    # a merge list — provably equivalent to replaying merges in training
-    # order). Nested and pickled BY VALUE: a module-level reference
-    # would pickle by name and require the worker to import this
-    # package — which only works when the driver's cwd happens to put
-    # the repo on the workers' sys.path. Closures here must be
-    # self-contained (same contract as every other mapInPandas below).
-    def _enc_word(word: str, R: dict) -> list:
-        sym = list(word) + [eow]
-        while len(sym) > 1:
-            best_rank, best_i = None, None
-            for i in range(len(sym) - 1):
-                r = R.get((sym[i], sym[i + 1]))
-                if r is not None and (best_rank is None or r < best_rank):
-                    best_rank, best_i = r, i
-            if best_i is None:
-                break
-            sym[best_i:best_i + 2] = [sym[best_i] + sym[best_i + 1]]
-        return sym
-
-    def _fn(batches):
-        R = b_ranks.value
-        memo: dict = {}
-        for pdf in batches:
-            encoded = []
-            for t in pdf[text_col]:
-                if t is None or (isinstance(t, float) and pd.isna(t)):
-                    encoded.append(None)
-                    continue
-                norm = _re.sub(r"\s+", " ", str(t).strip().lower())
-                toks_out: list[str] = []
-                for w in norm.split(" "):
-                    if w == "":
-                        continue
-                    got = memo.get(w)
-                    if got is None:
-                        got = _enc_word(w, R)
-                        memo[w] = got
-                    toks_out.extend(got)
-                encoded.append(toks_out)
-            yield pdf.assign(**{out_col: encoded})
-
-    return df.mapInPandas(_fn, out_schema)
-
-
-def _bpe_count_map(
-    df: DataFrame,
-    merges: DataFrame,
-    num_merges: int,
-    max_words: int,
-    text_col: str,
-    out_col: str,
-) -> DataFrame:
-    """Count-only twin of :func:`bpe_encode`: the same greedy
-    lowest-rank-first merge loop and per-task word memo, but only the
-    per-document token COUNT crosses the Arrow boundary back to the
-    JVM — :func:`bpe_token_count` used to ship every document's full
-    subword array out of Python and immediately drop it (guide §4:
-    control how many columns cross). The memo caches per-word COUNTS,
-    so cost still tracks the batch vocabulary, not token volume.
-
-    The count REPLACES ``text_col`` in the output (r15): echoing the
-    text back across the boundary just so a downstream Project could
-    drop it doubled the Arrow return traffic for a column no count
-    consumer reads — the output schema is the input's columns minus
-    ``text_col``, plus ``out_col``."""
-    import pandas as pd
-
-    _validate_bpe_stamp(merges, bpe_fingerprint(num_merges, max_words))
-    rows = merges.select("rank", "left", "right").collect()
-    ranks = {(r[1], r[2]): r[0] for r in rows}
-    b_ranks = safe_broadcast(df.sparkSession, ranks)
-    import re as _re
-
-    out_fields = ", ".join(
-        f"`{c.name}` {c.dataType.simpleString()}" for c in df.schema.fields
-        if c.name != text_col
-    )
-    sep = ", " if out_fields else ""
-    out_schema = f"{out_fields}{sep}`{out_col}` int"
-    eow = BPE_EOW
-
-    # self-contained closure, pickled by value (see bpe_encode)
-    def _enc_len(word: str, R: dict) -> int:
-        sym = list(word) + [eow]
-        while len(sym) > 1:
-            best_rank, best_i = None, None
-            for i in range(len(sym) - 1):
-                r = R.get((sym[i], sym[i + 1]))
-                if r is not None and (best_rank is None or r < best_rank):
-                    best_rank, best_i = r, i
-            if best_i is None:
-                break
-            sym[best_i:best_i + 2] = [sym[best_i] + sym[best_i + 1]]
-        return len(sym)
-
-    def _fn(batches):
-        R = b_ranks.value
-        memo: dict = {}
-        for pdf in batches:
-            counts = []
-            for t in pdf[text_col]:
-                if t is None or (isinstance(t, float) and pd.isna(t)):
-                    counts.append(None)
-                    continue
-                norm = _re.sub(r"\s+", " ", str(t).strip().lower())
-                total = 0
-                for w in norm.split(" "):
-                    if w == "":
-                        continue
-                    got = memo.get(w)
-                    if got is None:
-                        got = _enc_len(w, R)
-                        memo[w] = got
-                    total += got
-                counts.append(total)
-            yield pdf.drop(columns=[text_col]).assign(
-                **{out_col: pd.array(counts, dtype="Int32")}
-            )
-
-    return df.mapInPandas(_fn, out_schema)
 
 
 def bpe_token_count(
@@ -1115,17 +1112,13 @@ def bpe_token_count(
     :func:`bpe_ish_token_count`, the model-free regex estimate).
 
     Output: the input's columns with ``text_col`` REPLACED by
-    ``out_col`` — the count is what the text becomes; keeping the text
-    would ship every document back across the Arrow boundary just to be
-    dropped (guide §4). NULL text → NULL count; empty/whitespace-only
-    text → 0."""
-    if out_col in df.columns:
-        raise ValueError(
-            f"bpe_token_count: out_col {out_col!r} already exists on the "
-            "input DataFrame — pick a different name"
-        )
-    return _bpe_count_map(
-        df, merges, num_merges, max_words, text_col, out_col
+    ``out_col`` — the count is what the text becomes, and only the
+    count crosses back from Python. NULL text → NULL count;
+    empty/whitespace-only text → 0."""
+    _check_out_col(df, out_col, "bpe_token_count")
+    return _bpe_apply(
+        df, merges, bpe_fingerprint(num_merges, max_words),
+        byte_level=False, emit="count", text_col=text_col, out_col=out_col,
     )
 
 
@@ -1176,30 +1169,22 @@ def train_bpe_bytes(
     Every word trains in its SPACE-PREFIXED UTF-8 byte form (GPT-2's
     leading-space convention, uniformly applied): symbols are the
     mapped bytes of ``" " + word``, there is no end-of-word marker, and
-    decoding is the exact inverse — concatenate token symbols, unmap to
-    bytes, UTF-8-decode, drop the first document's leading space
-    (:func:`bpe_decode_bytes`). Because the base alphabet is the 256
-    bytes themselves, ``decode(encode(text))`` equals the canonical
-    text for EVERY input, including text containing the literal
-    ``</w>`` that makes the character-level variant's reconstruction
-    ambiguous."""
+    decoding is the exact inverse (:func:`bpe_decode_bytes`). Because
+    the base alphabet is the 256 bytes themselves, ``decode(encode(
+    text))`` equals the canonical text for EVERY input, including text
+    containing the literal ``</w>`` that makes the character-level
+    variant's reconstruction ambiguous. The canonical text is the
+    non-empty :func:`tokens` words joined by one space: the words the
+    histogram is built from and the encoders apply to."""
     b2u = _bytes_to_unicode()
 
     def to_sym(w):
         return tuple(b2u[b] for b in (" " + w).encode("utf-8"))
 
     hist = _word_histogram(train, text_col, max_words)
-    merges = _bpe_learn(hist, num_merges, to_symbols=to_sym)
-    spark = train.sparkSession
-    fp = bpe_bytes_fingerprint(num_merges, max_words)
-    schema = "rank int, left string, right string"
-    rows = [(i, a, b) for i, (a, b) in enumerate(merges)]
-    if not rows:
-        return spark.createDataFrame([], schema).withColumn(
-            BPE_PARAMS_COL, F.lit(fp)
-        )
-    return spark.createDataFrame(rows, schema).withColumn(
-        BPE_PARAMS_COL, F.lit(fp)
+    return _merges_table(
+        train.sparkSession, _bpe_learn(hist, num_merges, to_symbols=to_sym),
+        bpe_bytes_fingerprint(num_merges, max_words),
     )
 
 
@@ -1211,78 +1196,25 @@ def bpe_encode_bytes(
     text_col: str = "text",
     out_col: str = "bpe_tokens",
 ) -> DataFrame:
-    """Apply a :func:`train_bpe_bytes` merges table — same Arrow-batched
-    ``mapInPandas`` + per-batch word memo shape as :func:`bpe_encode`,
-    with byte-mapped space-prefixed symbols and no end-of-word marker.
-    NULL text encodes to NULL; the stamp is validated."""
-    import pandas as pd
-
-    if out_col in df.columns:
-        raise ValueError(
-            f"bpe_encode_bytes: out_col {out_col!r} already exists on the "
-            "input DataFrame — pick a different name"
-        )
-    _validate_bpe_stamp(merges, bpe_bytes_fingerprint(num_merges, max_words))
-    rows = merges.select("rank", "left", "right").collect()
-    ranks = {(r[1], r[2]): r[0] for r in rows}
-    b_ranks = safe_broadcast(df.sparkSession, ranks)
-    import re as _re
-
-    out_fields = ", ".join(
-        f"`{c.name}` {c.dataType.simpleString()}" for c in df.schema.fields
+    """Apply a :func:`train_bpe_bytes` merges table — the
+    :func:`bpe_encode` kernel with byte-mapped space-prefixed symbols
+    and no end-of-word marker. NULL text encodes to NULL; the stamp is
+    validated."""
+    _check_out_col(df, out_col, "bpe_encode_bytes")
+    return _bpe_apply(
+        df, merges, bpe_bytes_fingerprint(num_merges, max_words),
+        byte_level=True, emit="tokens", text_col=text_col, out_col=out_col,
     )
-    out_schema = f"{out_fields}, `{out_col}` array<string>"
-    # the bijection is tiny and deterministic — rebuild it inside the
-    # closure so the worker needs no package import (the same
-    # self-contained contract as every mapInPandas here)
-    b2u_items = sorted(_bytes_to_unicode().items())
-
-    def _fn(batches):
-        R = b_ranks.value
-        b2u = dict(b2u_items)
-        memo: dict = {}
-
-        def _enc_word(word: str) -> list:
-            sym = [b2u[b] for b in (" " + word).encode("utf-8")]
-            while len(sym) > 1:
-                best_rank, best_i = None, None
-                for i in range(len(sym) - 1):
-                    r = R.get((sym[i], sym[i + 1]))
-                    if r is not None and (best_rank is None or r < best_rank):
-                        best_rank, best_i = r, i
-                if best_i is None:
-                    break
-                sym[best_i:best_i + 2] = [sym[best_i] + sym[best_i + 1]]
-            return sym
-
-        for pdf in batches:
-            encoded = []
-            for t in pdf[text_col]:
-                if t is None or (isinstance(t, float) and pd.isna(t)):
-                    encoded.append(None)
-                    continue
-                norm = _re.sub(r"\s+", " ", str(t).strip().lower())
-                toks_out: list = []
-                for w in norm.split(" "):
-                    if w == "":
-                        continue
-                    got = memo.get(w)
-                    if got is None:
-                        got = _enc_word(w)
-                        memo[w] = got
-                    toks_out.extend(got)
-                encoded.append(toks_out)
-            yield pdf.assign(**{out_col: encoded})
-
-    return df.mapInPandas(_fn, out_schema)
 
 
 def bpe_decode_bytes(tokens: list) -> str:
     """Exact inverse of :func:`bpe_encode_bytes` for one document's
     token list: unmap every symbol character back to its byte, UTF-8
-    decode, drop the leading space the first word carried. A pure
-    driver/test helper — the round-trip it witnesses is the byte-level
-    variant's collision-freedom claim."""
+    decode, drop the leading space the first word carried. The result
+    is the document's canonical text, its non-empty :func:`tokens`
+    words joined by one space. A pure driver/test helper — the
+    round-trip it witnesses is the byte-level variant's
+    collision-freedom claim."""
     u2b = {c: b for b, c in _bytes_to_unicode().items()}
     data = bytes(u2b[ch] for tok in tokens for ch in tok)
     return data.decode("utf-8")[1:]
@@ -1297,17 +1229,14 @@ def bpe_token_count_bytes(
     out_col: str = "bpe_token_count",
 ) -> DataFrame:
     """Per-document subword count under a byte-level vocabulary —
-    :func:`bpe_token_count`'s twin for :func:`train_bpe_bytes` merges
-    (the stamp keeps the two table kinds from crossing)."""
-    if out_col in df.columns:
-        raise ValueError(
-            f"bpe_token_count_bytes: out_col {out_col!r} already exists "
-            "on the input DataFrame — pick a different name"
-        )
-    enc = bpe_encode_bytes(
-        df, merges, num_merges, max_words, text_col, "__bpe_toks"
+    :func:`bpe_token_count`'s twin for :func:`train_bpe_bytes` merges,
+    with the same output contract (``text_col`` replaced by
+    ``out_col``); the stamp keeps the two table kinds from crossing."""
+    _check_out_col(df, out_col, "bpe_token_count_bytes")
+    return _bpe_apply(
+        df, merges, bpe_bytes_fingerprint(num_merges, max_words),
+        byte_level=True, emit="count", text_col=text_col, out_col=out_col,
     )
-    return enc.withColumn(out_col, F.size("__bpe_toks")).drop("__bpe_toks")
 
 
 # ------------------------------------------------------------- Gopher rules
@@ -2023,28 +1952,20 @@ def bpe_vocab(
     per-character explode of the corpus (bounded output — alphabets are
     small); everything else derives from the ``num_merges``-row merges
     table."""
-    _validate_bpe_stamp(merges, bpe_fingerprint(num_merges, max_words))
+    fp = bpe_fingerprint(num_merges, max_words)
+    m_rows = sorted(_collect_stamped(merges, ["rank", "left", "right"], fp))
     chars = sorted(
         r[0]
         for r in train.select(
             F.explode(
-                F.split(
-                    F.regexp_replace(
-                        F.lower(F.trim(F.col(text_col))), r"\s+", " "
-                    ),
-                    "",
-                )
+                F.split(F.array_join(tokens(F.col(text_col)), ""), "")
             ).alias("c")
         )
-        .filter((F.col("c") != "") & (F.col("c") != " "))
+        .filter(F.col("c") != "")
         .distinct()
         .collect()
     )
-    toks = list(chars) + [BPE_EOW] + [
-        r["left"] + r["right"]
-        for r in merges.select("rank", "left", "right")
-        .orderBy("rank").collect()
-    ]
+    toks = list(chars) + [BPE_EOW] + [r[1] + r[2] for r in m_rows]
     # merge products can collide with base symbols only when training
     # text contains the literal marker (documented train_bpe contract);
     # keep first occurrence's id
@@ -2054,7 +1975,6 @@ def bpe_vocab(
             seen.add(t)
             uniq.append(t)
     spark = train.sparkSession
-    fp = bpe_fingerprint(num_merges, max_words)
     return spark.createDataFrame(
         [(i, t) for i, t in enumerate(uniq)],
         "token_id int, token string",
@@ -2073,39 +1993,14 @@ def bpe_encode_ids(
 ) -> DataFrame:
     """Append ``out_col`` (``array<int>``) — the document's subword
     token IDS under a trained (merges, vocab) pair: what a shard export
-    actually ships to a trainer. Composition of :func:`bpe_encode` and
-    a broadcast vocab lookup; subword strings never leave the executor.
-    Tokens outside the vocabulary (unseen characters at encode time)
-    map to ``unk_id``. NULL text → NULL."""
-    import pandas as pd
-
-    if out_col in df.columns:
-        raise ValueError(
-            f"bpe_encode_ids: out_col {out_col!r} already exists on the "
-            "input DataFrame — pick a different name"
-        )
-    _validate_bpe_stamp(vocab, bpe_fingerprint(num_merges, max_words))
-    mapping = {
-        r["token"]: r["token_id"]
-        for r in vocab.select("token", "token_id").collect()
-    }
-    b_map = safe_broadcast(df.sparkSession, mapping)
-    enc = bpe_encode(
-        df, merges, num_merges, max_words, text_col, "__bpe_toks"
+    actually ships to a trainer. One pass of the :func:`bpe_encode`
+    kernel that looks each token up in the broadcast vocab, so subword
+    strings never leave the Python worker. Tokens outside the
+    vocabulary (unseen characters at encode time) map to ``unk_id``.
+    NULL text → NULL. Both tables' stamps are validated."""
+    _check_out_col(df, out_col, "bpe_encode_ids")
+    return _bpe_apply(
+        df, merges, bpe_fingerprint(num_merges, max_words),
+        byte_level=False, emit="ids", text_col=text_col, out_col=out_col,
+        vocab=vocab, unk_id=unk_id,
     )
-
-    def _fn(batches):
-        m = b_map.value
-        for pdf in batches:
-            ids = [
-                None if toks is None
-                else [m.get(t, unk_id) for t in toks]
-                for toks in pdf["__bpe_toks"]
-            ]
-            yield pdf.drop(columns=["__bpe_toks"]).assign(**{out_col: ids})
-
-    out_fields = ", ".join(
-        f"`{c.name}` {c.dataType.simpleString()}"
-        for c in df.schema.fields
-    )
-    return enc.mapInPandas(_fn, f"{out_fields}, `{out_col}` array<int>")

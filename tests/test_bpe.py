@@ -232,6 +232,99 @@ def test_token_count_null_and_empty_text(spark):
     assert got[2] is None and got[3] == 0 and got[4] == 0
 
 
+def test_encode_splits_words_like_training_tokens(spark):
+    """Encoders split words with the same JVM ``tokens()`` the trainer
+    builds its histogram from. No-break, thin and ideographic spaces are
+    not whitespace there, so a corpus of such words trains whole-word
+    merges and must encode to one token per word — a Python re-split on
+    Unicode whitespace used to give 15 and 6 here. The byte-level round
+    trip keeps those characters too."""
+    from datawarehouse_vehicule_insurance_spark.operators.text_analysis import (
+        bpe_decode_bytes,
+        bpe_encode_bytes,
+        tokens,
+        train_bpe_bytes,
+    )
+
+    texts = ["ab\u00a0cd ab\u00a0cd ab\u00a0cd", "x\u2009y\u3000z"]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    merges = train_bpe(docs, num_merges=20)
+    enc = {
+        r["doc_id"]: r["bpe_tokens"]
+        for r in bpe_encode(docs, merges, num_merges=20).collect()
+    }
+    assert enc[0] == ["ab\xa0cd" + BPE_EOW] * 3
+    assert enc[1] == ["x\u2009y\u3000z" + BPE_EOW]
+    counts = {
+        r["doc_id"]: r["bpe_token_count"]
+        for r in bpe_token_count(docs, merges, num_merges=20).collect()
+    }
+    assert counts == {0: 3, 1: 1}
+
+    byte_merges = train_bpe_bytes(docs, num_merges=20)
+    rows = bpe_encode_bytes(docs, byte_merges, num_merges=20).select(
+        "doc_id", "bpe_tokens", tokens(F.col("text")).alias("words")
+    ).collect()
+    for r in rows:
+        canonical = " ".join(w for w in r["words"] if w)
+        # these texts are already canonical: the special spaces survive
+        assert canonical == texts[r["doc_id"]]
+        assert bpe_decode_bytes(r["bpe_tokens"]) == canonical
+
+
+def _jobs_during(spark, group, fn):
+    """Run ``fn`` under a Spark job group and return the number of jobs
+    the group launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bpe_build_launches_one_job_per_table(spark, tmp_path):
+    """Building an encoder collects each persisted table once, stamp
+    included: no separate stamp job. Counted over parquet-read tables
+    after one warm-up build of each, so only steady-state jobs count."""
+    from datawarehouse_vehicule_insurance_spark.operators.text_analysis import (
+        bpe_encode_ids,
+        bpe_vocab,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, "low low lower lowest"), (2, "new newer newest low")],
+        "doc_id long, text string",
+    )
+    train_bpe(corpus, num_merges=12).write.parquet(str(tmp_path / "m"))
+    merges = spark.read.parquet(str(tmp_path / "m"))
+    bpe_vocab(corpus, merges, num_merges=12).write.parquet(
+        str(tmp_path / "v")
+    )
+    vocab = spark.read.parquet(str(tmp_path / "v"))
+    builds = {
+        "count": lambda: bpe_token_count(corpus, merges, num_merges=12),
+        "encode": lambda: bpe_encode(corpus, merges, num_merges=12),
+        "ids": lambda: bpe_encode_ids(
+            corpus, merges, vocab, num_merges=12
+        ),
+    }
+    for build in builds.values():
+        build()
+    merges_jobs = _jobs_during(spark, "bpe_m_collect", merges.collect)
+    vocab_jobs = _jobs_during(spark, "bpe_v_collect", vocab.collect)
+    got = {
+        k: _jobs_during(spark, f"bpe_build_{k}", build)
+        for k, build in builds.items()
+    }
+    assert got["count"] <= merges_jobs, (got, merges_jobs)
+    assert got["encode"] <= merges_jobs, (got, merges_jobs)
+    assert got["ids"] <= merges_jobs + vocab_jobs, (got, vocab_jobs)
+
+
 def test_cli_bpe_train(spark, tmp_path, capsys):
     """bpe-train persists a merges table that encodes identically to an
     in-memory trained one."""
@@ -439,6 +532,16 @@ def test_bpe_vocab_and_id_encoding(spark):
     with pytest.raises(ValueError, match="parameter mismatch"):
         bpe_encode_ids(docs, merges, vocab, num_merges=11)
 
+    # the ids come from the same single Python pass that merges the
+    # words: exactly one Python evaluation node in the executed plan
+    plan = bpe_encode_ids(
+        docs, merges, vocab, num_merges=10
+    )._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(
+        r"\b(?:ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow)\b",
+        plan,
+    )) == 1, plan
+
 
 # ----------------------------------------------------------- byte level
 
@@ -603,6 +706,11 @@ def test_bytes_token_count_and_pack(spark):
     for i in list(range(12)):
         assert counted[i] == len(enc[i]) > 0
     assert counted[99] is None
+    # one output contract for the twins: the count replaces the text
+    assert bpe_token_count_bytes(docs, merges, num_merges=32).columns == (
+        bpe_token_count(docs, train_bpe(docs, num_merges=32),
+                        num_merges=32).columns
+    )
 
     with pytest.raises(ValueError, match="parameter mismatch"):
         bpe_token_count(docs, merges, num_merges=32)

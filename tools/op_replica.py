@@ -169,11 +169,13 @@ def check_byte_bpe():
     """Byte-level BPE collision-freedom at the replica: train merges on
     a corpus slice, encode a deterministic 500-doc sample, and decode
     every token list back — decode∘encode must equal the canonical
-    (lower/trim/space-collapsed) text exactly. Driver collect is the
-    bounded sample only."""
+    text exactly: the non-empty engine ``tokens()`` words, collected
+    with the sample, joined by one space. Driver collect is the bounded
+    sample only."""
     from datawarehouse_vehicule_insurance_spark.operators.text_analysis import (
         bpe_decode_bytes,
         bpe_encode_bytes,
+        tokens,
         train_bpe_bytes,
     )
 
@@ -184,12 +186,13 @@ def check_byte_bpe():
         .limit(500)
     )
     enc = bpe_encode_bytes(sample, merges, num_merges=200)
-    rows = enc.select("doc_id", "text", "bpe_tokens").collect()
-    import re as _re
+    rows = enc.select(
+        "doc_id", "bpe_tokens", tokens(F.col("text")).alias("words")
+    ).collect()
 
     bad = 0
     for r in rows:
-        canon = _re.sub(r"\s+", " ", r["text"].strip().lower())
+        canon = " ".join(w for w in r["words"] if w)
         if bpe_decode_bytes(r["bpe_tokens"]) != canon:
             bad += 1
     if bad:
