@@ -116,8 +116,7 @@ def _run_curate(args: argparse.Namespace) -> int:
             spark.read.parquet(args.dsir_unigrams),
         )
     # curation_run (not bare curate_corpus): frees the run's checkpoint
-    # blocks after the sink and self-heals the known reused-exchange
-    # planner defect at the full composition
+    # blocks after the sink
     _validate_rejection_flags(args)
     frames = {} if (args.stage_counts or args.rejections) else None
     reasons = (
@@ -579,8 +578,7 @@ def main(argv: list[str] | None = None) -> int:
         help="curate: include the exact per-stage survivor funnel in "
         "the printed stats; curate-stream/embed-stream: print one "
         "JSON line per batch ATTEMPT with that batch's funnel (a "
-        "replayed or "
-        "self-healed batch reports again -- last line per batch id "
+        "replayed batch reports again -- last line per batch id "
         "wins; stage boundaries are checkpointed for the duration of "
         "the run or batch)",
     )

@@ -81,40 +81,6 @@ def safe_set_log_level(spark, level: str) -> None:
         pass
 
 
-def context_key(spark) -> str:
-    """A string identifying the underlying Spark application, stable
-    across the session clones ``foreachBatch`` creates — used to key
-    per-application state (the zip-defect sticky heal). Fallback
-    chain: classic ``sparkContext.applicationId`` → the ``spark.app.id``
-    conf (readable under Connect) → a uuid cached ON the session
-    object (last resort: unique for the process lifetime — a bare
-    ``id(spark)`` key can be REUSED by CPython after GC, letting a
-    later session inherit a dead one's sticky-heal state; r12 advice).
-    ``id()`` remains only for exotic session objects that reject
-    attribute writes, where the reuse hazard is accepted and
-    documented rather than silent."""
-    try:
-        return str(spark.sparkContext.applicationId)
-    except Exception:  # noqa: BLE001
-        pass
-    try:
-        app_id = spark.conf.get("spark.app.id")
-        if app_id:
-            return str(app_id)
-    except Exception:  # noqa: BLE001
-        pass
-    key = getattr(spark, "_dwvi_context_key", None)
-    if key is None:
-        import uuid
-
-        key = f"py-session-{uuid.uuid4().hex}"
-        try:
-            object.__setattr__(spark, "_dwvi_context_key", key)
-        except Exception:  # noqa: BLE001 — slots/frozen session object
-            return f"py-session-{id(spark)}"
-    return key
-
-
 def persistent_rdd_ids(spark) -> set[int] | None:
     """Ids of the JVM block manager's persistent RDDs, or ``None``
     when the map is unreachable (Connect) — callers treat ``None`` as

@@ -22,10 +22,12 @@ Cost ordering rationale (the 100-TB argument):
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .plancut import checkpoint_cut, healed_cuts, mark_stage
+from .plancut import checkpoint_cut, cut_scope, mark_stage
 
 from .dedup import (
     cross_corpus_verbatim_pairs,
@@ -555,22 +557,22 @@ def stage_counts(stage_frames: dict) -> dict:
 
 def _materialize_cuts(cuts: list) -> None:
     """Materialize a run's (lazy) plan cuts — work the sink would have
-    paid anyway, moved inside :func:`curation_run`'s healed build.
+    paid anyway, moved inside :func:`curation_run` before it yields.
     REVERSED registration order on purpose: counting the most-
     downstream cut first computes (and caches) every upstream cut in
     its lineage as ONE fused job graph — per-cut counts in dependency
     order would insert a full job barrier between stages (measured 2x
-    on the healed 10x composition) and, when the planner defect fires,
-    waste every stage completed before the failing one. The remaining
-    counts then scan warm blocks (~free) and cover side-branch cuts
-    outside the last cut's lineage — so EVERY registered cut ends up
-    materialized regardless of registration order (a side-branch cut
-    registered last just becomes the first, fused count; pinned by
+    on the 10x composition). The remaining counts then scan warm blocks
+    (~free) and cover side-branch cuts outside the last cut's lineage —
+    so EVERY registered cut ends up materialized regardless of
+    registration order (a side-branch cut registered last just becomes
+    the first, fused count; pinned by
     test_materialize_cuts_side_branch_last)."""
     for c in reversed(cuts):
         c.count()
 
 
+@contextmanager
 def curation_run(docs: DataFrame, **kwargs):
     """Context-managed :func:`curate_corpus`: yields the curated frame;
     on exit, frees every checkpoint block the run's plan cuts created,
@@ -581,25 +583,15 @@ def curation_run(docs: DataFrame, **kwargs):
             curated.write.parquet(out_path)   # the sink action
         # blocks freed here; do not reuse `curated` past this point
 
-    The run is one :func:`.plancut.healed_cuts` scope: the release is
-    SCOPED to the run's own cuts (a frame the caller caches or
-    checkpoints while the run is open is NOT touched), and the Spark
-    4.1 reused-exchange zip defect self-heals there. The run's plan
-    cuts are MATERIALIZED before yielding (they all execute anyway —
-    this only moves the work before the sink), so the defect, which
-    every observed instance raises at cut materialization, surfaces
-    inside the healed build. r10: with the shuffle-free per-document
-    rewrites the DEFAULT composition no longer contains the
-    defect-triggering explode+window shape (probe: 3/3 clean with the
-    arrow default; immediate re-fire with gopher ``impl="codegen"``).
-    The final post-cut stage executing at the caller's sink is the one
-    unprotected surface; NOTES records no firing there. Direct
-    :func:`curate_corpus` callers at the firing composition/scale
-    should set ``spark.sql.exchange.reuse=false`` themselves."""
-
-    def _build(cuts: list) -> DataFrame:
+    The run is one :func:`.plancut.cut_scope`: the release is SCOPED to
+    the run's own cuts (a frame the caller caches or checkpoints while
+    the run is open is NOT touched). The run's plan cuts are
+    MATERIALIZED before yielding (they all execute anyway — this only
+    moves the work before the sink). A failure propagates after the
+    scope frees whatever cuts the run registered; README "Known
+    upstream defect" covers the one upstream Spark failure a custom
+    composition may hit here."""
+    with cut_scope() as cuts:
         out = curate_corpus(docs, **kwargs)
         _materialize_cuts(cuts)
-        return out
-
-    return healed_cuts(docs.sparkSession, _build)
+        yield out

@@ -11,11 +11,10 @@ CONCURRENT job in the same session persisted mid-run:
 - operators route their internal cuts through :func:`checkpoint_cut`,
   which registers the frame with the ambient registry when one is
   active (and is a plain ``localCheckpoint`` otherwise);
-- :func:`healed_cuts` is the one scope that owns a run's cuts: it runs
-  the build under a fresh :func:`cut_registry`, self-heals the Spark 4.1
-  reused-exchange zip defect, and frees the collected frames' blocks on
-  exit (:func:`release_cuts`). ``curate.curation_run`` and both
-  streaming ingest loops use it.
+- :func:`cut_scope` is the one scope that owns a run's cuts: it opens
+  a fresh registry and frees the collected frames' blocks on exit
+  (:func:`release_cuts`). ``curate.curation_run`` and both streaming
+  ingest loops use it.
 
 The registry is a ``contextvars.ContextVar`` — per-thread by
 construction, so two foreachBatch callbacks (document loop + embedding
@@ -26,12 +25,9 @@ from __future__ import annotations
 
 import contextvars
 import re
-import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
-
-from ..compat import context_key
 
 # Physical-plan exchange node names (see ensure_parallelism): a word
 # boundary before the optional Broadcast/Reused prefix keeps arbitrary
@@ -40,13 +36,13 @@ from ..compat import context_key
 _EXCHANGE_NODE = re.compile(r"\b(?:Broadcast|Reused)?Exchange\b")
 
 _CUT_REGISTRY: contextvars.ContextVar = contextvars.ContextVar(
-    "spark_plan_cut_registry", default=None
+    "spark_plan_cuts", default=None
 )
 
 
 def checkpoint_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     """``df.localCheckpoint(eager=False)`` that also registers the cut
-    frame with the ambient :func:`cut_registry`, when one is active.
+    frame with the ambient :func:`cut_scope`, when one is active.
     The frame is registered before anything executes, so a failed
     materialization still leaves the cut freeable through the registry;
     ``eager=True`` then counts the registered cut (an eager
@@ -58,35 +54,9 @@ def checkpoint_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     curate_corpus's funnel therefore counts boundary frames directly
     instead of using Observations.
 
-    Deliberately NO per-cut self-heal for the Spark 4.1 reused-
-    exchange zip defect here, although this call is where it fires
-    (under AQE, ``toRdd`` executes the plan's query stages during cut
-    CREATION). Measured r8, both candidate surgical retries fail with
-    the IDENTICAL List(32, 64) mismatch: (a) re-calling
-    ``localCheckpoint`` on the same Dataset re-runs its CACHED
-    QueryExecution — conf toggles are ignored; (b) a fresh compile
-    (``select("*")``) of just the failing cut under
-    exchange-reuse-off — and separately under AQE-off — re-fired on
-    every attempt (3/3, at two different cuts across two
-    compositions, including a firing with NO upstream cut at all, so
-    the failure is internal to one plan's AQE stage execution — the
-    realized layouts of two sibling consumers disagree, a
-    race-flavored materialization defect: the firing SITE moves
-    between runs and the full composition fires only in some
-    sessions). The checkpoint claims are not the carrier either —
-    every cut's LogicalRDD records UnknownPartitioning, so consumers
-    never trust a cut's layout. r9 closed the remaining causal
-    question (NOTES "r9 zip-defect cause bounding"): the minimal firing
-    composition STILL fires 3/3 when every cut is swapped for
-    ``persist()``(+count) — a pure SQL-plan + cache-manager execution
-    with no RDD checkpoint at all — so ``localCheckpoint`` is NOT a
-    contributing cause and a persist-based cut redesign would not
-    dodge the defect (it also reached the firing point ~5x slower);
-    while five stock-ops mocks of the same fan-out/cut SHAPE at the
-    same volume all complete clean, so the trigger needs the real
-    operators' plan complexity. Only rebuilding the whole cut chain
-    under SESSION-wide reuse-off has proven reliable (6/6 real heals
-    r8, plus r7's) — that lives in :func:`healed_cuts`."""
+    The upstream Spark 4.1 AQE "Can't zip RDDs" defect surfaces here
+    when a composition triggers it (cut creation executes the plan's
+    query stages); NOTES "zip-defect heal retired" has its history."""
     df = df.localCheckpoint(eager=False)
     reg = _CUT_REGISTRY.get()
     if reg is not None:
@@ -114,14 +84,20 @@ def mark_stage(
 
 
 @contextmanager
-def cut_registry(target: list):
-    """Collect every :func:`checkpoint_cut` made inside the block into
-    ``target`` (this thread only)."""
-    token = _CUT_REGISTRY.set(target)
+def cut_scope():
+    """The one plan-cut scope: collect every :func:`checkpoint_cut`
+    made inside the block (this thread only) into the yielded list, and
+    on exit free EXACTLY those cuts (:func:`release_cuts`) — never a
+    session-wide persistent-RDD delta, which would also unpersist
+    blocks a concurrent job created meanwhile. Frames derived from the
+    cuts MUST NOT be used past the block."""
+    cuts: list = []
+    token = _CUT_REGISTRY.set(cuts)
     try:
-        yield target
+        yield cuts
     finally:
         _CUT_REGISTRY.reset(token)
+        release_cuts(cuts)
 
 
 def release_cuts(frames: list) -> None:
@@ -145,185 +121,6 @@ def release_cuts(frames: list) -> None:
                     leaf.rdd().unpersist(False)
         except Exception:  # noqa: BLE001 — release must never fail a job
             pass
-
-
-# The Spark 4.1 reused-exchange defect's signature (see healed_cuts;
-# reproduce it standalone with tools/zip_defect_probe.py). Matched
-# version-tolerantly — on the message's load-bearing tokens,
-# case-insensitive, wording-flexible — rather than on one exact English
-# string, so a Spark upgrade that rewords the message (or wraps it in
-# an error class) doesn't silently turn the self-heal off. The probe is
-# the complementary guard: it tells us when an upgrade FIXES the defect
-# and the heal can be retired.
-_ZIP_MISMATCH_PATTERNS = (
-    # Spark 4.1 verbatim: "Can't zip RDDs with unequal numbers of
-    # partitions: List(32, 64)" — tolerated rewordings: Can't/Cannot/
-    # can not, RDD/RDDs, unequal/different number(s) of partitions
-    re.compile(
-        r"(?is)can\W{0,3}(?:no)?t\s+zip\s+rdds?\b"
-        r".{0,120}?(?:unequal|different)\b.{0,60}?partitions"
-    ),
-    # a future error-class wrapping of the same condition
-    re.compile(r"CANNOT_ZIP_RDDS?", re.IGNORECASE),
-)
-
-
-def _is_zip_mismatch(exc: BaseException) -> bool:
-    """True when ``exc`` (or anything in its EXPLICIT cause chain) is
-    the reused-exchange zip-mismatch defect. String-based by necessity
-    — Py4J surfaces the JVM SparkException as text (the whole Java
-    stack lands in one message, which the multiline-tolerant patterns
-    search directly) — but anchored on the failure's invariant tokens,
-    not one exact sentence.
-
-    Only ``__cause__`` (``raise ... from``) is walked, never the
-    implicit ``__context__`` (r9 ADVICE): an unrelated exception
-    raised WHILE a zip mismatch is being handled (say, inside
-    release_cuts or user cleanup) carries the zip error as its
-    ``__context__``, and classifying IT as the defect would both retry
-    a run that failed for a different reason and — worse — let
-    ``_mark_defect_seen`` permanently pin the whole SparkContext to
-    the reuse-off path."""
-    seen: set[int] = set()
-    e: BaseException | None = exc
-    while e is not None and id(e) not in seen:
-        seen.add(id(e))
-        msg = str(e)
-        if any(p.search(msg) for p in _ZIP_MISMATCH_PATTERNS):
-            return True
-        e = e.__cause__
-    return False
-
-
-# guards _REUSE_HELD only — never held across user work, so a nested
-# heal on the same thread (a healed run opened inside another healed
-# run's block) re-enters instead of deadlocking, and heals on
-# INDEPENDENT session clones (the two foreachBatch loops) proceed
-# concurrently. Entries keep a reference to their session wrapper so
-# id() keys cannot be recycled while an entry is live.
-_REUSE_LOCK = threading.Lock()
-_REUSE_HELD: dict[int, list] = {}  # id(sess) -> [depth, prev, sess]
-
-
-@contextmanager
-def _exchange_reuse_disabled(sess):
-    """Temporarily set ``spark.sql.exchange.reuse=false`` on ``sess``,
-    restoring (or unsetting) the previous value once the LAST nested
-    holder on that session exits. SESSION-WIDE while held — any
-    concurrent query on the same session plans without exchange reuse
-    for the duration (documented cost of the self-heal; the streaming
-    loops pass their per-batch session clone, which scopes the effect
-    to that batch). Refcounted per session: nested heals share one
-    save/restore (the saved "previous" value is the true pre-heal one,
-    not the inner heal's "false"), and the lock protects only the
-    bookkeeping, never the healed region itself."""
-    with _REUSE_LOCK:
-        ent = _REUSE_HELD.get(id(sess))
-        if ent is None:
-            prev = sess.conf.get("spark.sql.exchange.reuse", None)
-            sess.conf.set("spark.sql.exchange.reuse", "false")
-            ent = _REUSE_HELD[id(sess)] = [0, prev, sess]
-        ent[0] += 1
-    try:
-        yield
-    finally:
-        with _REUSE_LOCK:
-            ent[0] -= 1
-            if ent[0] == 0:
-                del _REUSE_HELD[id(sess)]
-                prev = ent[1]
-                if prev is not None:
-                    sess.conf.set("spark.sql.exchange.reuse", prev)
-                else:
-                    sess.conf.unset("spark.sql.exchange.reuse")
-
-
-# Sticky defect memory: the SparkContext's applicationId (a unique
-# string per context — unlike id(), it can't be recycled and needs no
-# object pin, so a stopped context stays collectable). One JVM context
-# per process, shared by every session clone — foreachBatch clones a
-# NEW session per batch, so keying on the SESSION would forget the
-# defect every batch and re-pay the doomed first attempt each time.
-# ``compat.context_key`` keeps the keying working under Connect
-# (spark.app.id conf, then session id as last resort).
-_DEFECT_SEEN: set[str] = set()
-
-
-def _mark_defect_seen(sess) -> None:
-    _DEFECT_SEEN.add(context_key(sess))
-
-
-def _defect_seen(sess) -> bool:
-    return context_key(sess) in _DEFECT_SEEN
-
-
-@contextmanager
-def healed_cuts(sess, build):
-    """The one plan-cut scope: run ``build(cuts)`` under a fresh
-    :func:`cut_registry` (``cuts`` is the registry list, which the build
-    may materialize), yield its result, and on exit free EXACTLY the
-    cuts it registered (:func:`release_cuts`) — never a session-wide
-    persistent-RDD delta, which would also unpersist blocks a
-    concurrent job created meanwhile. The yielded frames MUST NOT be
-    used past the block.
-
-    Self-heals the known Spark 4.1 planner defect: at sufficient plan
-    complexity on larger data, adaptive execution can materialize a
-    reused exchange with a partition count that disagrees with a
-    sibling consumer, failing with ``Can't zip RDDs with unequal
-    numbers of partitions`` (minimal reproduction in
-    ``tools/zip_defect_probe.py``; ablation matrix in NOTES; AQE off or
-    ``spark.sql.exchange.reuse=false`` both cure it). Every observed
-    instance fires while cuts materialize, so builds materialize their
-    cuts before returning. On exactly that failure the scope frees the
-    failed attempt's cuts, marks the defect on the SparkContext, and
-    re-runs the WHOLE build once under :func:`_exchange_reuse_disabled`,
-    keeping the conf off until exit so the caller's sink inside the
-    block runs under the working configuration too. A surgical per-cut
-    replan cannot work (evidence in :func:`checkpoint_cut`'s
-    docstring); the whole-chain rebuild healed 6/6 real firings (r8).
-    Any other error propagates unretried.
-
-    The memory is sticky: once marked, later scopes on the same context
-    (including per-batch session clones) build straight under reuse-off
-    and skip the doomed first attempt — ~24s per run at the 10x
-    composition (r8: fail+rebuild 111.7s vs straight reuse-off 87.7s).
-    The firing is race-flavored, so a later run might not have fired;
-    sticky trades that chance (reuse-off costs ~5-9% over the clean
-    shape) for never paying another abandoned attempt (~20-25%). A
-    fresh application still pays one abandoned attempt before the
-    memory engages.
-
-    A build with side effects must be rerun-safe: the retry re-reads
-    whatever the first attempt committed. The ingest loops satisfy
-    this with per-batch dynamic partition overwrites and read-back-
-    and-skip first-batch writes; plain appends would double on
-    retry."""
-    cuts: list = []
-
-    def attempt():
-        with cut_registry(cuts):
-            return build(cuts)
-
-    try:
-        if not _defect_seen(sess):
-            try:
-                out = attempt()
-            except Exception as e:
-                if not _is_zip_mismatch(e):
-                    raise
-                _mark_defect_seen(sess)
-                release_cuts(cuts)
-                cuts.clear()
-            else:
-                # the caller's block runs here, outside the retry: a
-                # failure in it propagates unretried
-                yield out
-                return
-        with _exchange_reuse_disabled(sess):
-            yield attempt()
-    finally:
-        release_cuts(cuts)
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:

@@ -519,7 +519,7 @@ def bigram_lm_tables(
     NOTE: the internal pair-count table is cut with a lazy
     ``checkpoint_cut`` (so both model tables share one materialization
     of the tokenize+explode, and a streaming batch composing this
-    inside a ``cut_registry`` can free the blocks per-batch). Under AQE
+    inside a ``cut_scope`` can free the blocks per-batch). Under AQE
     the cut means model CONSTRUCTION executes the counting stages
     eagerly at first use rather than fusing into the consumer's plan.
     """
@@ -1347,64 +1347,80 @@ def gopher_quality_features(
 def gopher_repetition_features(
     df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     top_ns: tuple = (2, 3, 4),
     dup_ns: tuple = (5, 6, 7, 8, 9, 10),
-    impl: str = "auto",
 ) -> DataFrame:
     """Append the Gopher REPETITION signals (per-document gram
-    frequencies). Two implementations, identical results (pinned by
-    the parametrized parity tests in ``test_gopher.py``):
+    frequencies):
 
-    ``impl="auto"`` (default) picks ``arrow`` when pandas + pyarrow
-    import on the driver and falls back to ``codegen`` otherwise —
-    the arrow path runs Python workers on the executors, which
-    no-Python-worker deployments lack (r10 ADVICE).
+    - ``dup_line_ratio`` / ``dup_line_char_ratio`` — fraction of
+      non-empty lines (/ their characters) that are repeats of an
+      earlier identical line;
+    - ``top_{n}gram_char_ratio`` (n in ``top_ns``) — characters covered
+      by ALL occurrences of the single most frequent word n-gram, over
+      the normalized text length;
+    - ``dup_{n}gram_char_ratio`` (n in ``dup_ns``) — characters covered
+      by every occurrence of every DUPLICATED n-gram. Like the open
+      implementations of this rule, overlapping occurrences are counted
+      per-occurrence (no interval union), so values can exceed 1 on
+      degenerate text — consumers threshold low (≤ ~0.15) where the
+      approximation is tight.
 
-    - ``impl="arrow"`` — the signals are PER-DOCUMENT, so no
-      cross-row data is needed: tokenization and line-splitting stay
-      native JVM expressions (the exact same ones the codegen path
-      uses, so normalization can never drift), and an Arrow-batched
-      pandas UDF counts exact grams per row, returning INTEGER counts
-      only — every ratio/rounding stays a native Spark expression, so
-      there is no float-parity risk. ZERO shuffle, embarrassingly
-      parallel, and counting is exact-string (strictly closer to the
-      DuckDB oracle than the codegen path's 64-bit-hash approximation).
-      Measured (10x sf0.1 replica, 64-partition input, forced full
-      evaluation): 1.3s vs 9.8s codegen — the codegen path's window
-      sort + two (doc, n, gram)-grain shuffles price ~9 rows per token
-      through the exchange for a feature that never needed cross-row
-      data. At 100 TB that shuffle is the bottleneck; this path has
-      none.
-    - ``impl="codegen"`` — the previous all-JVM lead-chain/stack
-      rewrite (kept as the no-Python-workers fallback and as the
-      parity cross-check); see :func:`_gopher_repetition_codegen`.
+    The signals are PER-DOCUMENT, so no cross-row data is needed:
+    tokenization and line-splitting stay native JVM expressions
+    (:func:`tokens`, the tokenizer every text operator shares), and an
+    Arrow-batched pandas UDF counts exact grams per row, returning
+    INTEGER counts only — every ratio/rounding stays a native Spark
+    expression, so there is no float-parity risk. ZERO shuffle,
+    embarrassingly parallel, and counting is exact-string: the values
+    equal the DuckDB ``gopher_quality`` oracle's (string grams) and the
+    pure-Python reference in ``test_gopher.py``. NOTES "r10 continued"
+    measures it against the former all-JVM window-and-shuffle plan
+    (1.3s vs 9.8s at the 10x replica).
 
     Small-input caveat handled here: a tiny parquet scan can arrive as
-    ONE partition, which would serialize the arrow path onto a single
-    Python worker — when the input has fewer partitions than the
-    cluster's default parallelism, the text rows are repartitioned
-    first (a narrow row-wise exchange of raw text, still far cheaper
-    than the codegen path's 9-rows-per-token gram exchanges)."""
-    if impl == "auto":
-        # the arrow path needs pandas + pyarrow Python workers on the
-        # executors (r10 ADVICE: the old default needed neither) —
-        # probe the driver env and fall back to the all-JVM codegen
-        # path when they are absent. Driver-side probing is a proxy:
-        # on a cluster whose executors diverge from the driver, pass
-        # impl explicitly.
-        try:
-            import pandas  # noqa: F401
-            import pyarrow  # noqa: F401
-            impl = "arrow"
-        except ImportError:
-            impl = "codegen"
-    if impl == "codegen":
-        return _gopher_repetition_codegen(df, text_col, id_col,
-                                          top_ns, dup_ns)
-    if impl != "arrow":
-        raise ValueError(f"unknown impl {impl!r} (auto|arrow|codegen)")
-    return _gopher_repetition_arrow(df, text_col, id_col, top_ns, dup_ns)
+    ONE partition, which would serialize the UDF onto a single Python
+    worker — when the input has fewer partitions than the cluster's
+    default parallelism, the text rows are repartitioned first (a
+    narrow row-wise exchange of raw text)."""
+    text = F.col(text_col)
+    norm = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
+    lines = F.filter(
+        F.transform(F.split(text, "\n"), lambda l: F.trim(l)),
+        lambda l: l != "",
+    )
+    from .plancut import ensure_parallelism
+
+    df = ensure_parallelism(df)
+    rep_counts = _gopher_rep_counts_udf(tuple(top_ns), tuple(dup_ns))
+    d = df.withColumns({
+        "__c": rep_counts(tokens(text), lines),
+        "__total": F.length(norm),
+    })
+    c = F.col("__c")
+    total = F.col("__total")
+    # a document with no lines or grams scores 0.0 on every ratio, as
+    # in the oracle and the Python reference: NULL text has NULL
+    # __total, so every `total > 0` gate falls to the 0.0 branch
+    cols = {
+        "dup_line_ratio": F.when(
+            c["line_occ"] > 0, F.round(c["line_dup"] / c["line_occ"], 6)
+        ).otherwise(0.0),
+        "dup_line_char_ratio": F.when(
+            (c["line_occ"] > 0) & (total > 0),
+            F.round(c["line_dup_chars"] / total, 6),
+        ).otherwise(0.0),
+    }
+    for n in top_ns:
+        cols[f"top_{n}gram_char_ratio"] = F.when(
+            (total > 0) & (c[f"top{n}_cnt"] > 1),
+            F.round(c[f"top{n}_cov"] / total, 6),
+        ).otherwise(0.0)
+    for n in dup_ns:
+        cols[f"dup_{n}gram_char_ratio"] = F.when(
+            total > 0, F.round(c[f"dup{n}_chars"] / total, 6)
+        ).otherwise(0.0)
+    return d.withColumns(cols).drop("__c", "__total")
 
 
 def _gopher_rep_counts_udf(top_ns: tuple, dup_ns: tuple):
@@ -1412,21 +1428,19 @@ def _gopher_rep_counts_udf(top_ns: tuple, dup_ns: tuple):
     configuration. Input: the JVM-built token array and trimmed
     non-empty line array. Output: a struct of LONG counts — per
     ``top_ns`` size the winning gram's ``(count, count*chars)`` (max by
-    that pair, matching the codegen path's ``max(struct(cnt, covered))``
-    and the oracle's packed-BIGINT max), per ``dup_ns`` size the
-    characters covered by all occurrences of duplicated grams, plus the
-    duplicate-line occurrence/char counts. Gram char length = summed
+    that pair, matching the oracle's packed-BIGINT max), per ``dup_ns``
+    size the characters covered by all occurrences of duplicated grams,
+    plus the duplicate-line occurrence/char counts. Gram char length = summed
     token lengths + (n-1) separators == ``length(array_to_string)``,
     via one prefix-sum per doc so gram strings are never built.
 
     Cost model caveat (r10 ADVICE): counting is exact and per-document
     in pure Python — all ``len(top_ns) + len(dup_ns)`` gram sizes per
     row — so a pathological multi-megabyte document makes one Arrow
-    batch slow and memory-heavy relative to the JVM path. Callers are
-    expected to run a word-count gate FIRST (``gopher_filter`` applies
-    its ``max_words`` bound before these counts; ``curation_run``
-    composes it that way); feed unbounded documents through
-    ``impl="codegen"`` instead."""
+    batch slow and memory-heavy. Unbounded documents go through a
+    word-count gate FIRST: ``gopher_filter`` applies its ``max_words``
+    bound before these counts, and ``curation_run`` composes it that
+    way."""
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -1501,217 +1515,7 @@ def _gopher_rep_counts_udf(top_ns: tuple, dup_ns: tuple):
     rep_counts.__annotations__ = {
         "toks": pd.Series, "lines": pd.Series, "return": pd.DataFrame,
     }
-    return F.pandas_udf(schema)(rep_counts), names
-
-
-def _gopher_repetition_arrow(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    top_ns: tuple,
-    dup_ns: tuple,
-) -> DataFrame:
-    text = F.col(text_col)
-    norm = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    lines = F.filter(
-        F.transform(F.split(text, "\n"), lambda l: F.trim(l)),
-        lambda l: l != "",
-    )
-    from .plancut import ensure_parallelism
-
-    df = ensure_parallelism(df)
-    rep_counts, _ = _gopher_rep_counts_udf(tuple(top_ns), tuple(dup_ns))
-    d = df.withColumns({
-        "__c": rep_counts(tokens(text), lines),
-        "__total": F.length(norm),
-    })
-    c = F.col("__c")
-    total = F.col("__total")
-    # guard shapes mirror the codegen path's missing-(doc, n)-row →
-    # fillna(0.0) semantics exactly: NULL text has NULL __total, so
-    # every `total > 0` gate falls to the 0.0 branch
-    cols = {
-        "dup_line_ratio": F.when(
-            c["line_occ"] > 0, F.round(c["line_dup"] / c["line_occ"], 6)
-        ).otherwise(0.0),
-        "dup_line_char_ratio": F.when(
-            (c["line_occ"] > 0) & (total > 0),
-            F.round(c["line_dup_chars"] / total, 6),
-        ).otherwise(0.0),
-    }
-    for n in top_ns:
-        cols[f"top_{n}gram_char_ratio"] = F.when(
-            (total > 0) & (c[f"top{n}_cnt"] > 1),
-            F.round(c[f"top{n}_cov"] / total, 6),
-        ).otherwise(0.0)
-    for n in dup_ns:
-        cols[f"dup_{n}gram_char_ratio"] = F.when(
-            total > 0, F.round(c[f"dup{n}_chars"] / total, 6)
-        ).otherwise(0.0)
-    return d.withColumns(cols).drop("__c", "__total")
-
-
-def _gopher_repetition_codegen(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_ns: tuple = (2, 3, 4),
-    dup_ns: tuple = (5, 6, 7, 8, 9, 10),
-) -> DataFrame:
-    """The all-JVM lead-chain/stack implementation (per-document gram
-    frequencies through a window + two aggregations):
-
-    - ``dup_line_ratio`` / ``dup_line_char_ratio`` — fraction of
-      non-empty lines (/ their characters) that are repeats of an
-      earlier identical line;
-    - ``top_{n}gram_char_ratio`` (n in ``top_ns``) — characters covered
-      by ALL occurrences of the single most frequent word n-gram, over
-      the normalized text length;
-    - ``dup_{n}gram_char_ratio`` (n in ``dup_ns``) — characters covered
-      by every occurrence of every DUPLICATED n-gram. Like the open
-      implementations of this rule, overlapping occurrences are counted
-      per-occurrence (no interval union), so values can exceed 1 on
-      degenerate text — consumers threshold low (≤ ~0.15) where the
-      approximation is tight.
-
-    Scale shape: tokens are exploded ONCE and hashed; every gram size
-    derives from the same ``lead`` chain in ONE codegen'd window pass
-    (the winnowing machinery without its sampling — the earlier
-    per-size interpreted ``ngrams`` HOF union re-tokenized |ns| times
-    and measured 1.7× slower at sf0.1, 4.2× at the 10× replica, where
-    the interpreted-HOF CPU dominated); gram char lengths come from the
-    summed token lengths, so gram STRINGS are never built. ``stack``
-    pivots the per-position gram family into narrow (id, n, gram-hash,
-    char-len) rows; line stats ride the same shape with n = 0. Then
-    one (id, n, gram) count aggregation and one per-(id, n) conditional
-    rollup, joined back (row count = docs × |ns|)."""
-    from pyspark.sql import Window
-
-    text = F.col(text_col)
-    norm = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    total_chars = F.length(norm)
-
-    base = df.select(id_col, text_col).withColumn("__total", total_chars)
-
-    # n = 0 family: trimmed non-empty lines
-    lines = F.filter(
-        F.transform(F.split(text, "\n"), lambda l: F.trim(l)),
-        lambda l: l != "",
-    )
-    line_part = base.select(
-        id_col, "__total", F.lit(0).alias("__n"),
-        F.explode(lines).alias("__g"),
-    ).select(
-        id_col, "__total", "__n",
-        F.xxhash64("__g").alias("__gh"),
-        F.length("__g").alias("__glen"),
-    )
-
-    ns = sorted(set(top_ns) | set(dup_ns))
-    max_n = ns[-1]
-    tok = base.select(
-        id_col, "__total",
-        F.posexplode(tokens(text)).alias("__pos", "__tok"),
-    ).select(
-        id_col, "__total", "__pos",
-        F.xxhash64("__tok").alias("__th"),
-        F.length("__tok").alias("__tl"),
-    )
-    w = Window.partitionBy(id_col).orderBy("__pos")
-    # materialize the lead chain first — a generator (stack) cannot
-    # contain window expressions
-    lead_cols = {}
-    for j in range(1, max_n):
-        lead_cols[f"__th{j}"] = F.lead("__th", j).over(w)
-        lead_cols[f"__tl{j}"] = F.lead("__tl", j).over(w)
-    led = tok.withColumns(lead_cols)
-    th = [F.col("__th")] + [F.col(f"__th{j}") for j in range(1, max_n)]
-    tl = [F.col("__tl")] + [F.col(f"__tl{j}") for j in range(1, max_n)]
-    stack_args = []
-    for n in ns:
-        glen = tl[0]
-        for j in range(1, n):
-            glen = glen + tl[j]
-        stack_args += [
-            F.lit(int(n)),
-            F.when(th[n - 1].isNotNull(), F.xxhash64(*th[:n])),
-            glen + F.lit(n - 1),
-        ]
-    gram_part = led.select(
-        id_col, "__total",
-        F.stack(
-            F.lit(len(ns)), *stack_args
-        ).alias("__n", "__gh", "__glen"),
-    ).filter(F.col("__gh").isNotNull())
-
-    exploded = line_part.unionByName(gram_part)
-
-    per_gram = exploded.groupBy(id_col, "__n", "__gh").agg(
-        F.count(F.lit(1)).alias("__cnt"),
-        F.first("__glen").alias("__glen"),
-        F.first("__total").alias("__total"),
-    )
-    per_doc = per_gram.groupBy(id_col, "__n").agg(
-        F.sum("__cnt").alias("__occ"),
-        F.sum(
-            F.when(F.col("__cnt") > 1, F.col("__cnt") - 1).otherwise(0)
-        ).alias("__dup_occ"),
-        F.sum(
-            F.when(
-                F.col("__cnt") > 1,
-                (F.col("__cnt") - 1) * F.col("__glen"),
-            ).otherwise(0)
-        ).alias("__dup_line_chars"),
-        F.sum(
-            F.when(
-                F.col("__cnt") > 1, F.col("__cnt") * F.col("__glen")
-            ).otherwise(0)
-        ).alias("__dup_chars"),
-        F.max(F.struct(F.col("__cnt"), (F.col("__cnt") * F.col("__glen"))
-                       .alias("__covered"))).alias("__top"),
-        F.first("__total").alias("__total"),
-    )
-
-    # fold all (id, n) rows into ONE row per doc with a conditional
-    # aggregation — a single broadcastable join back instead of one
-    # join per gram size
-    line_ratio = F.when(
-        F.col("__n") == 0, F.col("__dup_occ") / F.col("__occ")
-    )
-    line_char = F.when(
-        (F.col("__n") == 0) & (F.col("__total") > 0),
-        F.col("__dup_line_chars") / F.col("__total"),
-    )
-    aggs = [
-        F.round(F.max(line_ratio), 6).alias("dup_line_ratio"),
-        F.round(F.max(line_char), 6).alias("dup_line_char_ratio"),
-    ]
-    for n in top_ns:
-        expr = F.when(
-            (F.col("__n") == int(n))
-            & (F.col("__total") > 0)
-            & (F.col("__top.__cnt") > 1),
-            F.col("__top.__covered") / F.col("__total"),
-        ).when(F.col("__n") == int(n), F.lit(0.0))
-        aggs.append(
-            F.round(F.max(expr), 6).alias(f"top_{n}gram_char_ratio")
-        )
-    for n in dup_ns:
-        expr = F.when(
-            (F.col("__n") == int(n)) & (F.col("__total") > 0),
-            F.col("__dup_chars") / F.col("__total"),
-        ).when(F.col("__n") == int(n), F.lit(0.0))
-        aggs.append(
-            F.round(F.max(expr), 6).alias(f"dup_{n}gram_char_ratio")
-        )
-    wide = per_doc.groupBy(id_col).agg(*aggs)
-    out = df.join(wide, id_col, "left")
-    fills = {
-        "dup_line_ratio": 0.0, "dup_line_char_ratio": 0.0,
-        **{f"top_{n}gram_char_ratio": 0.0 for n in top_ns},
-        **{f"dup_{n}gram_char_ratio": 0.0 for n in dup_ns},
-    }
-    return out.fillna(fills)
+    return F.pandas_udf(schema)(rep_counts)
 
 
 def _first_failing(rules) -> "F.Column":
@@ -1742,7 +1546,6 @@ def gopher_filter(
     top_ngram_max: dict | None = None,
     dup_ngram_max: dict | None = None,
     collect_reasons: dict | None = None,
-    impl: str = "auto",
 ) -> DataFrame:
     """The full Gopher quality gate with the PUBLISHED thresholds as
     defaults (every one a parameter — curation policy belongs to the
@@ -1750,10 +1553,9 @@ def gopher_filter(
     rules, stop-word presence, and the complete repetition family.
     Returns surviving rows with the input schema. NULL text never
     survives. The cheap per-row rules filter FIRST — including the
-    ``max_words`` bound the arrow counting path's cost model relies
-    on — so the repetition pass (``impl="auto"``: arrow exact
-    counting when pandas/pyarrow are available, else the all-JVM
-    codegen gram-frequency shuffle) prices only their survivors.
+    ``max_words`` bound the repetition counter's cost model relies
+    on — so the repetition pass (:func:`gopher_repetition_features`)
+    prices only their survivors.
 
     ``collect_reasons`` (optional, a dict the caller owns) is the
     diagnostic reason channel: the call stores a LAZY narrow
@@ -1796,10 +1598,9 @@ def gopher_filter(
         gate = gate & ~cond
     out = cheap.filter(gate).select(*cols)
     rep = gopher_repetition_features(
-        out, text_col, id_col,
+        out, text_col,
         top_ns=tuple(sorted(top_ngram_max)),
         dup_ns=tuple(sorted(dup_ngram_max)),
-        impl=impl,
     )
     rep_rules = [
         ("max_dup_line_ratio", F.col("dup_line_ratio") > max_dup_line_ratio),

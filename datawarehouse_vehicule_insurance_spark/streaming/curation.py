@@ -33,7 +33,7 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.plancut import checkpoint_cut, healed_cuts, mark_stage
+from ..operators.plancut import checkpoint_cut, cut_scope, mark_stage
 from ..operators.dedup import (
     band_table,
     band_table_remove,
@@ -65,8 +65,8 @@ logger = logging.getLogger("datawarehouse_vehicule_insurance_spark.curation")
 
 def _require_classic_driver(spark: SparkSession, loop_name: str) -> None:
     """Fail FAST under Spark Connect (r12 verdict #7): the ingest loops'
-    per-batch block release and zip-defect heal assume the classic JVM
-    bridge (README "Spark Connect compatibility" — classic-only today).
+    per-batch block release assumes the classic JVM bridge (README
+    "Spark Connect compatibility" — classic-only today).
     Without this guard a Connect session would start the loop and only
     degrade mid-run into silent no-release behavior: checkpoint blocks
     accumulating for the query's whole lifetime with nothing reporting
@@ -78,10 +78,10 @@ def _require_classic_driver(spark: SparkSession, loop_name: str) -> None:
     if persistent_rdd_ids(spark) is None:
         raise RuntimeError(
             f"{loop_name} requires a classic (non-Connect) Spark driver: "
-            "per-batch checkpoint-block release and the zip-defect heal "
-            "need the JVM block-manager bridge, which this session does "
-            "not expose. Run ingest loops on a classic driver (see "
-            "README 'Spark Connect compatibility')."
+            "per-batch checkpoint-block release needs the JVM "
+            "block-manager bridge, which this session does not expose. "
+            "Run ingest loops on a classic driver (see README 'Spark "
+            "Connect compatibility')."
         )
 
 
@@ -120,20 +120,18 @@ def read_corpus(spark: SparkSession, corpus_path: str) -> DataFrame | None:
 def _run_batch(batch_df: DataFrame, batch_id: int, body) -> None:
     """The per-batch contract shared by BOTH ingest loops: run
     ``body(batch_df, batch_id)`` as one :func:`..operators.plancut.
-    healed_cuts` scope on the batch's session clone, so the batch frees
-    exactly its own cuts and self-heals the zip defect. Batch writes
-    meet the scope's rerun-safety contract: the document loop's appends
-    are dynamic partition overwrites and its artifact reads exclude the
-    in-flight batch id, while the embedding loop's first-batch
-    centroid/codebook writes are plain overwrites whose read-back
-    branches skip retraining when the tables already exist. Any NEW
-    batch write must do the same."""
+    cut_scope`, so the batch frees exactly its own cuts. Batch writes
+    must be rerun-safe because ``foreachBatch`` is at-least-once: a
+    replayed batch re-reads whatever its first attempt committed. The
+    document loop's appends are dynamic partition overwrites and its
+    artifact reads exclude the in-flight batch id, while the embedding
+    loop's first-batch centroid/codebook writes are plain overwrites
+    whose read-back branches skip retraining when the tables already
+    exist. Any NEW batch write must do the same."""
     if batch_df.isEmpty():
         return
-    with healed_cuts(
-        batch_df.sparkSession, lambda _cuts: body(batch_df, batch_id)
-    ):
-        pass
+    with cut_scope():
+        body(batch_df, batch_id)
 
 
 def _read_artifact(
@@ -533,8 +531,8 @@ def run_incremental_curation(
     transform), so the gap to the next boundary is the transform's
     own (quality-gate) rejections; without one the first boundary is
     ``input`` (they would be identical). It
-    fires once per ATTEMPT, so a replayed or self-healed batch reports
-    more than once — treat the last report per batch id as
+    fires once per ATTEMPT, so a replayed batch reports more than
+    once — treat the last report per batch id as
     authoritative. ``rejections_path`` (optional) appends each batch's
     per-document audit — one ``(id_col, stage)`` row per dropped doc
     (:func:`~..operators.curate.rejection_log` over the same
@@ -841,7 +839,7 @@ def run_incremental_curation(
         if on_batch_stats is not None:
             # after the appends (the boundary blocks are warm), before
             # the caller frees the batch's cuts. Fires once per
-            # ATTEMPT: a replayed/healed batch reports again, and the
+            # ATTEMPT: a replayed batch reports again, and the
             # last report is the authoritative one. Known diagnostic
             # overlap: when the final enabled stage is a funnel-only
             # boundary (source_cap / corpus_span_overlap), its cut

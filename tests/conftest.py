@@ -13,20 +13,6 @@ def spark():
     yield spark
 
 
-@pytest.fixture(autouse=True)
-def _reset_sticky_defect_memory():
-    """The zip-defect self-heal is deliberately STICKY per SparkContext
-    in production (skip the doomed first attempt on later runs); tests
-    share one context, so a test that triggers a heal would silently
-    switch every LATER test's composed runs to the reuse-off path.
-    Reset the memory around each test to keep them order-independent."""
-    from datawarehouse_vehicule_insurance_spark.operators import plancut
-
-    plancut._DEFECT_SEEN.clear()
-    yield
-    plancut._DEFECT_SEEN.clear()
-
-
 @pytest.fixture(scope="session")
 def raw_tables(spark):
     from datawarehouse_vehicule_insurance_spark.sources.generator import (

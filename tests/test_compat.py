@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from datawarehouse_vehicule_insurance_spark import compat
 from datawarehouse_vehicule_insurance_spark.compat import (
     ClosureBroadcast,
-    context_key,
     persistent_rdd_ids,
     safe_broadcast,
     safe_set_log_level,
@@ -27,15 +26,6 @@ class _NoContextSession:
     @property
     def sparkContext(self):
         raise AttributeError("sparkContext is not supported in Connect")
-
-
-class _ConfOnlySession(_NoContextSession):
-    class _Conf:
-        def get(self, key):
-            assert key == "spark.app.id"
-            return "app-via-conf-123"
-
-    conf = _Conf()
 
 
 class _BrokenBroadcastSession:
@@ -83,38 +73,6 @@ def test_safe_broadcast_unpicklable_raises_on_real_session(spark):
 
     with pytest.raises(Exception, match="cannot pickle this artifact"):
         safe_broadcast(spark, _UnpicklableArtifact())
-
-
-def test_context_key_fallback_chain(spark):
-    # classic: the real applicationId
-    assert context_key(spark) == spark.sparkContext.applicationId
-    # Connect-like with spark.app.id readable via conf
-    assert context_key(_ConfOnlySession()) == "app-via-conf-123"
-    # last resort: stable per session object within this process
-    s = _NoContextSession()
-    assert context_key(s) == context_key(s)
-    assert context_key(s) != context_key(_NoContextSession())
-
-
-def test_context_key_survives_cpython_id_reuse():
-    """r12 advice: the last-resort key must not be a bare id(spark) —
-    CPython reuses addresses after GC, which would let a later session
-    inherit a dead session's sticky-heal state. The cached-uuid key
-    stays unique even when the allocator hands back the same address."""
-    s1 = _NoContextSession()
-    k1 = context_key(s1)
-    addr = id(s1)
-    del s1
-    reused = None
-    for _ in range(128):  # CPython freelists usually reuse immediately
-        cand = _NoContextSession()
-        if id(cand) == addr:
-            reused = cand
-            break
-        del cand
-    s2 = reused if reused is not None else _NoContextSession()
-    assert context_key(s2) != k1
-    assert context_key(s2) == context_key(s2)
 
 
 def test_block_accounting_degrades(spark):

@@ -89,8 +89,7 @@ def test_quality_features_hand_computed(spark):
     assert got[1]["alpha_word_ratio"] == 1.0
 
 
-@pytest.mark.parametrize("impl", ["arrow", "codegen"])
-def test_repetition_features_match_python_reference(spark, impl):
+def test_repetition_features_match_python_reference(spark):
     rows = [
         (1, GOOD),
         (2, "repeat me now\nrepeat me now\nunique line here\n"
@@ -98,11 +97,15 @@ def test_repetition_features_match_python_reference(spark, impl):
         (3, "spam ham " * 30 + "end"),
         (4, "all words here are completely distinct from one another "
             "making nothing repeat at any gram size whatsoever"),
+        # repeated unicode-ellipsis lines: normalization is not ASCII-only
+        (5, "line one…\nline one…\n padded \nx y x y x y x y x y x y"),
     ]
+    # planted degenerate rows: NULL, empty, whitespace-only, one word
+    degenerate = [(101, None), (102, ""), (103, "   "), (104, "word")]
     got = {
         r["doc_id"]: r
         for r in gopher_repetition_features(
-            _df(spark, rows), impl=impl
+            _df(spark, rows + degenerate)
         ).collect()
     }
     for i, t in rows:
@@ -113,6 +116,22 @@ def test_repetition_features_match_python_reference(spark, impl):
     assert got[2]["dup_line_ratio"] == pytest.approx(2 / 4)
     assert got[3]["top_2gram_char_ratio"] > 0.5
     assert got[4]["dup_5gram_char_ratio"] == 0.0
+    # row 5 by hand: 50 normalized chars ("one…" is 4), 4 lines with
+    # one 9-char repeat; 17 tokens ending in six "x y" pairs
+    want5 = {
+        "dup_line_ratio": 1 / 4,
+        "dup_line_char_ratio": 9 / 50,
+        "top_2gram_char_ratio": 6 * 3 / 50,    # "x y" x6
+        "top_3gram_char_ratio": 5 * 5 / 50,    # "x y x" x5 (ties "y x y")
+        "top_4gram_char_ratio": 5 * 7 / 50,    # "x y x y" x5
+        "dup_5gram_char_ratio": (4 + 4) * 9 / 50,
+        "dup_10gram_char_ratio": 2 * 19 / 50,  # only "x y ... y" recurs
+    }
+    for k, v in want5.items():
+        assert got[5][k] == pytest.approx(v, abs=2e-6), k
+    feats = [c for c in got[1].asDict() if c not in ("doc_id", "text")]
+    for i, _ in degenerate:
+        assert {k: got[i][k] for k in feats} == dict.fromkeys(feats, 0.0), i
 
 
 def test_gopher_filter_each_rule_drops_its_violator(spark):
@@ -221,10 +240,9 @@ def test_cli_curate_gopher_flag(spark, tmp_path, capsys):
 
 @pytest.mark.slow
 def test_repetition_property_random_texts(spark):
-    """Property: BOTH impls' repetition ratios equal the python
-    reference on random multi-line texts drawn from a small word pool
-    (repeats likely) — one createDataFrame per example, both impls
-    checked against it."""
+    """Property: the repetition ratios equal the python reference on
+    random multi-line texts drawn from a small word pool (repeats
+    likely) — one createDataFrame per example."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -238,55 +256,14 @@ def test_repetition_property_random_texts(spark):
     )
     def run(lines):
         text = "\n".join(lines)
-        df = _df(spark, [(1, text)])
         ref = _ref_repetition(text)
-        for impl in ("arrow", "codegen"):
-            got = gopher_repetition_features(
-                df, impl=impl
-            ).first().asDict()
-            for k, v in ref.items():
-                assert got[k] == pytest.approx(v, abs=2e-6), (impl, k)
+        got = gopher_repetition_features(
+            _df(spark, [(1, text)])
+        ).first().asDict()
+        for k, v in ref.items():
+            assert got[k] == pytest.approx(v, abs=2e-6), k
 
     run()
-
-
-def test_repetition_impls_identical_on_real_documents(spark):
-    """Cross-impl pin on the real sf0.001 corpus (+ planted degenerate
-    rows): the arrow exact-count path and the codegen hash-count path
-    produce IDENTICAL rounded features row-by-row — the equivalence the
-    gate's oracle parity rides on. Planted rows cover NULL text, empty
-    text, all-whitespace text, a single word, and unicode ellipsis/NBSP
-    so the JVM-normalization-sharing claim is exercised beyond ASCII."""
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    extra = spark.createDataFrame(
-        [
-            (100001, None),
-            (100002, ""),
-            (100003, "   "),
-            (100004, "word"),
-            (100005, "line one…\nline one…\n padded \nx y x y "
-                     "x y x y x y x y"),
-        ],
-        "doc_id long, text string",
-    )
-    both = docs.unionByName(extra)
-    feat_cols = [
-        c for c in gopher_repetition_features(both).columns
-        if c not in ("doc_id", "text")
-    ]
-    a = gopher_repetition_features(both, impl="arrow") \
-        .select("doc_id", *feat_cols)
-    b = gopher_repetition_features(both, impl="codegen") \
-        .select("doc_id", *feat_cols)
-    # exact value comparison via anti-join on all columns (NaN-free:
-    # every feature is round()ed or 0.0)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    assert a.count() == both.count()
 
 
 def test_corpus_stats_datasheet(spark):
@@ -641,18 +618,3 @@ def test_feature_appenders_replace_colliding_columns(spark):
     out2 = gopher_quality_features(base2)
     assert len(out2.columns) == len(set(out2.columns)), out2.columns
     assert out2.collect()[0]["n_words"] == 10
-
-
-def test_gopher_repetition_impl_auto_matches_explicit(spark):
-    """``impl="auto"`` resolves to the arrow path when pandas/pyarrow
-    import (this environment has both) and must return exactly the
-    explicit paths' values."""
-    docs = spark.createDataFrame(
-        [(1, "a b a b a b c d e f g h"), (2, None)],
-        "doc_id long, text string",
-    )
-    auto = {r["doc_id"]: r.asDict()
-            for r in gopher_repetition_features(docs).collect()}
-    arrow = {r["doc_id"]: r.asDict()
-             for r in gopher_repetition_features(docs, impl="arrow").collect()}
-    assert auto == arrow

@@ -2359,197 +2359,6 @@ def test_curation_run_releases_checkpoint_blocks(spark):
     assert all(boiler not in t for t in got.values())
 
 
-def test_curation_run_zip_mismatch_retry(spark, monkeypatch):
-    """Known Spark 4.1 planner defect at the full composed stage set on
-    larger data: reused-exchange materialization can fail with "Can't
-    zip RDDs with unequal numbers of partitions" (10x-replica matrix in
-    NOTES round 7). curation_run retries once with
-    spark.sql.exchange.reuse=false, keeps it off for the block (the
-    caller's sink runs under the working config), and restores the
-    previous setting on exit. Unrelated errors propagate unretried."""
-    from datawarehouse_vehicule_insurance_spark.operators import curate as C
-
-    docs = _docs(spark, [(1, _fresh("a"))])
-    calls = []
-    real = C.curate_corpus
-
-    def flaky(d, **kw):
-        calls.append(spark.conf.get("spark.sql.exchange.reuse", None))
-        if len(calls) == 1:
-            raise RuntimeError(
-                "STAGE_MATERIALIZATION: Can't zip RDDs with unequal "
-                "numbers of partitions: List(32, 64)"
-            )
-        return real(d, **kw)
-
-    monkeypatch.setattr(C, "curate_corpus", flaky)
-    prev = spark.conf.get("spark.sql.exchange.reuse", None)
-    with C.curation_run(docs, min_tokens=1, min_alpha_ratio=0.0,
-                        max_dup_2gram_ratio=1.0) as out:
-        assert out.count() == 1
-        # inside the block the working config is active
-        assert spark.conf.get("spark.sql.exchange.reuse") == "false"
-    assert len(calls) == 2 and calls[1] == "false"
-    assert spark.conf.get("spark.sql.exchange.reuse", None) == prev
-
-    # a non-matching error is NOT retried
-    calls.clear()
-
-    def broken(d, **kw):
-        calls.append(1)
-        raise RuntimeError("some other planner failure")
-
-    monkeypatch.setattr(C, "curate_corpus", broken)
-    with pytest.raises(RuntimeError, match="other planner"):
-        with C.curation_run(docs, min_tokens=1, min_alpha_ratio=0.0):
-            pass
-    assert len(calls) == 1
-    assert spark.conf.get("spark.sql.exchange.reuse", None) == prev
-
-
-def test_curation_run_sticky_heal(spark, monkeypatch):
-    """Once the zip defect fires on a SparkContext, later composed
-    runs skip the doomed first attempt: curate_corpus is invoked
-    exactly ONCE per subsequent run, already under the working
-    reuse-off configuration (measured r8: fail+rebuild 111.7s vs
-    straight reuse-off 87.7s at the 10x composition; firing is
-    race-flavored, so sticky trades a possible small reuse-off
-    overhead on runs that might not have fired for never paying
-    another abandoned attempt). The memory is keyed on the CONTEXT so
-    a per-batch session clone still remembers."""
-    from datawarehouse_vehicule_insurance_spark.operators import curate as C
-    from datawarehouse_vehicule_insurance_spark.operators import plancut
-
-    docs = _docs(spark, [(1, _fresh("a"))])
-    kw = dict(min_tokens=1, min_alpha_ratio=0.0, max_dup_2gram_ratio=1.0)
-    confs = []
-    calls = []
-    real = C.curate_corpus
-
-    def tracking(d, **kws):
-        calls.append(1)
-        confs.append(
-            d.sparkSession.conf.get("spark.sql.exchange.reuse", None)
-        )
-        if len(calls) == 1:
-            raise RuntimeError(
-                "Can't zip RDDs with unequal numbers of partitions: "
-                "List(32, 64)"
-            )
-        return real(d, **kws)
-
-    monkeypatch.setattr(C, "curate_corpus", tracking)
-    prev = spark.conf.get("spark.sql.exchange.reuse", None)
-    with C.curation_run(docs, **kw) as out:   # attempt + heal
-        assert out.count() == 1
-    assert calls == [1, 1] and confs[1] == "false"
-
-    # second run on the same context: ONE build, straight reuse-off
-    with C.curation_run(docs, **kw) as out:
-        assert out.count() == 1
-    assert calls == [1, 1, 1] and confs[2] == "false"
-
-    # a session CLONE (the foreachBatch shape) shares the memory
-    clone = spark.newSession()
-    assert plancut._defect_seen(clone)
-
-    # conf restored after everything
-    assert spark.conf.get("spark.sql.exchange.reuse", None) == prev
-
-
-def test_zip_defect_version_pin():
-    """Retirement tripwire for the reused-exchange self-heal (VERDICT
-    r7 #1): the defect and its workaround are pinned to the Spark line
-    they were diagnosed on. When this test fails after a Spark
-    upgrade, run the standalone reproducer:
-
-        python tools/make_scaled_replica.py /root/testdata/sf0.1 /tmp/sfx10 10
-        python tools/zip_defect_probe.py /tmp/sfx10
-
-    exit 3 (not reproduced) THREE RUNS IN A ROW (the firing is
-    race-flavored — see the probe's docstring) -> Spark fixed it:
-    RETIRE the heal (the one retry scope, operators/plancut.py
-    healed_cuts, reduced to its cut registry and release; the trigger,
-    reuse toggle and defect memory beside it; their tests; and this
-    pin); exit 0 (still reproduced) -> keep the heal and extend the
-    version tuple below."""
-    import pyspark
-
-    known_defective = ("4.1.",)
-    assert any(
-        pyspark.__version__.startswith(v) for v in known_defective
-    ), (
-        f"Spark {pyspark.__version__} is outside the lines the "
-        "reused-exchange zip defect was diagnosed on "
-        f"{known_defective} — run tools/zip_defect_probe.py to decide "
-        "whether to retire the self-heal or extend this pin (see "
-        "docstring)"
-    )
-
-
-def test_zip_mismatch_trigger_is_version_tolerant():
-    """The heal trigger keys on the failure's invariant tokens, not one
-    exact English sentence (VERDICT r7 #1): rewordings a Spark upgrade
-    could plausibly ship still match, the cause/context chain is
-    walked, and unrelated partition/zip errors do NOT match."""
-    from datawarehouse_vehicule_insurance_spark.operators.plancut import (
-        _is_zip_mismatch,
-    )
-
-    matching = [
-        # Spark 4.1 verbatim
-        "Can't zip RDDs with unequal numbers of partitions: List(32, 64)",
-        # plausible rewordings: contraction, plural, adjective, casing
-        "Cannot zip RDDs with different numbers of partitions",
-        "can not zip RDD with unequal number of partitions (32 vs 64)",
-        "CAN'T ZIP RDDS WITH UNEQUAL NUMBERS OF PARTITIONS",
-        # an error-class wrapping of the same condition
-        "[CANNOT_ZIP_RDDS] zipPartitions requires equal partitioning",
-        # embedded in a Py4J/JVM stack dump
-        "org.apache.spark.SparkException: Job aborted.\nCaused by: "
-        "java.lang.IllegalArgumentException: Can't zip RDDs with "
-        "unequal\nnumbers of partitions: List(32, 64)\n\tat ...",
-    ]
-    for msg in matching:
-        assert _is_zip_mismatch(RuntimeError(msg)), msg
-
-    non_matching = [
-        "some other planner failure",
-        "Can't zip RDDs",  # no partition-mismatch clause
-        "unequal numbers of partitions in shuffle spec",  # no zip
-        "gzip codec can't decompress partitioned input",
-    ]
-    for msg in non_matching:
-        assert not _is_zip_mismatch(RuntimeError(msg)), msg
-
-    # the defect surfacing as the CAUSE of a wrapper error still heals
-    try:
-        try:
-            raise RuntimeError(
-                "Can't zip RDDs with unequal numbers of partitions"
-            )
-        except RuntimeError as inner:
-            raise ValueError("stage materialization failed") from inner
-    except ValueError as wrapped:
-        assert _is_zip_mismatch(wrapped)
-
-    # but the IMPLICIT __context__ chain is deliberately NOT walked
-    # (r9 ADVICE): an unrelated error raised while a zip mismatch is
-    # being handled must not be classified as the defect — retrying it
-    # would mask the real failure and _mark_defect_seen would
-    # permanently pin the context to reuse-off for the wrong reason
-    try:
-        try:
-            raise RuntimeError(
-                "Can't zip RDDs with unequal numbers of partitions"
-            )
-        except RuntimeError:
-            raise OSError("disk full while releasing cuts")
-    except OSError as during_handling:
-        assert during_handling.__context__ is not None
-        assert not _is_zip_mismatch(during_handling)
-
-
 def test_materialize_cuts_side_branch_last(spark):
     """curation_run's fused-materialization sweep must not depend on
     the registry's LAST entry being the most-downstream cut (VERDICT
@@ -2560,13 +2369,11 @@ def test_materialize_cuts_side_branch_last(spark):
     )
     from datawarehouse_vehicule_insurance_spark.operators.plancut import (
         checkpoint_cut,
-        cut_registry,
-        release_cuts,
+        cut_scope,
     )
 
     base = spark.range(100).withColumnRenamed("id", "k")
-    cuts: list = []
-    with cut_registry(cuts):
+    with cut_scope() as cuts:
         trunk = checkpoint_cut(base.filter("k % 2 = 0"))
         downstream = checkpoint_cut(
             trunk.groupBy((F.col("k") % 5).alias("g")).count()
@@ -2574,10 +2381,9 @@ def test_materialize_cuts_side_branch_last(spark):
         # side branch off the trunk, registered AFTER the most-
         # downstream cut — insertion order no longer = pipeline order
         side = checkpoint_cut(trunk.filter("k > 50"))
-    assert cuts == [trunk, downstream, side]
+        assert cuts == [trunk, downstream, side]
 
-    _materialize_cuts(cuts)
-    try:
+        _materialize_cuts(cuts)
         # every cut's checkpoint RDD holds blocks — including the
         # downstream cut that is NOT in the (reversed-)first cut's
         # lineage
@@ -2593,14 +2399,12 @@ def test_materialize_cuts_side_branch_last(spark):
             assert leaves.length() == 1, name
             rdd_id = leaves.apply(0).rdd().id()
             assert rdd_id in stored, f"{name} cut never materialized"
-    finally:
-        release_cuts(cuts)
 
 
 def test_checkpoint_cut_eager_failure_stays_freeable(spark):
     """An eager cut registers its lazy frame BEFORE counting it, so a
     cut whose materialization raises is still in the ambient registry
-    and the run's release frees its persistent RDD (an eager
+    and the scope's release frees its persistent RDD (an eager
     ``localCheckpoint`` raises before anything can register it, and
     its RDD leaks until the session ends)."""
     from datawarehouse_vehicule_insurance_spark.compat import (
@@ -2608,8 +2412,7 @@ def test_checkpoint_cut_eager_failure_stays_freeable(spark):
     )
     from datawarehouse_vehicule_insurance_spark.operators.plancut import (
         checkpoint_cut,
-        cut_registry,
-        release_cuts,
+        cut_scope,
     )
 
     bad = spark.range(8).withColumn(
@@ -2618,189 +2421,83 @@ def test_checkpoint_cut_eager_failure_stays_freeable(spark):
         .otherwise(F.lit(1)),
     )
     base = persistent_rdd_ids(spark)
-    cuts: list = []
-    with cut_registry(cuts):
+    with cut_scope() as cuts:
         with pytest.raises(Exception, match="planted failure"):
             checkpoint_cut(bad, eager=True)
-    assert len(cuts) == 1
-    assert persistent_rdd_ids(spark) - base  # the failed cut's RDD
-    release_cuts(cuts)
+        assert len(cuts) == 1
+        assert persistent_rdd_ids(spark) - base  # the failed cut's RDD
     assert persistent_rdd_ids(spark) - base == set()
 
 
 @pytest.mark.parametrize("surface", ["curation_run", "document_loop"])
-def test_heal_retry_frees_both_attempts_cuts(
+def test_build_fault_propagates_once_and_frees_cuts(
     spark, tmp_path, monkeypatch, surface
 ):
-    """The zip-defect retry frees the failed attempt's cuts as well as
-    the rebuild's: after the healed scope exits, no persistent RDD the
-    run created survives, on both surfaces that share the scope."""
+    """A build that takes cuts and then fails propagates after exactly
+    one build call, on both surfaces that share the cut scope. The
+    failure carries the upstream "Can't zip RDDs" text on purpose: no
+    message is special-cased, so nothing retries the build or writes
+    session conf, and no persistent RDD the run created survives."""
+    from pyspark.sql.conf import RuntimeConfig
+
     from datawarehouse_vehicule_insurance_spark.compat import (
         persistent_rdd_ids,
     )
     from datawarehouse_vehicule_insurance_spark.operators import curate as C
 
+    conf_sets = []
+    real_set = RuntimeConfig.set
+
+    def spy_set(self, key, value):
+        conf_sets.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy_set)
+    calls = []
     held = []
 
-    def failing_first(real):
+    def failing(real):
         def wrapped(*a, **kw):
+            calls.append(1)
             out = real(*a, **kw)
-            if not held:
-                out.count()  # the doomed attempt's cuts hold blocks
-                held.append(persistent_rdd_ids(spark) - base)
-                raise RuntimeError(
-                    "Can't zip RDDs with unequal numbers of partitions: "
-                    "List(32, 64)"
-                )
-            return out
+            out.count()  # the run's cuts hold blocks
+            held.append(persistent_rdd_ids(spark) - base)
+            raise RuntimeError(
+                "Can't zip RDDs with unequal numbers of partitions: "
+                "List(32, 64)"
+            )
         return wrapped
 
-    rows = [(1, _fresh("a")), (2, _fresh("b")), (3, _fresh("a"))]
-    base = persistent_rdd_ids(spark)
+    docs = _docs(spark, [(1, _fresh("a")), (2, _fresh("b")), (3, _fresh("a"))])
     if surface == "curation_run":
-        monkeypatch.setattr(
-            C, "curate_corpus", failing_first(C.curate_corpus)
-        )
-        with C.curation_run(
-            _docs(spark, rows), min_tokens=1, min_alpha_ratio=0.0,
-            max_dup_2gram_ratio=1.0,
-        ) as out:
-            assert sorted(r.doc_id for r in out.collect()) == [1, 2]
+        monkeypatch.setattr(C, "curate_corpus", failing(C.curate_corpus))
+
+        def run():
+            with C.curation_run(
+                docs, min_tokens=1, min_alpha_ratio=0.0,
+                max_dup_2gram_ratio=1.0,
+            ):
+                pass
     else:
         monkeypatch.setattr(
             SC, "curate_batch_incremental",
-            failing_first(SC.curate_batch_incremental),
+            failing(SC.curate_batch_incremental),
         )
         src, corpus_path, bands_path, hashes_path, ckpt = _paths(tmp_path)
-        _docs(spark, rows).coalesce(1).write.mode("append").parquet(src)
-        SC.run_incremental_curation(
-            spark, src, corpus_path, bands_path, hashes_path, ckpt,
-        ).awaitTermination()
-        assert _corpus_ids(spark, tmp_path) == [1, 2]
-    assert held and held[0]  # the failed attempt did take cuts
+        docs.coalesce(1).write.mode("append").parquet(src)
+
+        def run():
+            SC.run_incremental_curation(
+                spark, src, corpus_path, bands_path, hashes_path, ckpt,
+            ).awaitTermination()
+
+    base = persistent_rdd_ids(spark)
+    with pytest.raises(Exception, match="zip RDDs"):
+        run()
+    assert len(calls) == 1
+    assert conf_sets == []
+    assert held and held[0]  # the failed build did take cuts
     assert persistent_rdd_ids(spark) - base == set()
-
-
-def test_exchange_reuse_disabled_nested_and_concurrent(spark):
-    """The self-heal's conf toggle is refcounted per session: a heal
-    opened INSIDE another healed run's block (same thread, same
-    session) re-enters instead of deadlocking, the inner exit leaves
-    the conf off for the outer holder, and the outer exit restores the
-    true pre-heal value — not the inner heal's "false". A second
-    session clone toggles independently."""
-    from datawarehouse_vehicule_insurance_spark.operators.plancut import (
-        _exchange_reuse_disabled,
-    )
-
-    key = "spark.sql.exchange.reuse"
-    prev = spark.conf.get(key, None)
-    with _exchange_reuse_disabled(spark):
-        assert spark.conf.get(key) == "false"
-        with _exchange_reuse_disabled(spark):  # nested: must not hang
-            assert spark.conf.get(key) == "false"
-        # inner exit must NOT restore while the outer heal is live
-        assert spark.conf.get(key) == "false"
-
-        # an independent session clone heals concurrently and restores
-        # its own previous value without touching the outer session
-        clone = spark.newSession()
-        clone.conf.set(key, "true")
-        with _exchange_reuse_disabled(clone):
-            assert clone.conf.get(key) == "false"
-            assert spark.conf.get(key) == "false"
-        assert clone.conf.get(key) == "true"
-    assert spark.conf.get(key, None) == prev
-
-
-def test_loop_batch_zip_mismatch_retry(spark, tmp_path, monkeypatch):
-    """The streaming loop gets the same reused-exchange self-heal as
-    curation_run: a batch failing with the zip-mismatch defect is
-    re-run once under exchange-reuse-off (safe — batch writes are
-    idempotent dynamic overwrites), and the conf is restored after."""
-    src, corpus_path, bands_path, hashes_path, ckpt = _paths(tmp_path)
-    calls = []
-    real = SC.curate_batch_incremental
-
-    def flaky(batch, *a, **kw):
-        # read the conf from the MICRO-BATCH's session: foreachBatch
-        # clones the session, and the retry (correctly) toggles the
-        # clone's conf, not the outer session's
-        calls.append(
-            batch.sparkSession.conf.get("spark.sql.exchange.reuse", None)
-        )
-        if len(calls) == 1:
-            raise RuntimeError(
-                "Can't zip RDDs with unequal numbers of partitions: "
-                "List(32, 64)"
-            )
-        return real(batch, *a, **kw)
-
-    monkeypatch.setattr(SC, "curate_batch_incremental", flaky)
-    prev = spark.conf.get("spark.sql.exchange.reuse", None)
-    _docs(spark, [(1, BASE)]).coalesce(1).write.mode("append").parquet(src)
-    q = SC.run_incremental_curation(
-        spark, src, corpus_path, bands_path, hashes_path, ckpt,
-    )
-    q.awaitTermination()
-    assert _corpus_ids(spark, tmp_path) == [1]
-    assert len(calls) == 2 and calls[1] == "false"
-    assert spark.conf.get("spark.sql.exchange.reuse", None) == prev
-
-    # STICKY across batches: the defect memory is keyed on the shared
-    # SparkContext (each micro-batch gets a FRESH session clone), so
-    # the next batch runs exactly once, already under reuse-off — no
-    # doomed first attempt per batch
-    _docs(spark, [(2, _fresh("sticky"))]).coalesce(1).write.mode(
-        "append").parquet(src)
-    q = SC.run_incremental_curation(
-        spark, src, corpus_path, bands_path, hashes_path, ckpt,
-    )
-    q.awaitTermination()
-    assert _corpus_ids(spark, tmp_path) == [1, 2]
-    assert len(calls) == 3 and calls[2] == "false"
-    assert spark.conf.get("spark.sql.exchange.reuse", None) == prev
-
-
-def test_embedding_loop_zip_mismatch_retry(spark, tmp_path, monkeypatch):
-    """The embedding ingest loop gets the same reused-exchange
-    self-heal as the document loop — diagnostic mode adds boundary
-    cuts to its batch plan, the defect's known trigger shape."""
-    from datawarehouse_vehicule_insurance_spark.operators import (
-        similarity as S,
-    )
-
-    src = str(tmp_path / "src")
-    calls = []
-    real = S.ivf_centroids_table
-
-    def flaky(*a, **kw):
-        calls.append(
-            a[0].sparkSession.conf.get("spark.sql.exchange.reuse", None)
-        )
-        if len(calls) == 1:
-            raise RuntimeError(
-                "Can't zip RDDs with unequal numbers of partitions: "
-                "List(32, 64)"
-            )
-        return real(*a, **kw)
-
-    # the loop imports ivf_centroids_table from similarity at call
-    # time -> patch it at its home module
-    monkeypatch.setattr(S, "ivf_centroids_table", flaky)
-    prev = spark.conf.get("spark.sql.exchange.reuse", None)
-    _vecs(spark, [(1, _unit_row(0))]).coalesce(1).write.mode(
-        "append").parquet(src)
-    q = SC.run_incremental_embedding_ingest(
-        spark, src, str(tmp_path / "corpus"), str(tmp_path / "cents"),
-        str(tmp_path / "asg"), str(tmp_path / "ckpt"), n_cells=2,
-    )
-    q.awaitTermination()
-    assert sorted(
-        r["vec_id"]
-        for r in spark.read.parquet(str(tmp_path / "corpus")).collect()
-    ) == [1]
-    assert len(calls) == 2 and calls[1] == "false"
-    assert spark.conf.get("spark.sql.exchange.reuse", None) == prev
 
 
 @pytest.mark.slow

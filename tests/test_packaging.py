@@ -35,11 +35,12 @@ def project():
 
 def test_pyproject_contract(project):
     proj = project["project"]
-    # the hard dep is the tested Spark line; Arrow kernels are the
-    # documented OPT-IN extra (README "Executor-side Python deps")
-    assert any(d.startswith("pyspark") for d in proj["dependencies"])
-    arrow = proj["optional-dependencies"]["arrow"]
-    assert {d.split(">=")[0] for d in arrow} == {"pandas", "pyarrow", "numpy"}
+    # the hard deps are the tested Spark line and the pandas/pyarrow/
+    # numpy stack the Arrow kernels need on every executor (README
+    # "Executor-side Python dependencies")
+    deps = {d.split(">=")[0] for d in proj["dependencies"]}
+    assert deps == {"pyspark", "pandas", "pyarrow", "numpy"}
+    assert "arrow" not in proj["optional-dependencies"]
     assert proj["scripts"]["dwvi-spark"].startswith(
         "datawarehouse_vehicule_insurance_spark"
     )
@@ -58,8 +59,14 @@ def _check_wheel(whl: Path, expect_member: str):
         assert any(expect_member in n for n in names)
         meta = zf.read(f"{di}/METADATA").decode()
         assert "Name: datawarehouse-vehicule-insurance-spark" in meta
-        assert "Requires-Dist: pyspark" in meta
-        assert 'extra == "arrow"' in meta
+        requires = [
+            ln.split(": ", 1)[1] for ln in meta.splitlines()
+            if ln.startswith("Requires-Dist: ")
+        ]
+        for pkg in ("pyspark", "pandas", "pyarrow", "numpy"):
+            # a base dependency: listed, and never behind an extra marker
+            hits = [r for r in requires if r.startswith(pkg)]
+            assert hits and not any("extra ==" in r for r in hits), pkg
         # RECORD hashes must verify (PEP 376) — pip checks these on
         # install, so a drifting backend fails here first
         for line in zf.read(f"{di}/RECORD").decode().splitlines():

@@ -1248,9 +1248,7 @@ def test_gopher_arrow_build_runs_upstream_shuffle_once(spark):
     built, build_jobs = _jobs_during(
         spark,
         "gopher_build_probe",
-        lambda: TA.gopher_repetition_features(
-            shuffled, text_col="text", id_col="doc_id"
-        ),
+        lambda: TA.gopher_repetition_features(shuffled, text_col="text"),
     )
     assert build_jobs == 0, (
         f"building gopher over a shuffled input launched {build_jobs} "
@@ -1261,7 +1259,7 @@ def test_gopher_arrow_build_runs_upstream_shuffle_once(spark):
     want = {
         r["doc_id"]: r.asDict()
         for r in TA.gopher_repetition_features(
-            docs, text_col="text", id_col="doc_id"
+            docs, text_col="text"
         ).collect()
     }
     assert got == want

@@ -27,9 +27,9 @@ Usage: python tools/pipeline_probe.py [--funnel] [--ablate-each]
        #   measure warm-block scans, and un-fusing would reintroduce
        #   the 2x barrier cost — so stage cost is measured by
        #   ABLATION instead). Re-times the full composition once more
-       #   (so the baseline shares the sticky-heal state with the
-       #   ablated runs), then re-runs it nine times with one optional
-       #   stage dropped each time; marginal_sec = baseline - ablated.
+       #   (so the baseline runs as warm as the ablated runs), then
+       #   re-runs it nine times with one optional stage dropped each
+       #   time; marginal_sec = baseline - ablated.
        #   Small negatives are host noise; a stage can also show a
        #   negative by DROPPING docs later stages then don't pay for.
        # --ablate-fresh (r10 verdict #8): the same ablation table but
@@ -68,8 +68,7 @@ args = [a for a in args if a not in ("--funnel", "--ablate-each",
                                      "--ablate-fresh")]
 dirs = args or ["/root/testdata/sf0.1"]
 
-# stage name -> the run_kw keys that enable it (shared naming with
-# tools/zip_defect_probe.py --drop)
+# stage name -> the run_kw keys that enable it
 ABLATABLE = {
     "lang": ("lang_allow",),
     "line": ("line_dedup_min_freq",),
@@ -144,6 +143,10 @@ spark.sparkContext.setLogLevel("ERROR")
 from datawarehouse_vehicule_insurance_spark.operators.curate import (  # noqa: E402
     curation_run,
 )
+from datawarehouse_vehicule_insurance_spark.operators.plancut import (  # noqa: E402
+    cut_scope,
+    release_cuts,
+)
 from datawarehouse_vehicule_insurance_spark.operators.text_analysis import (  # noqa: E402
     bigram_lm_tables,
 )
@@ -169,13 +172,16 @@ for sf_dir in dirs:
     # coalesce(1) before the eager pin: the tables are vocab-sized, and
     # localCheckpoint straight off an AQE-replanned shuffle can hit the
     # "Can't zip RDDs with unequal numbers of partitions" materialization
-    # bug
-    lm = bigram_lm_tables(docs.filter(F.col("doc_id") % 7 == 0))
-    lm = tuple(t.coalesce(1).localCheckpoint(eager=True) for t in lm)
-    target = bigram_lm_tables(docs.filter(F.col("doc_id") % 7 == 1))
-    target = tuple(
-        t.coalesce(1).localCheckpoint(eager=True) for t in target
-    )
+    # bug. Built inside a cut scope: each pinned table holds its own
+    # blocks, so the LM builder's internal pair-count cuts are freed
+    # here instead of lingering into the leak check below
+    with cut_scope():
+        lm = bigram_lm_tables(docs.filter(F.col("doc_id") % 7 == 0))
+        lm = tuple(t.coalesce(1).localCheckpoint(eager=True) for t in lm)
+        target = bigram_lm_tables(docs.filter(F.col("doc_id") % 7 == 1))
+        target = tuple(
+            t.coalesce(1).localCheckpoint(eager=True) for t in target
+        )
     t_models = time.time() - t0
 
     # ONE config for the timed run and the --funnel rerun — the
@@ -216,10 +222,9 @@ for sf_dir in dirs:
 
     ablate_extras = {}
     if ablate_mode:
-        # a fresh full-composition baseline AFTER the first timed run:
-        # if the zip defect fired there, the sticky heal has every
-        # later run (baseline and ablations alike) on the reuse-off
-        # path, so the subtraction compares like with like
+        # a fresh full-composition baseline AFTER the first timed run,
+        # so the baseline and the ablations all run on a warm JVM and
+        # the subtraction compares like with like
         t0 = time.time()
         with curation_run(docs, **run_kw) as curated:
             n_base = curated.count()
@@ -264,10 +269,6 @@ for sf_dir in dirs:
     # storage set against the per-directory baseline: anything left is
     # a genuine plan-cut leak and fails the probe (multi-dir runs
     # would otherwise count earlier iterations' models as phantoms)
-    from datawarehouse_vehicule_insurance_spark.operators.plancut import (
-        release_cuts,
-    )
-
     release_cuts([*lm, *target])
     leaked = len(_storage_ids() - base_ids)
     any_leak = any_leak or leaked > 0
