@@ -19,7 +19,9 @@ from __future__ import annotations
 import logging
 import math
 import random
+import sys
 
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -28,6 +30,35 @@ from ..compat import safe_broadcast
 logger = logging.getLogger(
     "datawarehouse_vehicule_insurance_spark.similarity"
 )
+
+# executor closures call the module-level numpy kernels below
+# (_unit_rows, _pq_tables, _pq_block_topk): pickle them BY VALUE, or a
+# worker would need this package importable to unpickle them
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def _unit_rows(M):
+    """Rows of ``M`` scaled to unit L2 norm (zero rows stay zero)."""
+    import numpy as np
+
+    norms = np.linalg.norm(M, axis=1, keepdims=True)
+    norms[norms == 0.0] = 1.0
+    return M / norms
+
+
+def _rank_topk(scored: DataFrame, query_id: str, cand_id: str, k: int,
+               sim: str = "sim", out: str = "cosine_sim") -> DataFrame:
+    """The exact per-query top-k tail shared by every tier: rank by
+    ``sim`` descending (ties by ``cand_id``), keep ``rank <= k``, round
+    the score to 6 places as ``out``."""
+    w = Window.partitionBy(query_id).orderBy(
+        F.col(sim).desc(), F.col(cand_id).asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id, cand_id, F.round(sim, 6).alias(out), "rank")
+    )
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -104,18 +135,12 @@ def cosine_topk(
     set is small by construction); each candidate partition computes its
     similarities locally, then a per-query window picks top-k — with AQE
     the final rank shuffle carries only (query, cand, sim) triples."""
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("sim").desc(), F.col(cand_id).asc()
-    )
-    return (
+    return _rank_topk(
         F.broadcast(queries)
         .crossJoin(candidates)
         .withColumn("sim", cosine_sim(F.col(query_vec), F.col(cand_vec)))
-        .filter(_rankable_sim())
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, cand_id, F.round("sim", 6).alias("cosine_sim"),
-                "rank")
+        .filter(_rankable_sim()),
+        query_id, cand_id, k,
     )
 
 
@@ -548,10 +573,7 @@ def _ivf_assign(
     def _fn(batches):
         C = b.value
         for pdf in batches:
-            M = np.array(list(pdf[vec_name]), dtype=np.float64)
-            norms = np.linalg.norm(M, axis=1, keepdims=True)
-            norms[norms == 0.0] = 1.0
-            M /= norms
+            M = _unit_rows(np.array(list(pdf[vec_name]), dtype=np.float64))
             sims = M @ C.T
             ids = pdf[id_name].to_numpy()
             if top == 1:
@@ -782,19 +804,13 @@ def ivf_topk(
             candidates.select(cand_id, cand_vec), cand_id
         )
 
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("sim").desc(), F.col(cand_id).asc()
-    )
-    return (
+    return _rank_topk(
         F.broadcast(q_cells)
         .join(cand_cells, "__cell")
         .withColumn("sim", cosine_sim(F.col(query_vec), F.col(cand_vec)))
         .filter(_rankable_sim())
-        .dropDuplicates([query_id, cand_id])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, cand_id, F.round("sim", 6).alias("cosine_sim"),
-                "rank")
+        .dropDuplicates([query_id, cand_id]),
+        query_id, cand_id, k,
     )
 
 
@@ -869,18 +885,11 @@ def lsh_topk(
         .select(query_id, query_vec, cand_id, cand_vec)
         .dropDuplicates([query_id, cand_id])
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("sim").desc(), F.col(cand_id).asc()
-    )
-    return (
+    return _rank_topk(
         pairs.withColumn(
             "sim", cosine_sim(F.col(query_vec), F.col(cand_vec))
-        )
-        .filter(_rankable_sim())
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, cand_id, F.round("sim", 6).alias("cosine_sim"),
-                "rank")
+        ).filter(_rankable_sim()),
+        query_id, cand_id, k,
     )
 
 
@@ -909,13 +918,7 @@ def _train_pq(
         .limit(train_sample)
         .collect()
     )
-
-    def _unit(M):
-        norms = np.linalg.norm(M, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        return M / norms
-
-    X = _unit(np.array([r[1] for r in train_rows], dtype=np.float64))
+    X = _unit_rows(np.array([r[1] for r in train_rows], dtype=np.float64))
     return _lloyd_books(X, m, ks, kmeans_iters, seed)
 
 
@@ -1068,9 +1071,7 @@ def _pq_encode(
                 pdf = pdf[keep]
             if not len(M):
                 continue
-            norms = np.linalg.norm(M, axis=1, keepdims=True)
-            norms[norms == 0.0] = 1.0
-            M /= norms
+            M = _unit_rows(M)
             codes = np.empty((len(M), m), dtype=np.int32)
             for j, C in enumerate(B):
                 Mj = M[:, j * sub:(j + 1) * sub]
@@ -1094,140 +1095,189 @@ def _pq_encode(
     )
 
 
-def _pq_scan_distributed(
+# PQ scan sizing, read on the driver when a scan is built. A scored
+# matrix holds at most _QUERY_BLOCK_ROWS queries × one code batch (an
+# Arrow batch, or a rectangle block of about _CODE_BLOCK_ROWS codes);
+# queries whose LUT (nq·m·ks float64) fits in _LUT_BYTES collect to the
+# driver, more take the rectangle.
+_QUERY_BLOCK_ROWS = 1024
+_CODE_BLOCK_ROWS = 16384
+_LUT_BYTES = 64 << 20
+
+
+def _pq_tables(Q, books, cents, n_probe):
+    """Per-query PQ scoring tables for the raw query rows ``Q``: the
+    rows are unit-normalized, then ``LUT[q, j, c] = ⟨q_j, book_j[c]⟩``
+    (nq, m, ks). With IVF ``cents`` also the coarse term ⟨q, c(cell)⟩
+    (nq, n_cells) and the mask of each query's ``n_probe`` closest
+    cells; both are None for plain PQ. Returns (LUT, coarse, mask)."""
+    import numpy as np
+
+    m, sub = len(books), books[0].shape[1]
+    Q = _unit_rows(np.asarray(Q, dtype=np.float64).reshape(-1, m * sub))
+    lut = np.stack(
+        [Q[:, j * sub:(j + 1) * sub] @ books[j].T for j in range(m)],
+        axis=1,
+    )
+    if cents is None:
+        return lut, None, None
+    cell_sims = Q @ cents.T
+    order = np.argsort(-cell_sims, axis=1)
+    probe = np.zeros_like(cell_sims, dtype=bool)
+    np.put_along_axis(probe, order[:, :n_probe], True, axis=1)
+    return lut, cell_sims, probe
+
+
+def _pq_block_topk(tables, qids, cids, codes, cells, k, q_block):
+    """Score one code batch (``cids`` with (n, m) ``codes``, plus their
+    IVF ``cells``) against the queries' :func:`_pq_tables`, at most
+    ``q_block`` queries at a time, so a scored matrix never exceeds
+    q_block × n float64 whatever the query count. ``pq_sim`` is the
+    coarse term (IVF) plus the per-subspace LUT sum; cells outside a
+    query's probe set score -inf. Returns (query ids, cand ids, sims) of
+    each query's local top-k with non-finite scores dropped."""
+    import numpy as np
+
+    lut, coarse, probe = tables
+    top = min(k, len(cids))
+    out = [(qids[:0], cids[:0], np.zeros(0))]
+    for s in range(0, len(qids), q_block):
+        e = s + q_block
+        # np.take gathers columns ~4× faster than fancy indexing
+        if coarse is None:
+            sims = np.zeros((len(qids[s:e]), len(cids)))
+        else:
+            sims = np.take(coarse[s:e], cells, axis=1)
+        for j in range(lut.shape[1]):
+            sims += np.take(lut[s:e, j, :], codes[:, j], axis=1)
+        if probe is not None:
+            sims[~np.take(probe[s:e], cells, axis=1)] = -np.inf
+        part = np.argpartition(-sims, top - 1, axis=1)[:, :top]
+        vals = np.take_along_axis(sims, part, axis=1).ravel()
+        keep = np.isfinite(vals)
+        out.append((np.repeat(qids[s:e], top)[keep],
+                    cids[part].ravel()[keep], vals[keep]))
+    return [np.concatenate(col) for col in zip(*out)]
+
+
+def _pq_scan(
     queries: DataFrame,
     codes_df: DataFrame,
     books,
     cents,
     n_probe: int | None,
     k: int,
-    m: int,
     query_id: str,
     query_vec: str,
     cand_id: str,
-    n_rows: tuple[int | None, int | None],
-    query_block_rows: int,
-    code_block_rows: int,
 ) -> DataFrame:
-    """Rectangle-grid PQ code scan with the query side staying a
-    DataFrame — the large-nq path shared by :func:`pq_topk` and
-    :func:`ivfpq_topk` (r13 verdict #1: the collect path's driver-side
-    query materialization and O(nq·n_probe) ``isin`` literal don't
-    survive re-ranking-a-shard query counts).
+    """The one PQ code scan behind :func:`pq_topk` (``cents=None``) and
+    :func:`ivfpq_topk` → (query_id, cand_id, pq_sim, rank).
 
-    Same grid as :func:`cross_corpus_cosine_pairs`: queries block by
-    ``pmod(xxhash64(id), bq)``, codes by ``pmod(xxhash64(id), bc)``,
-    each side fans out across the other's block axis so every (i, j)
-    pair meets in exactly one cogrouped task. Per task: unit-normalize
-    the query block, build ITS lookup tables from the broadcast
-    codebooks (nq_block·m·ks — never the global nq LUT), score the code
-    block, emit the block-local per-query top-k. Shuffle bytes are the
-    rectangle's inherent cost — query vectors replicate ``bc`` times
-    and m-byte codes ``bq`` times; size the blocks so both legs stay
-    bounded (codes are ~dim·4/m× smaller than vectors, hence the much
-    larger default ``code_block_rows``). Only Q·k rows per task reach
-    the final exact-rank window.
-
-    With ``cents``/``n_probe`` (the IVF-PQ tier) each task additionally
-    computes its query block's coarse term and probe mask from the
-    broadcast centroids — the probed-cell READ bounding happens before
-    this function via a broadcast semi-join (see :func:`ivfpq_topk`).
-    """
-    import math as _math
-
+    The query count picks the shape. Up to ``_LUT_BYTES // (m·ks·8)``
+    queries collect to the driver: their tables are built once and
+    broadcast, IVF prunes the code scan to the union of probed cells as
+    an ``isin`` literal (a filter Catalyst pushes into a cell-partitioned
+    persisted ``codes=`` layout), and one ``mapInPandas`` pass scores
+    each Arrow batch. More queries stay a DataFrame and run the
+    cogrouped block rectangle (same grid as
+    :func:`cross_corpus_cosine_pairs`): queries block by
+    ``pmod(xxhash64(id), bq)`` at ``_QUERY_BLOCK_ROWS`` per block, codes
+    by ``_CODE_BLOCK_ROWS``, each side fans out across the other's
+    block axis so every pair meets in exactly one task, and each task
+    builds its own query block's tables from the broadcast model; IVF
+    bounds the read with a broadcast LEFT-SEMI join on the ≤ n_cells
+    probed-cell frame (:func:`_probed_cells_frame`), which Catalyst
+    turns into dynamic partition pruning. Both shapes score through
+    :func:`_pq_block_topk`, so a scored matrix holds at most
+    ``_QUERY_BLOCK_ROWS`` × one code batch float64, and only each
+    batch's per-query top-k reaches the final exact-rank window."""
     import numpy as np
     import pandas as pd
 
     spark = codes_df.sparkSession
-    nq = n_rows[0] if n_rows[0] is not None else queries.count()
-    nc = n_rows[1] if n_rows[1] is not None else codes_df.count()
-    bq = max(1, _math.ceil(nq / query_block_rows))
-    bc = max(1, _math.ceil(nc / code_block_rows))
-    sub = books[0].shape[1]
-    b_model = safe_broadcast(spark, (books, cents))
-
-    qside = (
-        queries.select(query_id, query_vec)
-        .withColumn(
-            "__bi",
-            F.pmod(F.xxhash64(F.col(query_id).cast("string")),
-                   F.lit(bq)).cast("int"),
-        )
-        .withColumn("__bj", F.explode(F.sequence(F.lit(0), F.lit(bc - 1))))
-    )
-    ccols = [cand_id, "__code"] + (["__cell"] if cents is not None else [])
-    cside = (
-        codes_df.select(*ccols)
-        .withColumn(
-            "__bj",
-            F.pmod(F.xxhash64(F.col(cand_id).cast("string")),
-                   F.lit(bc)).cast("int"),
-        )
-        .withColumn("__bi", F.explode(F.sequence(F.lit(0), F.lit(bq - 1))))
-    )
-
-    def _pair(qpdf, cpdf):
-        if not len(qpdf) or not len(cpdf):
-            return pd.DataFrame({
-                query_id: qpdf[query_id].iloc[:0],
-                cand_id: cpdf[cand_id].iloc[:0],
-                "pq_sim": pd.Series(dtype="float64"),
-            })
-        books_, cents_ = b_model.value
-        Q = np.array(list(qpdf[query_vec]), dtype=np.float64)
-        norms = np.linalg.norm(Q, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        Q /= norms
-        L = np.stack(
-            [Q[:, j * sub:(j + 1) * sub] @ books_[j].T for j in range(m)],
-            axis=1,
-        )
-        codes_m = np.array(list(cpdf["__code"]), dtype=np.int64)
-        n = len(cpdf)
-        if cents_ is None:
-            sims = np.zeros((len(qpdf), n), dtype=np.float64)
-        else:
-            cell_sims = Q @ cents_.T
-            t = min(n_probe, cell_sims.shape[1])
-            order = np.argsort(-cell_sims, axis=1)
-            PM = np.zeros_like(cell_sims, dtype=bool)
-            np.put_along_axis(PM, order[:, :t], True, axis=1)
-            cells = cpdf["__cell"].to_numpy(dtype=np.int64)
-            sims = cell_sims[:, cells].copy()
-        for j in range(m):
-            sims += L[:, j, :][:, codes_m[:, j]]
-        if cents_ is not None:
-            sims[~PM[:, cells]] = -np.inf
-        qids = qpdf[query_id].to_numpy()
-        cids = cpdf[cand_id].to_numpy()
-        top = min(k, n)
-        part = np.argpartition(-sims, top - 1, axis=1)[:, :top]
-        vals = np.take_along_axis(sims, part, axis=1)
-        out = pd.DataFrame({
-            query_id: np.repeat(qids, top),
-            cand_id: cids[part].ravel(),
-            "pq_sim": vals.ravel(),
-        })
-        return out[np.isfinite(out["pq_sim"])]
-
+    q_block = _QUERY_BLOCK_ROWS
+    ivf = cents is not None
+    ccols = [cand_id, "__code"] + (["__cell"] if ivf else [])
     qid_ddl = queries.schema[query_id].dataType.simpleString()
     cid_ddl = codes_df.schema[cand_id].dataType.simpleString()
-    local_top = (
-        qside.groupBy("__bi", "__bj")
-        .cogroup(cside.groupBy("__bi", "__bj"))
-        .applyInPandas(
-            _pair, f"{query_id} {qid_ddl}, {cand_id} {cid_ddl}, pq_sim double"
+    schema = f"{query_id} {qid_ddl}, {cand_id} {cid_ddl}, pq_sim double"
+
+    def _top(tables, qids, cpdf):
+        q, c, s = _pq_block_topk(
+            tables, qids, cpdf[cand_id].to_numpy(),
+            np.array(list(cpdf["__code"]), dtype=np.int64),
+            cpdf["__cell"].to_numpy(dtype=np.int64) if ivf else None,
+            k, q_block,
         )
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("pq_sim").desc(), F.col(cand_id).asc()
-    )
-    return (
-        local_top.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, cand_id, F.round("pq_sim", 6).alias("pq_sim"),
-                "rank")
-    )
+        return pd.DataFrame({query_id: q, cand_id: c, "pq_sim": s})
+
+    cap = _LUT_BYTES // (len(books) * len(books[0]) * 8)
+    q_rows = queries.select(query_id, query_vec).limit(cap + 1).collect()
+    if len(q_rows) <= cap:
+        # ids stay in their native type (long, string, …)
+        qids = np.array([r[0] for r in q_rows])
+        tables = _pq_tables([r[1] for r in q_rows], books, cents, n_probe)
+        if ivf:
+            # the union filter bounds what is READ across queries; the
+            # per-query mask in the tables bounds what each query RANKS
+            probed = np.flatnonzero(tables[2].any(axis=0))
+            codes_df = codes_df.filter(
+                F.col("__cell").isin([int(c) for c in probed])
+            )
+        b_tables = safe_broadcast(spark, (qids, tables))
+
+        def _scan(batches):
+            ids_q, tabs = b_tables.value
+            for cpdf in batches:
+                if len(cpdf):
+                    yield _top(tabs, ids_q, cpdf)
+
+        local_top = codes_df.select(*ccols).mapInPandas(_scan, schema)
+    else:
+        if ivf:
+            probed = _probed_cells_frame(queries, cents, n_probe, query_vec)
+            codes_df = codes_df.join(
+                F.broadcast(probed), "__cell", "left_semi"
+            )
+        bq = max(1, math.ceil(queries.count() / q_block))
+        bc = max(1, math.ceil(codes_df.count() / _CODE_BLOCK_ROWS))
+        b_model = safe_broadcast(spark, (books, cents))
+
+        def _block(id_col, n):
+            return F.pmod(
+                F.xxhash64(F.col(id_col).cast("string")), F.lit(n)
+            ).cast("int")
+
+        def _fan(n):
+            return F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
+
+        qside = queries.select(query_id, query_vec).withColumn(
+            "__bi", _block(query_id, bq)
+        ).withColumn("__bj", _fan(bc))
+        cside = codes_df.select(*ccols).withColumn(
+            "__bj", _block(cand_id, bc)
+        ).withColumn("__bi", _fan(bq))
+
+        def _pair(qpdf, cpdf):
+            if not len(qpdf) or not len(cpdf):
+                return pd.DataFrame({
+                    query_id: qpdf[query_id].iloc[:0],
+                    cand_id: cpdf[cand_id].iloc[:0],
+                    "pq_sim": pd.Series(dtype="float64"),
+                })
+            books_, cents_ = b_model.value
+            tables = _pq_tables(
+                list(qpdf[query_vec]), books_, cents_, n_probe
+            )
+            return _top(tables, qpdf[query_id].to_numpy(), cpdf)
+
+        local_top = (
+            qside.groupBy("__bi", "__bj")
+            .cogroup(cside.groupBy("__bi", "__bj"))
+            .applyInPandas(_pair, schema)
+        )
+    return _rank_topk(local_top, query_id, cand_id, k, "pq_sim", "pq_sim")
 
 
 def pq_topk(
@@ -1245,11 +1295,6 @@ def pq_topk(
     cand_vec: str = "embedding",
     codebooks: DataFrame | None = None,
     codes: DataFrame | None = None,
-    distributed: bool = False,
-    n_rows: tuple[int | None, int | None] = (None, None),
-    query_block_rows: int = 1024,
-    code_block_rows: int = 65536,
-    max_collect_queries: int = 65536,
 ) -> DataFrame:
     """Product-quantization approximate top-k — the compression tier of
     the ANN ladder (brute → LSH buckets → IVF cells → PQ codes): every
@@ -1265,9 +1310,8 @@ def pq_topk(
     Codebooks train driver-side on a deterministic bounded sample
     (lowest ids — same recipe as :func:`ivf_topk`), per-subspace Lloyd
     iterations; encoding and scanning are Arrow-batched numpy over
-    executor partitions, queries' lookup tables broadcast. Each
-    partition emits only its local per-query top-k, so the final
-    exact-rank shuffle carries Q·k rows per partition, never the scan.
+    executor partitions. Each code batch emits only its local per-query
+    top-k, so the final exact-rank shuffle never carries the scan.
 
     Returns (query_id, cand_id, pq_sim, rank) — ``pq_sim`` is the
     quantized cosine (vectors are normalized before training/encoding),
@@ -1280,20 +1324,16 @@ def pq_topk(
     codebook read and the code scan only); stamped parameters are
     validated against this call's.
 
-    Two query-side shapes (r13 verdict #1). Default: the SERVING shape
-    — queries collect to the driver and one global LUT broadcasts; the
-    collect is guarded at ``max_collect_queries`` (the default bounds
-    the LUT broadcast at ~67 MB for m=8/ks=16) and RAISES past it
-    rather than silently materializing a shard on the driver.
-    ``distributed=True``: the RE-RANK-A-SHARD shape — queries stay a
-    DataFrame and the scan runs as a cogrouped block rectangle
-    (:func:`_pq_scan_distributed`); ``n_rows`` = (nq, n_codes)
-    optionally sizes the grid without counting jobs.
+    The query count picks the scan shape (:func:`_pq_scan`): while the
+    queries' lookup tables (nq·m·ks float64) fit in 64 MiB — 65,536
+    queries at m=8/ks=16, 4,096 at ks=256 — queries collect to the
+    driver and their tables broadcast; past that they stay a DataFrame
+    and the scan runs as a cogrouped block rectangle that counts both
+    sides to size its grid. Either way a Python worker scores at most
+    1,024 queries against one code batch at a time (an Arrow batch, or
+    a rectangle block of about 16,384 codes): per-batch memory is a few
+    float64 matrices of that size, whatever the query count.
     """
-    import numpy as np
-    import pandas as pd
-
-    spark = candidates.sparkSession
     fp = pq_fingerprint(m, ks, train_sample, kmeans_iters, seed)
     if codes is not None and codebooks is None:
         raise ValueError(
@@ -1308,12 +1348,6 @@ def pq_topk(
             candidates, m, ks, train_sample, kmeans_iters, seed,
             cand_id, cand_vec,
         )
-    sub = books[0].shape[1]
-
-    def _unit(M):
-        norms = np.linalg.norm(M, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        return M / norms
 
     if codes is not None:
         _validate_ann_params(codes, fp, "PQ codes")
@@ -1323,68 +1357,8 @@ def pq_topk(
     else:
         codes_df = _pq_encode(candidates, books, cand_id, cand_vec)
 
-    if distributed:
-        return _pq_scan_distributed(
-            queries, codes_df, books, None, None, k, m,
-            query_id, query_vec, cand_id,
-            n_rows, query_block_rows, code_block_rows,
-        )
-
-    q_rows = (
-        queries.select(query_id, query_vec)
-        .limit(max_collect_queries + 1).collect()
-    )
-    if len(q_rows) > max_collect_queries:
-        raise ValueError(
-            f"pq_topk collect path saw > {max_collect_queries} queries "
-            "(max_collect_queries); pass distributed=True for the "
-            "rectangle-scan path that keeps queries executor-side"
-        )
-    # ids stay in their native type (long, string, …) — the scan output
-    # schema mirrors both sides' id DDLs below
-    qids = np.array([r[0] for r in q_rows])
-    Q = _unit(np.array([r[1] for r in q_rows], dtype=np.float64))
-    # LUT[q, j, c] = dot(query_j, codebook_j[c]): pq_sim = sum_j LUT
-    lut = np.stack(
-        [Q[:, j * sub:(j + 1) * sub] @ books[j].T for j in range(m)],
-        axis=1,
-    )
-    b_lut = safe_broadcast(spark, (qids, lut))
-
-    def _scan(batches):
-        ids_q, L = b_lut.value
-        nq = len(ids_q)
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            codes = np.array(list(pdf["__code"]), dtype=np.int64)
-            sims = np.zeros((nq, n), dtype=np.float64)
-            for j in range(m):
-                sims += L[:, j, :][:, codes[:, j]]
-            cids = pdf[cand_id].to_numpy()
-            top = min(k, n)
-            # local per-query top-k: only Q*k rows leave the partition
-            part = np.argpartition(-sims, top - 1, axis=1)[:, :top]
-            yield pd.DataFrame({
-                query_id: np.repeat(ids_q, top),
-                cand_id: cids[part].ravel(),
-                "pq_sim": np.take_along_axis(sims, part, axis=1).ravel(),
-            })
-
-    qid_ddl = queries.schema[query_id].dataType.simpleString()
-    cid_ddl = codes_df.schema[cand_id].dataType.simpleString()
-    local_top = codes_df.mapInPandas(
-        _scan, f"{query_id} {qid_ddl}, {cand_id} {cid_ddl}, pq_sim double"
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("pq_sim").desc(), F.col(cand_id).asc()
-    )
-    return (
-        local_top.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, cand_id, F.round("pq_sim", 6).alias("pq_sim"),
-                "rank")
+    return _pq_scan(
+        queries, codes_df, books, None, None, k, query_id, query_vec, cand_id
     )
 
 
@@ -1431,10 +1405,7 @@ def _train_ivfpq(
         .limit(train_sample)
         .collect()
     )
-    X = np.array([r[1] for r in train_rows], dtype=np.float64)
-    norms = np.linalg.norm(X, axis=1, keepdims=True)
-    norms[norms == 0.0] = 1.0
-    X /= norms
+    X = _unit_rows(np.array([r[1] for r in train_rows], dtype=np.float64))
     R = X - cents[(X @ cents.T).argmax(axis=1)]
     books = _lloyd_books(R, m, ks, kmeans_iters, seed)
     return cents, books
@@ -1466,9 +1437,7 @@ def _ivfpq_encode(
                 pdf = pdf[keep]
             if not len(M):
                 continue
-            norms = np.linalg.norm(M, axis=1, keepdims=True)
-            norms[norms == 0.0] = 1.0
-            M /= norms
+            M = _unit_rows(M)
             cells = (M @ C.T).argmax(axis=1)
             Res = M - C[cells]
             codes = np.empty((len(M), m), dtype=np.int32)
@@ -1602,10 +1571,7 @@ def _probed_cells_frame(
         for pdf in batches:
             if not len(pdf):
                 continue
-            Q = np.array(list(pdf[query_vec]), dtype=np.float64)
-            norms = np.linalg.norm(Q, axis=1, keepdims=True)
-            norms[norms == 0.0] = 1.0
-            Q /= norms
+            Q = _unit_rows(np.array(list(pdf[query_vec]), dtype=np.float64))
             sims = Q @ C.T
             t = min(n_probe, sims.shape[1])
             order = np.argsort(-sims, axis=1)[:, :t]
@@ -1639,11 +1605,6 @@ def ivfpq_topk(
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
     codes: DataFrame | None = None,
-    distributed: bool = False,
-    n_rows: tuple[int | None, int | None] = (None, None),
-    query_block_rows: int = 1024,
-    code_block_rows: int = 65536,
-    max_collect_queries: int = 65536,
 ) -> DataFrame:
     """IVF-PQ approximate top-k — PQ over RESIDUALS to the IVF coarse
     quantizer, the composition real ANN systems (FAISS ``IVFPQ``) run
@@ -1678,8 +1639,8 @@ def ivfpq_topk(
     I/O, not just in results: at 100 TB, ~n_probe/n_cells of the
     corpus is read (exactly that fraction when the persisted codes
     are laid out by cell — see :func:`ivfpq_encode_table`), at m
-    bytes per vector, in one mapInPandas pass with only Q·k rows per
-    partition leaving for the final rank.
+    bytes per vector, with only each code batch\'s per-query top-k
+    leaving for the final rank.
 
     ``centroids`` / ``codebooks`` / ``codes`` (optional): persisted
     :func:`ivfpq_centroids_table` / :func:`ivfpq_encode_table`
@@ -1688,21 +1649,17 @@ def ivfpq_topk(
     scan only); stamped parameters are validated against this call\'s,
     and the coarse/residual pair must carry the SAME joint stamp.
 
-    Two query-side shapes (r13 verdict #1), same contract as
-    :func:`pq_topk`. Default (serving): queries collect driver-side,
-    guarded at ``max_collect_queries``, and the probed-cell union
-    prunes the code scan as an ``isin`` literal. ``distributed=True``
-    (re-rank-a-shard): queries stay a DataFrame; the probed-cell union
-    becomes a broadcast LEFT-SEMI join on a ≤ n_cells-row cells frame
+    The query count picks the scan shape, as in :func:`pq_topk`, with
+    the same per-batch memory bound (at most 1,024 queries scored
+    against one code batch at a time). While the lookup tables fit in
+    64 MiB, queries collect driver-side and the probed-cell union
+    prunes the code scan as an ``isin`` literal. Past that, queries
+    stay a DataFrame: the probed-cell union becomes a broadcast
+    LEFT-SEMI join on a ≤ n_cells-row cells frame
     (:func:`_probed_cells_frame`) — still a Catalyst filter pushable
     into a cell-partitioned ``codes=`` layout — and the scan runs as
     the cogrouped block rectangle with per-task coarse terms and probe
-    masks. ``n_rows`` = (nq, n_codes_after_prune) skips the sizing
-    counts."""
-    import numpy as np
-    import pandas as pd
-
-    spark = candidates.sparkSession
+    masks."""
     fp = ivfpq_fingerprint(
         n_cells, m, ks, train_sample, kmeans_iters, kmeans_sample, seed
     )
@@ -1726,7 +1683,6 @@ def ivfpq_topk(
             candidates, n_cells, m, ks, train_sample, kmeans_iters,
             kmeans_sample, seed, cand_id, cand_vec,
         )
-    sub = books[0].shape[1]
 
     if codes is not None:
         _validate_ann_params(codes, fp, "IVF-PQ codes")
@@ -1738,96 +1694,12 @@ def ivfpq_topk(
     else:
         codes_df = _ivfpq_encode(candidates, cents, books, cand_id, cand_vec)
 
-    if distributed:
-        # READ bounding without the isin literal: ≤ n_cells distinct
-        # probed cells as a broadcast semi-join — Catalyst still pushes
-        # the cell restriction into a persisted cell-partitioned codes
-        # layout (plan-asserted in tests), with no O(nq·n_probe) driver
-        # materialization anywhere.
-        probed = _probed_cells_frame(queries, cents, n_probe, query_vec)
-        codes_df = codes_df.join(F.broadcast(probed), "__cell", "left_semi")
-        return _pq_scan_distributed(
-            queries, codes_df, books, cents, n_probe, k, m,
-            query_id, query_vec, cand_id,
-            n_rows, query_block_rows, code_block_rows,
-        )
-
-    def _unit(M):
-        norms = np.linalg.norm(M, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        return M / norms
-
-    q_rows = (
-        queries.select(query_id, query_vec)
-        .limit(max_collect_queries + 1).collect()
+    return _pq_scan(
+        queries, codes_df, books, cents, n_probe, k,
+        query_id, query_vec, cand_id,
     )
-    if len(q_rows) > max_collect_queries:
-        raise ValueError(
-            f"ivfpq_topk collect path saw > {max_collect_queries} "
-            "queries (max_collect_queries); pass distributed=True for "
-            "the rectangle-scan path that keeps queries executor-side"
-        )
-    # ids stay in their native type (long, string, …) — the scan output
-    # schema mirrors both sides' id DDLs below
-    qids = np.array([r[0] for r in q_rows])
-    Q = _unit(np.array([r[1] for r in q_rows], dtype=np.float64))
-    cell_sims = Q @ cents.T                      # (nq, n_cells)
-    order = np.argsort(-cell_sims, axis=1)
-    probe_mask = np.zeros_like(cell_sims, dtype=bool)
-    np.put_along_axis(probe_mask, order[:, :n_probe], True, axis=1)
-    # IVF read-bounding (r12 verdict #1): prune the code scan to the
-    # UNION of all queries' probed cells BEFORE the scan, so the
-    # n_probe/n_cells read fraction is a property of the PLAN (a filter
-    # Catalyst pushes into a persisted codes= parquet scan), not just of
-    # the result mask. ≤ nq·n_probe cell ids — driver-side tiny. The
-    # per-query mask below still applies: the union filter bounds what
-    # is READ across queries; the mask bounds what each query RANKS.
-    probed_cells = [int(c) for c in np.unique(order[:, :n_probe])]
-    codes_df = codes_df.filter(F.col("__cell").isin(probed_cells))
-    lut = np.stack(
-        [Q[:, j * sub:(j + 1) * sub] @ books[j].T for j in range(m)],
-        axis=1,
-    )                                            # (nq, m, ks)
-    b_lut = safe_broadcast(spark, (qids, lut, cell_sims, probe_mask))
 
-    def _scan(batches):
-        ids_q, L, CS, PM = b_lut.value
-        nq = len(ids_q)
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            codes_m = np.array(list(pdf["__code"]), dtype=np.int64)
-            cells = pdf["__cell"].to_numpy(dtype=np.int64)
-            sims = CS[:, cells].copy()           # (nq, n) coarse term
-            for j in range(m):
-                sims += L[:, j, :][:, codes_m[:, j]]
-            sims[~PM[:, cells]] = -np.inf        # outside probe set
-            cids = pdf[cand_id].to_numpy()
-            top = min(k, n)
-            part = np.argpartition(-sims, top - 1, axis=1)[:, :top]
-            vals = np.take_along_axis(sims, part, axis=1)
-            out = pd.DataFrame({
-                query_id: np.repeat(ids_q, top),
-                cand_id: cids[part].ravel(),
-                "pq_sim": vals.ravel(),
-            })
-            yield out[np.isfinite(out["pq_sim"])]
 
-    qid_ddl = queries.schema[query_id].dataType.simpleString()
-    cid_ddl = codes_df.schema[cand_id].dataType.simpleString()
-    local_top = codes_df.mapInPandas(
-        _scan, f"{query_id} {qid_ddl}, {cand_id} {cid_ddl}, pq_sim double"
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("pq_sim").desc(), F.col(cand_id).asc()
-    )
-    return (
-        local_top.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, cand_id, F.round("pq_sim", 6).alias("pq_sim"),
-                "rank")
-    )
 def semantic_dedup(
     df: DataFrame,
     threshold: float = 0.95,

@@ -187,6 +187,7 @@ def _events(
     rather than long — those (and plain µs files) are already usable
     timestamps, so only a LongType ``ts`` goes through the div-1000
     conversion."""
+    # set here: sessions built without get_spark must read events too
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/events.parquet"
     df = spark.read.parquet(path)

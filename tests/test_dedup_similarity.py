@@ -1197,32 +1197,39 @@ def test_pq_and_ivfpq_string_ids_round_trip(spark, tmp_path):
     assert _raw(loaded.collect()) == base
 
 
-@pytest.mark.slow
-def test_pq_distributed_query_side_matches_collect(spark):
-    """r13 verdict #1: the distributed query-side path (queries stay a
-    DataFrame, cogrouped block-rectangle scan, per-block LUTs) returns
-    exactly what the driver-collect serving path returns — for both
-    pq_topk and ivfpq_topk, on long AND string ids, with block sizes
-    small enough to force a genuinely multi-block grid."""
+def test_pq_distributed_query_side_matches_collect(spark, monkeypatch):
+    """The rectangle shape (queries stay a DataFrame, cogrouped
+    block-rectangle scan, per-block LUTs) returns exactly what the
+    driver-collect shape returns — for both pq_topk and ivfpq_topk, on
+    long AND string ids, with block sizes small enough to force a
+    genuinely multi-block grid. The collect shape scoring 3 queries at
+    a time equals the one-chunk result too (pins the chunk boundary)."""
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     qs = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     cands = emb.filter(F.col("vec_id") >= 8)
-    grid = dict(query_block_rows=3, code_block_rows=40)
 
     def _raw(rows):
         return {(r["query_id"], r["vec_id"], r["pq_sim"], r["rank"])
                 for r in rows}
 
+    def _patched(fn, *args, lut_bytes=1, **kws):
+        with monkeypatch.context() as mp:
+            mp.setattr(S, "_QUERY_BLOCK_ROWS", 3)
+            mp.setattr(S, "_CODE_BLOCK_ROWS", 40)
+            mp.setattr(S, "_LUT_BYTES", lut_bytes)
+            return fn(*args, **kws)
+
     kw_pq = dict(k=5, m=8, ks=16, kmeans_iters=3)
-    assert _raw(S.pq_topk(qs, cands, distributed=True, **grid,
-                          **kw_pq).collect()) == \
-        _raw(S.pq_topk(qs, cands, **kw_pq).collect())
+    base_pq = _raw(S.pq_topk(qs, cands, **kw_pq).collect())
+    assert _raw(_patched(S.pq_topk, qs, cands, **kw_pq).collect()) == \
+        base_pq
+    assert _raw(_patched(S.pq_topk, qs, cands, lut_bytes=S._LUT_BYTES,
+                         **kw_pq).collect()) == base_pq
 
     kw = dict(k=5, n_cells=8, n_probe=4, m=8, ks=16, kmeans_iters=3)
-    assert _raw(S.ivfpq_topk(qs, cands, distributed=True, **grid,
-                             **kw).collect()) == \
+    assert _raw(_patched(S.ivfpq_topk, qs, cands, **kw).collect()) == \
         _raw(S.ivfpq_topk(qs, cands, **kw).collect())
 
     # string ids: the rectangle's xxhash64 blocking and the cogroup
@@ -1234,15 +1241,17 @@ def test_pq_distributed_query_side_matches_collect(spark):
         "vec_id", F.format_string("doc-%04d", F.col("vec_id"))
     )
     for fn, kws in ((S.pq_topk, kw_pq), (S.ivfpq_topk, kw)):
-        got = fn(s_qs, s_cands, distributed=True, **grid, **kws)
+        got = _patched(fn, s_qs, s_cands, **kws)
         assert dict(got.dtypes)["query_id"] == "string"
         assert _raw(got.collect()) == _raw(
             fn(s_qs, s_cands, **kws).collect()
         )
 
 
-def test_ivfpq_distributed_semijoin_prunes_partitions(spark, tmp_path):
-    """The distributed path's probed-cell restriction is a broadcast
+def test_ivfpq_distributed_semijoin_prunes_partitions(
+    spark, tmp_path, monkeypatch
+):
+    """The rectangle shape's probed-cell restriction is a broadcast
     LEFT-SEMI join on a ≤ n_cells cells frame — no O(nq·n_probe) isin
     literal — and on a cell-partitioned persisted codes table it still
     bounds BYTES: Catalyst turns it into dynamic partition pruning
@@ -1264,10 +1273,12 @@ def test_ivfpq_distributed_semijoin_prunes_partitions(spark, tmp_path):
     ).parquet(str(tmp_path / "codes"))
     codes = spark.read.parquet(str(tmp_path / "codes"))
 
-    out = S.ivfpq_topk(
-        qs, cands, k=25, n_probe=2, centroids=cents, codebooks=books,
-        codes=codes, distributed=True, **kw,
-    )
+    with monkeypatch.context() as mp:
+        mp.setattr(S, "_LUT_BYTES", 1)  # no query fits: the rectangle
+        out = S.ivfpq_topk(
+            qs, cands, k=25, n_probe=2, centroids=cents, codebooks=books,
+            codes=codes, **kw,
+        )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan and "BroadcastHashJoin" in plan
     pruned = [seg for seg in plan.split("PartitionFilters: [")[1:]
@@ -1283,20 +1294,29 @@ def test_ivfpq_distributed_semijoin_prunes_partitions(spark, tmp_path):
             for r in out.collect()} == base
 
 
-def test_pq_collect_path_nq_guard(spark):
-    """The serving (collect) path fails LOUDLY past max_collect_queries
-    instead of silently materializing a shard of queries on the driver
-    — the error names the distributed=True escape hatch."""
+def test_pq_shape_follows_query_count(spark, monkeypatch):
+    """Queries whose lookup tables outgrow ``_LUT_BYTES`` take the
+    cogrouped rectangle on their own (no flag, no error) and return
+    exactly the rows the collect shape returns."""
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     qs = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     cands = emb.filter(F.col("vec_id") >= 10)
-    with pytest.raises(ValueError, match="distributed=True"):
-        S.pq_topk(qs, cands, k=3, m=8, ks=16, max_collect_queries=4)
-    with pytest.raises(ValueError, match="distributed=True"):
-        S.ivfpq_topk(qs, cands, k=3, n_cells=8, n_probe=2, m=8, ks=16,
-                     max_collect_queries=4)
+    for fn, kw in (
+        (S.pq_topk, dict(k=3, m=8, ks=16)),
+        (S.ivfpq_topk, dict(k=3, n_cells=8, n_probe=2, m=8, ks=16)),
+    ):
+        base = fn(qs, cands, **kw)
+        with monkeypatch.context() as mp:
+            # a 10-query LUT is 10·m·ks·8 bytes: cap at 9 queries
+            mp.setattr(S, "_LUT_BYTES", 9 * 8 * 16 * 8)
+            big = fn(qs, cands, **kw)
+        plan = big._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapCoGroupsInPandas" in plan
+        base_plan = base._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapCoGroupsInPandas" not in base_plan
+        assert sorted(big.collect()) == sorted(base.collect())
 
 
 def test_ivf_topk_clustered_candidates_optional(spark, tmp_path):

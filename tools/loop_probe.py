@@ -20,6 +20,7 @@ with the corpus).
 """
 
 import json
+import os
 import shutil
 import sys
 import tempfile
@@ -33,10 +34,13 @@ args = [a for a in sys.argv[1:] if not a.startswith("--")]
 sf_dir = args[0] if args else "/root/testdata/sf0.1"
 use_source_counts = "--no-source-counts" not in sys.argv
 
+# driver heap: half of physical memory, capped at 24g (a heap larger
+# than the machine lets the driver outgrow it)
+_phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
 spark = (
     SparkSession.builder.master("local[32]")
     .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "24g")
+    .config("spark.driver.memory", f"{min(24 << 10, _phys_mb // 2)}m")
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")

@@ -25,6 +25,7 @@ Usage: python tools/op_replica.py [sf_dir] [check ...]
 Prints one ok/FAIL line per check (with wall time), exits 1 on failure.
 """
 
+import os
 import sys
 import time
 from pathlib import Path
@@ -40,8 +41,10 @@ args = sys.argv[1:]
 sf_dir = args[0] if args else "/tmp/sfx10"
 only = set(args[1:])
 
+# at most 32 task slots, and no more than the machine's cores: the PQ
+# rectangle check's tasks each hold a ~0.4 GB scored tile
 spark = (
-    SparkSession.builder.master("local[32]")
+    SparkSession.builder.master(f"local[{min(32, os.cpu_count())}]")
     .config("spark.sql.shuffle.partitions", "32")
     .config("spark.driver.memory", "16g")
     .getOrCreate()
@@ -514,18 +517,18 @@ def check_ann_shortlist_clustered():
 
 @check("pq_distributed_large_nq")
 def check_pq_distributed_large_nq():
-    """r13 verdict #1 done-criterion: the distributed query-side
-    IVF-PQ path at re-rank-a-shard scale — 100k queries against a 200k
-    mixture corpus off persisted cell-partitioned codes, queries never
-    collected. Two assertions: (1) the full run completes and returns
-    exactly nq·k rows (every query served); (2) on a 2k-query
-    subsample the distributed path's (query_id, pq_sim, rank) multiset
-    equals the collect serving path's — sims not ids, so equal-sim
-    code-collision ties (argpartition keeps an arbitrary survivor
-    among equals) can't flake the signature. The 100k wall time prints
-    for the audit record; the collect path is NOT run at 100k — its
-    per-task sims matrix is nq × arrow-batch (≈8 GB at this nq), which
-    is precisely the asymmetry the distributed path removes."""
+    """IVF-PQ at re-rank-a-shard scale — 100k queries against a 200k
+    mixture corpus off persisted cell-partitioned codes. 100k queries'
+    LUTs exceed ``_LUT_BYTES`` (65,536 queries at m=8/ks=16), so
+    ivfpq_topk must take the cogrouped rectangle on its own: queries
+    never collected. Three assertions: (1) the executed plan holds
+    ``FlatMapCoGroupsInPandas``; (2) the full run returns exactly nq·k
+    rows (every query served); (3) on a 2k-query subsample the
+    rectangle (forced by shrinking ``S._LUT_BYTES`` for that call) and
+    the collect shape give the same (query_id, pq_sim, rank) multiset —
+    sims not ids, so equal-sim code-collision ties (argpartition keeps
+    an arbitrary survivor among equals) can't flake the signature. The
+    100k wall time prints for the audit record."""
     import tempfile
     import time as _t
 
@@ -551,17 +554,18 @@ def check_pq_distributed_large_nq():
     t0 = _t.time()
     big = S.ivfpq_topk(
         q_full, corpus, k=k, n_probe=8, centroids=cents,
-        codebooks=books, codes=codes, distributed=True,
-        n_rows=(nq, n_vec), query_block_rows=1024,
-        code_block_rows=16384, **kw,
+        codebooks=books, codes=codes, **kw,
     )
+    if "FlatMapCoGroupsInPandas" not in \
+            big._jdf.queryExecution().executedPlan().toString():
+        return f"nq={nq} did not take the rectangle shape"
     n_big = big.count()
     wall = _t.time() - t0
-    print(f"    distributed ivfpq: nq={nq} corpus={n_vec} k={k} "
+    print(f"    rectangle ivfpq: nq={nq} corpus={n_vec} k={k} "
           f"rows={n_big} wall={wall:.1f}s "
           f"({nq / wall:.0f} queries/s)")
     if n_big != nq * k:
-        return f"distributed run returned {n_big} rows, want {nq * k}"
+        return f"rectangle run returned {n_big} rows, want {nq * k}"
 
     q_sub = q_full.filter(F.col("query_id") < 2000)
     sub_kw = dict(k=k, n_probe=8, centroids=cents, codebooks=books,
@@ -573,13 +577,17 @@ def check_pq_distributed_large_nq():
                       "rank")
         )
 
-    s_dist = _sig(S.ivfpq_topk(q_sub, corpus, distributed=True,
-                               query_block_rows=256,
-                               code_block_rows=16384, **sub_kw))
+    lut_bytes = S._LUT_BYTES
+    S._LUT_BYTES = 1  # no query fits: the rectangle
+    try:
+        rect = S.ivfpq_topk(q_sub, corpus, **sub_kw)
+    finally:
+        S._LUT_BYTES = lut_bytes
+    s_rect = _sig(rect)
     s_coll = _sig(S.ivfpq_topk(q_sub, corpus, **sub_kw))
-    if s_dist != s_coll:
-        return (f"distributed vs collect multiset mismatch on the 2k "
-                f"subsample: {s_dist} != {s_coll}")
+    if s_rect != s_coll:
+        return (f"rectangle vs collect multiset mismatch on the 2k "
+                f"subsample: {s_rect} != {s_coll}")
     return None
 
 

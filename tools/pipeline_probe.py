@@ -47,6 +47,7 @@ Usage: python tools/pipeline_probe.py [--funnel] [--ablate-each]
 """
 
 import json
+import os
 import subprocess
 import sys
 import time
@@ -132,10 +133,13 @@ if ablate_fresh:
             }))
     sys.exit(rc)
 
+# driver heap: half of physical memory, capped at 24g (a heap larger
+# than the machine lets the driver outgrow it)
+_phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
 spark = (
     SparkSession.builder.master("local[32]")
     .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "24g")
+    .config("spark.driver.memory", f"{min(24 << 10, _phys_mb // 2)}m")
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
