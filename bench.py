@@ -3,9 +3,14 @@
 per-query JSON line first ({"metric": ..., "value": total_sec, "unit":
 "sec", "queries": {name: sec}, "sf": ..., "host": {...}}), then a compact
 summary JSON line LAST ({"kind": "compact", "metric", "value",
-"registry_value", "unit", "sf", "noisy", "canary_sec", "registry_md5"} —
-short enough that a tail-capture window always ends with it intact; the
-r10 compact-FIRST ordering scrolled it out and clipped the long line).
+"registry_value", "unit", "sf", "noisy", "canary_sec", "registry_md5",
+"per_query_ms", "order_md5"} — short enough that a tail-capture window
+always ends with it intact; the r10 compact-FIRST ordering scrolled it
+out and clipped the long line). ``per_query_ms`` holds every query's
+time as integer ms in sorted-name order and ``order_md5`` fingerprints
+that order, so the compact line alone gives the per-query map
+(:func:`per_query_from_compact`) when a 2000-char tail has cut the
+front of the long line.
 
 Both lines carry the host-speed canaries (r11 verdict #2, extended r13
 per the r12 verdict #3): ``canary_sec`` is the wall time of a pinned
@@ -45,6 +50,35 @@ if _REPO_ROOT not in sys.path:
 
 from datawarehouse_vehicule_insurance_spark import get_spark  # noqa: E402
 from datawarehouse_vehicule_insurance_spark import queries as Q  # noqa: E402
+
+
+def _order_md5(names) -> str:
+    return hashlib.md5(",".join(sorted(names)).encode()).hexdigest()[:12]
+
+
+def compact_line(timings: dict[str, float], **summary) -> str:
+    """The compact summary line: ``summary`` plus every query's time as
+    integer ms in sorted-name order and the md5 of that order."""
+    names = sorted(timings)
+    return json.dumps({
+        # discriminator (r11 verdict nit): both lines share metric /
+        # value fields; "kind" lets a parser tell the tail-survivable
+        # compact line from the full per-query line unambiguously
+        "kind": "compact",
+        **summary,
+        "per_query_ms": [round(timings[n] * 1000) for n in names],
+        "order_md5": _order_md5(names),
+    }, separators=(",", ":"))
+
+
+def per_query_from_compact(line: str, names) -> dict[str, float]:
+    """``{name: sec}`` (ms precision) from a compact line, given the
+    bench set's query names; raises when the names are not the set the
+    line was written for."""
+    rec = json.loads(line)
+    if _order_md5(names) != rec["order_md5"]:
+        raise ValueError("query names differ from the compact line's")
+    return {n: ms / 1000 for n, ms in zip(sorted(names), rec["per_query_ms"])}
 
 
 def main() -> None:
@@ -173,17 +207,16 @@ def main() -> None:
     registry = round(
         sum(v for q, v in timings.items() if q in Q.QUERIES), 4
     )
-    registry_md5 = hashlib.md5(
-        ",".join(sorted(Q.QUERIES)).encode()
-    ).hexdigest()[:12]
+    registry_md5 = _order_md5(Q.QUERIES)
     # Full per-query line FIRST, compact summary LAST (r10 verdict
     # #3, attempt two): the driver TAIL-captures stdout, so whatever
     # prints last survives; r10's compact-line-FIRST fix scrolled the
     # short line out behind the ~2.5 KB per-query line and the tail
     # clipped the long line's front (BENCH_r10.json parsed: null).
     # With the long line first, the tail window always ends with the
-    # short compact line intact — and if the window happens to hold
-    # both, both parse.
+    # short compact line intact. The tail still clips the long line's
+    # front (PERF_r14/r15 parsed per_query: empty), so the compact line
+    # carries every per-query time itself (per_query_ms).
     print(json.dumps({
         "metric": "query_suite_wall_time",
         "value": total,
@@ -221,23 +254,20 @@ def main() -> None:
         # code drift
         "registry_md5": registry_md5,
     }))
-    print(json.dumps({
-        # discriminator (r11 verdict nit): both lines share metric /
-        # value fields; "kind" lets a parser tell the tail-survivable
-        # compact line from the full per-query line unambiguously
-        "kind": "compact",
-        "metric": "query_suite_wall_time",
-        "value": total,
-        "registry_value": registry,
-        "unit": "sec",
-        "sf": sf_dir,
-        "noisy": noisy,
-        "canary_sec": canary,
-        "canary_py_sec": canary_py,
-        "canary_post_sec": canary_post,
-        "canary_py_post_sec": canary_py_post,
-        "registry_md5": registry_md5,
-    }))
+    print(compact_line(
+        timings,
+        metric="query_suite_wall_time",
+        value=total,
+        registry_value=registry,
+        unit="sec",
+        sf=sf_dir,
+        noisy=noisy,
+        canary_sec=canary,
+        canary_py_sec=canary_py,
+        canary_post_sec=canary_post,
+        canary_py_post_sec=canary_py_post,
+        registry_md5=registry_md5,
+    ))
 
 
 if __name__ == "__main__":

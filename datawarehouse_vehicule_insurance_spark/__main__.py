@@ -378,15 +378,20 @@ def _run_index_maintain(args: argparse.Namespace) -> int:
 def _run_lm_train(args: argparse.Namespace) -> int:
     """Train the bigram-LM model tables on a reference corpus and
     persist them; ``curate``/``curate-stream`` consume them via
-    ``--lm-bigrams/--lm-unigrams --max-perplexity``."""
+    ``--lm-bigrams/--lm-unigrams --max-perplexity``. The training's
+    pair-count cut is freed once both tables are written."""
+    from datawarehouse_vehicule_insurance_spark.operators.plancut import (
+        cut_scope,
+    )
     from datawarehouse_vehicule_insurance_spark.operators.text_analysis import (
         bigram_lm_tables,
     )
 
     spark = get_spark(app_name="insurance_lm_train")
-    bg, uni = bigram_lm_tables(spark.read.parquet(args.input))
-    bg.write.mode("overwrite").parquet(args.lm_bigrams)
-    uni.write.mode("overwrite").parquet(args.lm_unigrams)
+    with cut_scope():
+        bg, uni = bigram_lm_tables(spark.read.parquet(args.input))
+        bg.write.mode("overwrite").parquet(args.lm_bigrams)
+        uni.write.mode("overwrite").parquet(args.lm_unigrams)
     print(json.dumps({
         "bigrams": spark.read.parquet(args.lm_bigrams).count(),
         "unigrams": spark.read.parquet(args.lm_unigrams).count(),

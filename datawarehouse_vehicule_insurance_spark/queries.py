@@ -28,6 +28,7 @@ from datawarehouse_vehicule_insurance_spark.functions import validate as V
 from datawarehouse_vehicule_insurance_spark.operators.gold import (
     conditional_count,
 )
+from datawarehouse_vehicule_insurance_spark.sources import io as IO
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -49,16 +50,14 @@ _PAR_KEYS: dict[str, tuple[str, ...]] = {
     "events": ("event_id",),
 }
 
-#: footer-read cache: (path, mtime_ns, size) -> (groups, rows, exhausted);
+#: footer-read cache: path -> (file signature, groups, rows, exhausted);
 #: driver-side pyarrow reads, no Spark job (same rationale as
-#: _parquet_num_rows). Keyed on the stat signature so a rewritten file
-#: or a directory with files added/removed re-probes instead of serving
-#: a stale layout (an in-place rewrite of one file INSIDE a directory
-#: does not bump the directory's own mtime — accepted residual staleness
-#: for a cache whose only consumer is a repartition heuristic).
-#: ``exhausted`` False means enumeration stopped early (threshold
-#: reached), so (groups, rows) are lower bounds.
-_SCAN_LAYOUT: dict[tuple, tuple[int, int, bool]] = {}
+#: _parquet_num_rows). One entry per path, keyed on
+#: ``sources.io.file_signature``, so a file rewritten inside a directory
+#: re-probes instead of serving a stale layout; unstat-able paths are
+#: not cached. ``exhausted`` False means enumeration stopped early
+#: (threshold reached), so (groups, rows) are lower bounds.
+_SCAN_LAYOUT: dict[str, tuple[tuple, int, int, bool]] = {}
 
 
 def _scan_layout(path: str, enough_groups: int = 1 << 30) -> tuple[int, int]:
@@ -69,17 +68,14 @@ def _scan_layout(path: str, enough_groups: int = 1 << 30) -> tuple[int, int]:
     handful of footers instead of all of them: a 100 TB layout can hold
     millions of files, and the walk stops after at most
     ``enough_groups`` non-empty footers (guide §5 "the driver should do
-    almost no data work")."""
+    almost no data work"). The cache key still stats every file (no
+    file is opened)."""
     import os
 
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = (path, 0, 0)
-    hit = _SCAN_LAYOUT.get(key)
-    if hit is not None:
-        groups, rows, exhausted = hit
+    sig = IO.file_signature(path)
+    hit = _SCAN_LAYOUT.get(path)
+    if sig is not None and hit is not None and hit[0] == sig:
+        _, groups, rows, exhausted = hit
         if exhausted or groups >= enough_groups:
             return groups, rows
     groups = rows = 0
@@ -105,7 +101,8 @@ def _scan_layout(path: str, enough_groups: int = 1 << 30) -> tuple[int, int]:
             groups, rows = md.num_row_groups, md.num_rows
     except Exception:
         groups, rows = 1 << 30, 0  # unknown → assume splittable
-    _SCAN_LAYOUT[key] = (groups, rows, exhausted)
+    if sig is not None:
+        _SCAN_LAYOUT[path] = (sig, groups, rows, exhausted)
     return groups, rows
 
 
@@ -145,7 +142,10 @@ def _par_scan(
 def _t(
     spark: SparkSession, sf_dir: str, name: str, par: bool = False
 ) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Testdata table ``name`` through ``sources.io.read_parquet``, so a
+    warm read of an unchanged table reuses its inferred schema and
+    launches no Spark job; ``par`` adds the :func:`_par_scan` guard."""
+    df = IO.read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if par:
         df = _par_scan(spark, df, f"{sf_dir}/{name}.parquet", name)
     return df
@@ -190,7 +190,7 @@ def _events(
     # set here: sessions built without get_spark must read events too
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/events.parquet"
-    df = spark.read.parquet(path)
+    df = IO.read_parquet(spark, path)
     if par:
         df = _par_scan(spark, df, path, "events")
     if isinstance(df.schema["ts"].dataType, T.LongType):

@@ -10,6 +10,8 @@ upgrade (date-partitioned facts → Catalyst partition pruning).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -39,9 +41,60 @@ def read_csv(
     return reader.csv(path)
 
 
+#: the confs that change what parquet schema inference returns
+_INFER_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive",
+)
+
+#: path -> (file signature, inference conf values, inferred StructType);
+#: one entry per path, replaced on a miss
+_SCHEMAS: dict[str, tuple[tuple, tuple, T.StructType]] = {}
+
+
+def file_signature(path: str) -> tuple | None:
+    """``(relpath, st_mtime_ns, st_size)`` of ``path`` and of every file
+    and directory under it, from a local stat walk; None when ``path``
+    cannot be stat'ed (``s3a://``, ``hdfs://``, globs, missing)."""
+    try:
+        st = os.stat(path)
+        sig = [(".", st.st_mtime_ns, st.st_size)]
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for name in dirs + sorted(files):
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                sig.append((os.path.relpath(full, path), st.st_mtime_ns,
+                            st.st_size))
+    except (OSError, ValueError):
+        return None
+    return tuple(sig)
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan (reference: load_silver.py:28-38, load_gold.py:27-35)."""
-    return spark.read.parquet(path)
+    """Parquet scan (reference: load_silver.py:28-38, load_gold.py:27-35)
+    that infers a table's schema once per :func:`file_signature` and
+    ``_INFER_CONFS`` values. Inference is one Spark job (~100 ms warm on
+    local[4]); a hit reads with the cached schema (~20 ms), which still
+    lists the files but runs no job. A rewrite, append, removal or conf
+    flip re-infers. Paths that cannot be stat'ed (object stores, HDFS,
+    globs) are read plainly and never cached: they keep paying
+    inference."""
+    sig = file_signature(path)
+    if sig is None:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k, None) for k in _INFER_CONFS)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[:2] == (sig, confs):
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (sig, confs, df.schema)
+    return df
 
 
 def write_parquet(

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from datawarehouse_vehicule_insurance_spark.catalog import BRONZE_NAMES, Catalog
+from datawarehouse_vehicule_insurance_spark.sources.io import read_parquet
 
 TESTDATA_TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -23,7 +24,7 @@ def register_zone_views(
     names = []
     for bronze_name in BRONZE_NAMES.values():
         view = f"{zone}_{bronze_name}"
-        spark.read.parquet(catalog.path(zone, bronze_name)).createOrReplaceTempView(view)
+        read_parquet(spark, catalog.path(zone, bronze_name)).createOrReplaceTempView(view)
         names.append(view)
     return names
 
@@ -37,7 +38,7 @@ def register_testdata_views(spark: SparkSession, sf_dir: str) -> list[str]:
         df = (
             _events(spark, sf_dir)
             if t == "events"
-            else spark.read.parquet(f"{sf_dir}/{t}.parquet")
+            else read_parquet(spark, f"{sf_dir}/{t}.parquet")
         )
         df.createOrReplaceTempView(t)
     return list(TESTDATA_TABLES)

@@ -213,17 +213,21 @@ def test_cli_lm_train_and_curate_gate(spark, tmp_path, capsys):
     them as the perplexity gate."""
     import json as _json
 
+    from datawarehouse_vehicule_insurance_spark import compat
     from datawarehouse_vehicule_insurance_spark.__main__ import main
 
     ref_path = str(tmp_path / "ref")
     _df(spark, TRAIN).write.parquet(ref_path)
     bg_path = str(tmp_path / "bg")
     uni_path = str(tmp_path / "uni")
+    blocks_before = compat.persistent_rdd_ids(spark)
     rc = main([
         "lm-train", "--input", ref_path,
         "--lm-bigrams", bg_path, "--lm-unigrams", uni_path,
     ])
     assert rc == 0
+    # the verb frees its own pair-count checkpoint
+    assert compat.persistent_rdd_ids(spark) == blocks_before
     counts = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert counts["bigrams"] > 0 and counts["unigrams"] > 0
 
