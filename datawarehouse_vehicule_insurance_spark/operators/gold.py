@@ -137,29 +137,17 @@ def build_fact_client_summary(
     # P6: derived ratios (reference: load_gold.py:134-137). DoubleType
     # division: NULL inputs → NULL (pandas would carry NaN); x/0 → NULL via
     # explicit zero-guard to keep downstream sums sane (SURVEY.md §7.3 #4).
-    return (
-        summary
-        .withColumn(
-            "payment_to_premium_ratio",
-            F.col("total_payments")
-            / F.when(F.col("total_premium") != 0, F.col("total_premium")),
-        )
-        .withColumn(
-            "claim_ratio",
-            F.col("total_claims")
-            / F.when(F.col("total_premium") != 0, F.col("total_premium")),
-        )
-        .withColumn(
-            "avg_payment",
-            F.col("total_payments")
-            / F.when(F.col("num_payments") != 0, F.col("num_payments")),
-        )
-        .withColumn(
-            "avg_claim",
-            F.col("total_claims")
-            / F.when(F.col("num_claims") != 0, F.col("num_claims")),
-        )
-    )
+    # One withColumns: each withColumn call re-analyzes the whole plan.
+    return summary.withColumns({
+        "payment_to_premium_ratio": F.col("total_payments")
+        / F.when(F.col("total_premium") != 0, F.col("total_premium")),
+        "claim_ratio": F.col("total_claims")
+        / F.when(F.col("total_premium") != 0, F.col("total_premium")),
+        "avg_payment": F.col("total_payments")
+        / F.when(F.col("num_payments") != 0, F.col("num_payments")),
+        "avg_claim": F.col("total_claims")
+        / F.when(F.col("num_claims") != 0, F.col("num_claims")),
+    })
 
 
 def build_fact_payments(

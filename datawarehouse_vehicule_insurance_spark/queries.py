@@ -17,6 +17,9 @@ Determinism rules for the order-insensitive value-hash compare:
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -453,11 +456,13 @@ def q_incremental_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scale point (reference contrast: load_bronze.py:88-101 re-reads
     every CSV every run): each scheduled availableNow run processes only
     files NEW since the last checkpoint, so per-run work is proportional
-    to arriving data, not table size."""
-    import tempfile
+    to arriving data, not table size.
 
+    Each call's stream checkpoint is deleted once the run terminates (the
+    result reads only ``out/`` and its ``_spark_metadata``); ``out/``
+    lives under one process-scoped temp root removed at exit."""
     batch = _t(spark, sf_dir, "customer")
-    tmp = tempfile.mkdtemp(prefix="spark_graft_inc_silver_")
+    tmp = _inc_silver_dir()
     out_path, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
     # the file source needs a DIRECTORY; pathGlobFilter selects just the
     # customer table's file(s) within the sf dir
@@ -466,17 +471,33 @@ def q_incremental_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "customer.parquet")
         .parquet(sf_dir)
     )
-    query = (
-        _silver_customer_projection(stream)
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    try:
+        (
+            _silver_customer_projection(stream)
+            .writeStream.format("parquet")
+            .option("path", out_path)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        ).awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out_path)
+
+
+#: process-scoped parent of every ``q_incremental_silver`` output dir
+_INC_SILVER_ROOT: str | None = None
+
+
+def _inc_silver_dir() -> str:
+    """A fresh directory for one ``q_incremental_silver`` call, under
+    ``_INC_SILVER_ROOT``, which an ``atexit`` hook removes."""
+    global _INC_SILVER_ROOT
+    if _INC_SILVER_ROOT is None:
+        _INC_SILVER_ROOT = tempfile.mkdtemp(prefix="spark_graft_inc_silver_")
+        atexit.register(shutil.rmtree, _INC_SILVER_ROOT, True)
+    return tempfile.mkdtemp(dir=_INC_SILVER_ROOT)
 
 
 _SEGS = ", ".join(f"'{s}'" for s in MKTSEGMENTS)

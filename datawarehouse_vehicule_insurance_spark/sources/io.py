@@ -82,9 +82,10 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     ``_INFER_CONFS`` values. Inference is one Spark job (~100 ms warm on
     local[4]); a hit reads with the cached schema (~20 ms), which still
     lists the files but runs no job. A rewrite, append, removal or conf
-    flip re-infers. Paths that cannot be stat'ed (object stores, HDFS,
-    globs) are read plainly and never cached: they keep paying
-    inference."""
+    flip re-infers, except that :func:`write_parquet` seeds the entry for
+    the table it just wrote, so the first read after that write is a hit
+    too. Paths that cannot be stat'ed (object stores, HDFS, globs) are
+    read plainly and never cached: they keep paying inference."""
     sig = file_signature(path)
     if sig is None:
         return spark.read.parquet(path)
@@ -97,15 +98,45 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def _as_nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every struct field, array element and map value made
+    nullable, as parquet schema inference returns it."""
+    if isinstance(t, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in t.fields
+        ])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_as_nullable(t.keyType), _as_nullable(t.valueType),
+                         True)
+    return t
+
+
 def write_parquet(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """Overwrite-whole-table Parquet sink (reference: load_bronze.py:55-62,
-    load_silver.py:41-51, load_gold.py:37-47)."""
+    load_silver.py:41-51, load_gold.py:37-47).
+
+    Once the write returns, the written schema seeds :func:`read_parquet`'s
+    cache under the path's post-write :func:`file_signature`, so reading
+    the table back (the next medallion zone) runs no inference job. The
+    seed is the schema in its read form: every field, array element and
+    map value nullable, as inference returns it. Nothing is recorded for
+    a ``partition_by`` write (partition-column types come from the
+    directory values), for a path that cannot be stat'ed (object stores,
+    HDFS, globs: they keep paying inference on read) or when the write
+    raises."""
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+    sig = None if partition_by else file_signature(path)
+    if sig is not None:
+        confs = tuple(df.sparkSession.conf.get(k, None) for k in _INFER_CONFS)
+        _SCHEMAS[path] = (sig, confs, _as_nullable(df.schema))
 
 
 def read_json(

@@ -182,3 +182,20 @@ def test_lm_sharing_bench_order_invariant():
                 "the shared-LM cost accounting depends on the trainer "
                 "running first (see q_lm_perplexity)"
             )
+
+
+def test_incremental_silver_leaves_no_checkpoint(spark, duck):
+    """Two calls keep only their ``out/`` dirs, under the one process
+    root; each stream checkpoint is gone and the rows still equal the
+    batch silver oracle."""
+    import os
+
+    rel = duck.sql(_ALL_ORACLES["incremental_silver"])
+    want = _rows_to_multiset(rel.columns, rel.fetchall())
+    for _ in range(2):
+        sdf = _Q.q_incremental_silver(spark, SF_DIR)
+        assert _rows_to_multiset(sdf.columns, sdf.collect()) == want
+    calls = os.listdir(_Q._INC_SILVER_ROOT)
+    assert len(calls) >= 2
+    for d in calls:
+        assert os.listdir(os.path.join(_Q._INC_SILVER_ROOT, d)) == ["out"]

@@ -8,15 +8,31 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from datawarehouse_vehicule_insurance_spark.catalog import Catalog
+from datawarehouse_vehicule_insurance_spark.catalog import BRONZE_NAMES, Catalog
+from datawarehouse_vehicule_insurance_spark.operators.rules import SILVER_RULES
 from datawarehouse_vehicule_insurance_spark.plans.pipeline import Pipeline
 from datawarehouse_vehicule_insurance_spark.sources import io as IO
 
 REF_DATE = dt.date(2025, 3, 28)
 
 
+def _jobs_during(spark, group, fn):
+    """Run ``fn`` under a Spark job group and return (result, number of
+    jobs the group launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="module")
-def lake(spark, raw_tables, tmp_path_factory):
+def lake_run(spark, raw_tables, tmp_path_factory):
+    """One pipeline run over a fresh catalog; returns the catalog, the
+    jobs ``run_silver`` launched, and the jobs of reading every silver
+    table straight after it."""
     root = str(tmp_path_factory.mktemp("lake"))
     csv_root = f"{root}/raw"
     for name, df in raw_tables.items():
@@ -27,9 +43,28 @@ def lake(spark, raw_tables, tmp_path_factory):
     catalog = Catalog(root=f"{root}/lake")
     pipe = Pipeline(spark, catalog, ref_date=REF_DATE)
     assert all(v == "ok" for v in pipe.run_bronze(csv_root).values()), pipe.results
-    assert all(v == "ok" for v in pipe.run_silver().values()), pipe.results
+    silver, silver_jobs = _jobs_during(spark, "pipeline_silver", pipe.run_silver)
+    assert all(v == "ok" for v in silver.values()), pipe.results
+    _, read_jobs = _jobs_during(spark, "pipeline_silver_read", lambda: [
+        IO.read_parquet(spark, catalog.path("silver", BRONZE_NAMES[t]))
+        for t in SILVER_RULES
+    ])
     assert all(v == "ok" for v in pipe.run_gold().values()), pipe.results
-    return catalog
+    return catalog, silver_jobs, read_jobs
+
+
+@pytest.fixture(scope="module")
+def lake(lake_run):
+    return lake_run[0]
+
+
+def test_silver_reads_writer_seeded_schemas(lake_run):
+    """Each silver step reads the bronze table the same run just wrote,
+    so its only job is the write: the writer seeded the read's schema.
+    Silver's own outputs read back with no job at all."""
+    _, silver_jobs, read_jobs = lake_run
+    assert silver_jobs == len(SILVER_RULES)
+    assert read_jobs == 0
 
 
 def test_bronze_preserves_raw(spark, lake, raw_tables):

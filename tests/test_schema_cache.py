@@ -1,12 +1,14 @@
 """``sources.io.read_parquet`` infers a table's schema once per file
 signature: a warm read of an unchanged table launches no Spark job, and
-every change to the files or to the inference confs is seen."""
+every change to the files or to the inference confs is seen.
+``sources.io.write_parquet`` seeds the entry for the table it wrote."""
 
 from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datawarehouse_vehicule_insurance_spark import queries as Q
@@ -120,3 +122,55 @@ def test_glob_path_reads_uncached(spark, tmp_path):
     assert IO.read_parquet(spark, glob).count() == 7
     assert Q._scan_layout(glob)[1] == 0
     assert glob not in IO._SCHEMAS and glob not in Q._SCAN_LAYOUT
+
+
+def test_write_seeds_read_form_schema(spark, tmp_path):
+    """The read right after ``write_parquet`` runs no inference job, and
+    the seeded schema is what inference returns: all fields nullable
+    although ``id``, ``count(*)``, the literal and the array elements
+    are not nullable in ``df.schema``."""
+    path = str(tmp_path / "zoo.parquet")
+    zoo = spark.range(4).selectExpr(
+        "id", "array(id, id + 1) AS a", "map('k', id) AS m",
+        "named_struct('x', id, 'y', array(named_struct('z', id))) AS st",
+        "cast(id / 3 AS decimal(12,2)) AS d", "date'2024-01-02' AS dt",
+        "timestamp'2024-01-02 03:04:05' AS ts",
+        "timestamp_ntz'2024-01-02 03:04:05' AS tn",
+        "cast('ab' AS binary) AS b", "id % 2 = 0 AS bo",
+        "cast('ab' AS varchar(5)) AS vc", "cast('ab' AS char(5)) AS ch",
+    )
+    df = zoo.join(zoo.groupBy("bo").agg(F.count("*").alias("n")), "bo")
+    assert not df.schema["id"].nullable and not df.schema["n"].nullable
+    IO.write_parquet(df, path)
+    back, jobs = _jobs_during(
+        spark, "schema_cache_write_seed", lambda: IO.read_parquet(spark, path)
+    )
+    assert jobs == 0
+    plain = spark.read.parquet(path).schema
+    assert back.schema == plain
+    assert IO._SCHEMAS[path][2] == plain
+    assert sorted(back.collect()) == sorted(spark.read.parquet(path).collect())
+
+
+def test_partitioned_write_is_not_seeded(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    IO.write_parquet(spark.range(6).selectExpr("id", "id % 2 AS p"), path,
+                     partition_by=["p"])
+    assert path not in IO._SCHEMAS
+    first, jobs = _jobs_during(
+        spark, "schema_cache_partition_write",
+        lambda: IO.read_parquet(spark, path),
+    )
+    assert jobs >= 1
+    assert first.schema == spark.read.parquet(path).schema
+
+
+def test_failed_write_is_not_seeded(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    bad = spark.range(3).select(
+        F.when(F.col("id") < 2, F.col("id"))
+        .otherwise(F.raise_error(F.lit("boom"))).alias("id")
+    )
+    with pytest.raises(Exception, match="boom"):
+        IO.write_parquet(bad, path)
+    assert path not in IO._SCHEMAS
