@@ -13,6 +13,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..worker import prune_zip_importers
+
 #: Anchored email pattern (reference: load_silver.py:90). ``rlike`` is a
 #: substring search, so the ``^...$`` anchors are load-bearing.
 EMAIL_PATTERN = r"^[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}$"
@@ -66,6 +68,7 @@ def title_exact(s: pd.Series) -> pd.Series:
     """Exact Python ``str.title()`` (reference: load_silver.py:69-71 applies
     ``x.strip().title()``). Vectorized via Arrow; the slow path by design —
     only used when ``fidelity='exact'`` is requested."""
+    prune_zip_importers()
     return s.str.title()
 
 

@@ -16,6 +16,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..worker import prune_zip_importers
+
 
 def domain_validate(col: Column, domain: list[str], normalizer=None) -> Column:
     """Keep value iff (normalized) it is in ``domain``, else NULL
@@ -74,6 +76,7 @@ def round2_exact(s: pd.Series) -> pd.Series:
     half-to-even on the binary double) — numpy's scaled-multiply
     rounding can diverge in the last ulp, so this maps the Python
     builtin over the Arrow batch."""
+    prune_zip_importers()
     return s.map(lambda v: v if pd.isna(v) else round(float(v), 2))
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..worker import prune_zip_importers
 from .plancut import checkpoint_cut, ensure_parallelism
 
 
@@ -1791,6 +1792,7 @@ def _span_rebuild_udf(min_span: int):
         return " ".join(kept)
 
     def rebuild(toks, starts):
+        prune_zip_importers()
         return pd.Series([one(t, s) for t, s in zip(toks, starts)])
 
     rebuild.__annotations__ = {

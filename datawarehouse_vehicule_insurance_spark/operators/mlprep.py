@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..worker import prune_zip_importers
+
 
 def grouped_linear_fit(
     df: DataFrame, group_col: str, x_col: str, y_col: str
@@ -35,6 +37,7 @@ def grouped_linear_fit(
     ])
 
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
+        prune_zip_importers()
         import numpy as np
 
         x = pdf[x_col].to_numpy(dtype=np.float64)
@@ -290,6 +293,7 @@ def pack_sequences(
     )
 
     def _pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        prune_zip_importers()
         shard_id = int(key[0])
         pdf = pdf.sort_values(
             [token_col, id_col], ascending=[False, True]

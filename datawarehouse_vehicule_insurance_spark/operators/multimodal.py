@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..worker import prune_zip_importers
+
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 
@@ -502,6 +504,7 @@ def extract_image_features(df: DataFrame, fake: bool = False) -> DataFrame:
     per-format error budget."""
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         for pdf in batches:
             feats = []
             for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
@@ -565,6 +568,7 @@ def extract_audio_features(df: DataFrame, fake: bool = False) -> DataFrame:
     than failing the task."""
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         for pdf in batches:
             rows = []
             for asset_id, payload, dur in zip(
@@ -623,6 +627,7 @@ def sample_video_frames(
     mapInPandas signature."""
 
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         for pdf in batches:
             rows = []
             for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):

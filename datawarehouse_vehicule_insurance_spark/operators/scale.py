@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..worker import prune_zip_importers
+
 #: aggregates that can be split into (partial per salt) → (final combine)
 _COMBINERS: dict[str, tuple] = {
     "sum": (F.sum, F.sum),
@@ -193,6 +195,7 @@ def approx_heavy_hitters(
     import pandas as pd
 
     def mg_partition(batches):
+        prune_zip_importers()
         counts: dict = {}
         decr = 0
         for pdf in batches:

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..compat import safe_broadcast
+from ..worker import prune_zip_importers
 
 logger = logging.getLogger(
     "datawarehouse_vehicule_insurance_spark.similarity"
@@ -218,6 +219,7 @@ def cosine_neardup_pairs(
     out_schema = "id_a long, id_b long, cosine_sim double"
 
     def _pairs(key, pdf):
+        prune_zip_importers()
         bi, bj = key
         a_pdf = pdf[pdf["__side"] == 0]
         b_pdf = pdf[pdf["__side"] == 1]
@@ -323,6 +325,7 @@ def cross_corpus_cosine_pairs(
     out_schema = "id_a long, id_b long, cosine_sim double"
 
     def _pairs(key, pdf):
+        prune_zip_importers()
         a_pdf = pdf[pdf["__side"] == 0]
         b_pdf = pdf[pdf["__side"] == 1]
         if len(a_pdf) == 0 or len(b_pdf) == 0:
@@ -571,6 +574,7 @@ def _ivf_assign(
     id_ddl = df.schema[id_name].dataType.simpleString()
 
     def _fn(batches):
+        prune_zip_importers()
         C = b.value
         for pdf in batches:
             M = _unit_rows(np.array(list(pdf[vec_name]), dtype=np.float64))
@@ -1062,6 +1066,7 @@ def _pq_encode(
     b_books = safe_broadcast(spark, books)
 
     def _encode(batches):
+        prune_zip_importers()
         B = b_books.value
         for pdf in batches:
             M = np.array(list(pdf[cand_vec]), dtype=np.float64)
@@ -1228,6 +1233,7 @@ def _pq_scan(
         b_tables = safe_broadcast(spark, (qids, tables))
 
         def _scan(batches):
+            prune_zip_importers()
             ids_q, tabs = b_tables.value
             for cpdf in batches:
                 if len(cpdf):
@@ -1260,6 +1266,7 @@ def _pq_scan(
         ).withColumn("__bi", _fan(bq))
 
         def _pair(qpdf, cpdf):
+            prune_zip_importers()
             if not len(qpdf) or not len(cpdf):
                 return pd.DataFrame({
                     query_id: qpdf[query_id].iloc[:0],
@@ -1428,6 +1435,7 @@ def _ivfpq_encode(
     b_model = safe_broadcast(spark, (cents, books))
 
     def _encode(batches):
+        prune_zip_importers()
         C, B = b_model.value
         for pdf in batches:
             M = np.array(list(pdf[cand_vec]), dtype=np.float64)
@@ -1567,6 +1575,7 @@ def _probed_cells_frame(
     b = safe_broadcast(queries.sparkSession, cents)
 
     def _cells(batches):
+        prune_zip_importers()
         C = b.value
         for pdf in batches:
             if not len(pdf):
@@ -1771,6 +1780,7 @@ def semantic_dedup(
     out_schema = f"{id_col} {id_ddl}, cell int, centroid_sim double, kept boolean"
 
     def _greedy(key, pdf):
+        prune_zip_importers()
         C = b_cents.value
         M = np.array(list(pdf[vec_col]), dtype=np.float64)
         # Non-finite guard (r9 ADVICE): a corrupt (NaN/Inf) embedding's

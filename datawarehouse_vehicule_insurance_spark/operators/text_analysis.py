@@ -10,6 +10,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..compat import safe_broadcast
+from ..worker import prune_zip_importers
 
 #: marker stopwords per language — tiny n-gram-free heuristic; the point
 #: is the distributed shape (one projection, no UDF), not NLP accuracy.
@@ -1010,6 +1011,7 @@ def _bpe_apply(
     # nested and pickled BY VALUE: a module-level function would pickle
     # by name and need this package importable on the worker
     def bpe_apply(batches):
+        prune_zip_importers()
         R, id_map = b_model.value
         if b2u_items is None:
             def symbols(w):
@@ -1505,6 +1507,7 @@ def _gopher_rep_counts_udf(top_ns: tuple, dup_ns: tuple):
         return tuple(out)
 
     def rep_counts(toks, lines):
+        prune_zip_importers()
         return pd.DataFrame(
             [one(t, ln) for t, ln in zip(toks, lines)], columns=names
         )

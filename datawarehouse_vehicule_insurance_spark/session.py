@@ -47,6 +47,12 @@ def get_spark(
         # the loops' persisted artifacts (indexes, model tables, batches)
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
+        # PySpark 4.1 wraps every Column/function call in _with_origin:
+        # getActiveSession, a conf read and a JVM origin set + clear per
+        # call, only to name the Python call site in error contexts.
+        # PySpark reads this key once per process, at the first wrapped
+        # call with an active session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master is not None:
         builder = builder.master(master)

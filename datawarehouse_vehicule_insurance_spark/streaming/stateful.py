@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..worker import prune_zip_importers
+
 OUTPUT_SCHEMA = (
     "user_id long, n_events long, total_value double, last_seen timestamp"
 )
@@ -31,6 +33,7 @@ def _update_user_profile(
 ) -> Iterator[pd.DataFrame]:
     """State update function: fold each micro-batch's events for one user
     into (n_events, total_value, last_seen); emit the refreshed row."""
+    prune_zip_importers()
     (user_id,) = key
     if state.hasTimedOut:
         state.remove()

@@ -591,3 +591,26 @@ def test_cli_curate_dsir(spark, tmp_path, capsys):
     assert stats["kept"] == 1
     kept = spark.read.parquet(out_path).collect()
     assert len(kept) == 1 and kept[0]["doc_id"] in (1, 2)
+
+
+@pytest.mark.parametrize("path,pinned", [
+    ("q_lm_perplexity", 2),
+    ("q_lm_perplexity_pruned", 2),
+    ("q_dsir_log_weights_pruned", 4),
+])
+def test_registry_lm_training_frees_its_pair_count_cut(
+    spark, sf_dir, path, pinned
+):
+    """The LM/DSIR registry paths train inside a cut scope: after
+    building and sinking, only the eagerly pinned model tables stay
+    held, not the training's internal pair-count cut."""
+    from datawarehouse_vehicule_insurance_spark import compat
+    from datawarehouse_vehicule_insurance_spark import queries as Q
+
+    before = compat.persistent_rdd_ids(spark)
+    out = getattr(Q, path)(spark, sf_dir)
+    out.write.format("noop").mode("overwrite").save()
+    assert len(compat.persistent_rdd_ids(spark) - before) == pinned
+    if path == "q_lm_perplexity":
+        bigrams, unigrams = Q._AUDIT_LM_MODELS[(sf_dir, 1)]
+        assert bigrams.count() > 0 and unigrams.count() > 0
